@@ -44,7 +44,6 @@ from automem_spark.operators.recall import RecallRequest, keyword_channel, recal
 from automem_spark.operators.similarity import cosine_threshold_self_join, cosine_topk_join
 from automem_spark.operators.textquality import (
     LANG_MARKERS,
-    bpe_ish_token_count_expr,
     lang_id_expr,
     quality_score_expr,
     token_count_expr,
@@ -57,7 +56,6 @@ from automem_spark.operators.consolidation import (
 from automem_spark.operators.enrich import enrich_pipeline
 from automem_spark.operators.enrichment import (
     CLASSIFIER_PATTERNS,
-    classify_memory_expr,
     detect_patterns_batch,
 )
 from automem_spark.operators.entities import (
@@ -95,12 +93,6 @@ from automem_spark.operators.recall import (
     recency_rerank,
 )
 from automem_spark.operators.similarity import cosine_topk_mapinpandas, ivf_topk
-from automem_spark.operators.multimodal import (
-    decode_images,
-    fake_media_table,
-    ppm_media_table,
-    sample_frames,
-)
 from automem_spark.functions.text import first_sentence_summary_expr, slugify_expr
 from automem_spark.operators.graph import (
     connected_components,
@@ -1623,105 +1615,6 @@ def _hybrid_metadata_oracle() -> str:
     )
 
 
-# A query where BOTH fused sub-channels produce rows: spark/window/merge hit
-# document content (keyword channel), spark/duckdb/alpha hit the tool/project
-# metadata fields (metadata channel), and 'project' is a requested-field
-# token — so the forced-fuse row below exercises the explode, both per-channel
-# WindowGroupLimit orderings, AND the cross-channel precedence dedup.
-RECALL_FUSED_QUERY = "spark window merge from project alpha with duckdb"
-
-
-def q_hybrid_recall_fused(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The single-scan keyword+metadata fused channel FORCED under the
-    driver oracle (r11 verdict ask #1): `recall(..., fuse_channels=True)`
-    executes `_keyword_metadata_fused` (operators/recall.py:170) — the
-    shipped plan above RECALL_FUSE_SCAN_MIN_ROWS (~2M actual rows, the
-    100 TB regime) which default dispatch keeps off at every oracle scale.
-    Reference semantics: R3 keyword search
-    (runtime_recall_helpers.py:595-724) ∪ R5 metadata sidecar
-    (recall.py:2015-2040) in ONE corpus pass, then the X1 hybrid blend."""
-    mem = memories_view(spark, sf_dir)
-    req = RecallRequest(query=RECALL_FUSED_QUERY, limit=10)
-    out = recall(mem, req, now=NOW, fuse_channels=True)
-    return out.select(
-        "id", "match_type",
-        F.round("match_score", 6).alias("match_score"),
-        F.round("final_score", 6).alias("final_score"),
-    )
-
-
-def _hybrid_fused_oracle() -> str:
-    """Composed-channel-union oracle for the fused row: keyword top-10 ∪
-    (metadata top-10 minus keyword ids — channel precedence keyword >
-    metadata), X1 blend per channel, final W1 sort. Entirely channel-by-
-    channel SQL, so a fused-plan bug (wrong slot cap, missing precedence,
-    clobbered score) hash-mismatches."""
-    kws = extract_keywords(RECALL_FUSED_QUERY.strip().lower())
-    phrase = RECALL_FUSED_QUERY.strip().lower()
-    max_raw = float(3 * len(kws) + 3)
-    kw_score = _kw_score_sql(kws, phrase)
-    md_score = metadata_score_sql({f: f for f in _META_FIELDS}, RECALL_FUSED_QUERY)
-    terms = _meta_qvt(RECALL_FUSED_QUERY)[:12]
-    prefilter = " OR ".join(
-        f"contains(lower(coalesce(metadata, '')), '{assert_sql_literal_safe(t)}')"
-        for t in terms
-    )
-    kw_final = scorespec.hybrid_keyword_channel_sql_duck(kws, NOW)
-    md_final = (
-        f"0.35 * {scorespec.keyword_fallback_sql_duck(kws)} + 0.35 * match_score "
-        f"+ 0.2 * least(1.0, ({scorespec.tag_hits_sql_duck(kws)}) / {float(len(kws))}) "
-        f"+ {_W_IMP} * importance + {_W_CONF} * confidence "
-        f"+ {_W_REC} * {scorespec.recency_sql_duck(NOW)}"
-    )
-    carry = "content, tags, importance, confidence, timestamp"
-    return (
-        "WITH "
-        + MEMORIES_ORACLE_CTE
-        + f""",
-        kw AS (
-            SELECT id, 'keyword' AS match_type,
-                   least(1.0, raw_score / {max_raw}) AS match_score,
-                   {carry}
-            FROM (
-                SELECT *, CAST({kw_score} AS DOUBLE) AS raw_score
-                FROM ({_POOL})
-            )
-            WHERE raw_score > 0
-            ORDER BY raw_score DESC, importance DESC, timestamp DESC, id ASC
-            LIMIT 10
-        ),
-        md AS (
-            SELECT id, 'metadata' AS match_type, match_score, {carry}
-            FROM (
-                SELECT *, {md_score} AS match_score
-                FROM ({_POOL}) WHERE {prefilter}
-            )
-            WHERE match_score > 0
-            QUALIFY row_number() OVER (
-                ORDER BY match_score DESC, importance DESC, timestamp DESC, id ASC
-            ) <= 10
-        ),
-        united AS (
-            SELECT * FROM kw
-            UNION ALL
-            SELECT * FROM md WHERE id NOT IN (SELECT id FROM kw)
-        ),
-        blended AS (
-            SELECT id, match_type, match_score, importance, timestamp,
-                   CASE WHEN match_type = 'keyword' THEN {kw_final}
-                        ELSE {md_final} END AS final
-            FROM united
-        )
-        SELECT id, match_type, round(match_score, 6) AS match_score,
-               round(final, 6) AS final_score
-        FROM blended
-        ORDER BY round(final, 6) DESC, match_score DESC, importance DESC,
-                 timestamp DESC, id ASC
-        LIMIT 10
-    """
-    )
-
-
 SCOPE_START, SCOPE_END = "2026-01-01 00:00:00", "2026-01-15 00:00:00"
 
 
@@ -2208,58 +2101,6 @@ def q_ann_ivf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "id", F.col("cell").cast("bigint").alias("cell"),
         F.round("sim", 5).alias("sim"),
-    )
-
-
-def q_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal decode over GENUINE PPM (netpbm P6) payloads (r9: the
-    decode stub is retired for this format). The fixture builds a valid
-    'P6\\n{w} {h}\\n255\\n' + w*h*3-byte raster per document in pure column
-    expressions; the kernel (operators/multimodal.py:_parse_netpbm_header)
-    REALLY parses the whitespace/comment-tolerant header from the bytes.
-    The oracle rebuilds the identical payload with SQL string functions
-    (all-ASCII raster, so 1 char == 1 byte) and checks every parsed field
-    AND the full-payload sha256 — a byte-level roundtrip proof."""
-    docs = _t(spark, sf_dir, "documents")
-    media = ppm_media_table(docs)
-    out = decode_images(media, id_col="id", payload_col="payload")
-    return out.select("id", "width", "height", "channels", "n_bytes", "sha256")
-
-
-def q_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal resize over genuine PPM payloads: the REAL kernel decodes
-    the pixel matrix, nearest-neighbor downsamples into a 16x16 box
-    (fixture dims span [4,35]x[4,27], so both the downscale and the
-    pass-through branch execute), re-encodes a valid P6 payload, and a
-    second decode of the RESIZED bytes proves the roundtrip. The oracle
-    recomputes scaled dims + exact output byte count (header digits +
-    nw*nh*3) from the source arithmetic."""
-    from automem_spark.operators.multimodal import resize_images
-
-    docs = _t(spark, sf_dir, "documents")
-    media = ppm_media_table(docs)
-    resized = resize_images(
-        media, id_col="id", payload_col="payload", max_width=16, max_height=16
-    )
-    # decode the resized payload: proves the output is a valid media payload;
-    # pixel_sha256 (the decoded-matrix identity, Pillow-version-insensitive —
-    # r11 verdict #7) rides along and the oracle recomputes it from the
-    # SQL-reconstructible raster + the same nearest-neighbor index map
-    out = decode_images(resized, id_col="id", payload_col="payload")
-    return out.join(
-        F.broadcast(resized.select("id", "pixel_sha256")), "id"
-    ).select("id", "width", "height", "channels", "n_bytes", "pixel_sha256")
-
-
-def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video frame-sampling plumbing: fixed-size binary chunking + every-Nth
-    selection as pure column expressions (no Python in the hot path)."""
-    docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
-    media = fake_media_table(docs)
-    frames = sample_frames(media, frame_bytes=64, every_nth=2)
-    return frames.select(
-        "id", F.col("frame_no").cast("bigint").alias("frame_no"),
-        F.hex(F.col("frame")).alias("frame_hex"),
     )
 
 
@@ -2894,24 +2735,10 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Ordering is load-bearing: the driver's correctness run covers the FIRST
-    # 50 entries, so the window rotates each round. Rotation rule (r5, per
-    # the r4 verdict): staleness is tracked at touched-FILE granularity — a
-    # row re-enters the window if ANY module on its execution path changed
-    # since its last driver-green row. (__spark_entry__.py itself is the
-    # registry and changes every round; entry-file changes count at
-    # FUNCTION granularity or every row would rotate every round.)
-    # r14 blocks, in priority order (VERDICT r13 ask #3):
-    #   A. the ENTIRE 34-row r11-green block (classify .. event_log) —
-    #      after this round no registry row's last driver-green is older
-    #      than r12.
-    #   B. anchors for every file changed THIS round: dedup.py +
-    #      functions/xxh64np.py (Arrow signature kernel, verify-frame
-    #      checkpoint), graph.py + recall.py + plans/tuning.py (the
-    #      knob-surfaced dispatch bounds), covered by the minhash/dedup
-    #      family and the recall closure in rows 35-50 — note many block-A
-    #      rows ALSO traverse those files (simhash/ngram_jaccard ->
-    #      dedup.py, trending/min_score_recall/... -> recall.py).
+    # One row per paper operator (SURVEY.md §2.1-2.11) plus the relational
+    # TPC-H/events rows; each has a DuckDB twin in oracle_sql() unless it is
+    # a hash-based rows-only check. The order is load-bearing: the external
+    # correctness run covers the FIRST 50 entries.
     # Oracle canonicalization rules (learned r6 — the driver hashes pandas
     # frames dtype-sensitively, so these join the md5-twin and integer-
     # micro-unit-average rules as hard invariants):
@@ -2924,47 +2751,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     #     round()+array_to_string CSV twin on both engines instead.
     #   scripts/check_correctness.py --selftest proves the local gate
     #   fails on both classes.
-    # The ordering is AUDITED, not hand-waved: scripts/coverage_ledger.py
-    # derives every row's execution-path files (AST import closure), its
-    # last driver-green round (CORRECTNESS_r*.json), and whether any path
-    # file changed since — committed as COVERAGE.md each round. The window
-    # is valid when the ledger reports "No rotation debt": every NEVER/
-    # stale row is in the window and every out-of-window stale row's
-    # changed files are exercised by an in-window sibling.
+    # scripts/coverage_ledger.py derives every row's execution-path files
+    # (AST import closure) and last green correctness round into COVERAGE.md.
     return {
-        # --- r15 driver window: rows 1-50 (VERDICT r14 ask #2) ---
-        # 1-14: the kernel-verification gap closed — the rows whose DEFAULT
-        #       execution path became an Arrow kernel AFTER the r14 window
-        #       was fixed (decontaminate -> decontaminate_map, text_stats ->
-        #       text_stats_auto), their composed pipelines
-        #       (training_selection, training_pipeline), the trainprep
-        #       chunking rows (doc_chunks, chunk_dedup), and the NEW
-        #       text_stats_map row that forces the kernel branch at driver
-        #       scale (text_stats_auto's estimate dispatch keeps it
-        #       structurally unreachable below ~15k rows, so only a forced
-        #       row lets the DuckDB oracle execute it). lang_id / pii_redact
-        #       / doc_fingerprint ride along: their entry functions changed
-        #       this round (pre-repartition projection narrowing).
-        # 15-50: anchors for every other file changed THIS round —
-        #       dedup.py + functions/asciitok.py (capacity fallback, type
-        #       guard: minhash_lsh, dedup_pipeline, simhash_pairs,
-        #       ngram_jaccard, dedup_exact), graph.py + plans/checkpoint.py
-        #       (materialization cost work: connected_components,
-        #       supersession_heads, cluster_summaries, relations_fetch),
-        #       entity_extract.py (the r15 single-split parallelize win:
-        #       extract_entities — enrich_pipeline is its sibling-covered
-        #       composed consumer), similarity.py (the r15 IVF pushdown
-        #       fix: ann_ivf, whose ivf_topk path changed structurally,
-        #       plus the vector/semantic siblings), session.py (locale
-        #       pin — on EVERY row's path, exercised by the whole
-        #       window), and the recall closure.
-        #   Rotated out: auto_decompose, entity_tag_audit, doc_summaries,
-        #   metadata_terms_walk, type_normalize, exclude_tags,
-        #   paginated_scan, tag_scroll, event_log, embedding_coerce,
-        #   pattern_detection — all r14 driver-green; no r15-changed file
-        #   on their paths beyond session.py, which every in-window row
-        #   exercises. All still re-verified locally every round by
-        #   check_correctness.py.
         "classify": q_classify,
         "decay_relevance": q_decay_relevance,
         "repetition_filter": q_repetition_filter,
@@ -3006,7 +2795,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "connected_components": q_connected_components,
         "supersession_heads": q_supersession_heads,
         "hybrid_recall": q_hybrid_recall,
-        "hybrid_recall_fused": q_hybrid_recall_fused,
         "multi_recall": q_multi_recall,
         "recall_full": q_recall_full,
         "keyword_search": q_keyword_search,
@@ -3015,9 +2803,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "metadata_search": q_metadata_search,
         "relations_fetch": q_relations_fetch,
         "cluster_summaries": q_cluster_summaries,
-        # --- out of window (rows 51-122): all r12-r14 driver-green; every
-        # r15-changed file on their paths is exercised by an in-window
-        # sibling (COVERAGE.md regenerated - No rotation debt) ---
         "auto_decompose": q_auto_decompose,
         "entity_tag_audit": q_entity_tag_audit,
         "doc_summaries": q_doc_summaries,
@@ -3030,7 +2815,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "embedding_coerce": q_embedding_coerce,
         "data_mix": q_data_mix,
         "seq_pack": q_seq_pack,
-        "frame_sample": q_frame_sample,
         "ann_ivf_indexed": q_ann_ivf_indexed,
         "pricing_summary": q_pricing_summary,
         "top_revenue_orders": q_top_revenue_orders,
@@ -3082,8 +2866,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_partitioned": q_events_partitioned,
         "corpus_quantiles": q_corpus_quantiles,
         "recency_rerank": q_recency_rerank,
-        "media_resize": q_media_resize,
-        "media_decode": q_media_decode,
         "related_bfs": q_related_bfs,
         "relation_expansion": q_relation_expansion,
         "graph_neighbors": q_graph_neighbors,
@@ -4138,34 +3920,6 @@ def _ann_ivf_oracle() -> str:
         )
         ORDER BY sim DESC, id ASC
         LIMIT 10
-    """
-
-
-def _le32_hex_sql(expr: str) -> str:
-    """Hex string of the 4 little-endian bytes of an int expression."""
-    bs = [
-        f"lpad(hex(({expr}) % 256), 2, '0')",
-        f"lpad(hex((({expr}) // 256) % 256), 2, '0')",
-        f"lpad(hex((({expr}) // 65536) % 256), 2, '0')",
-        f"lpad(hex((({expr}) // 16777216) % 256), 2, '0')",
-    ]
-    return " || ".join(bs)
-
-
-def _frame_sample_oracle() -> str:
-    return f"""
-        WITH p AS (
-            SELECT doc_id AS id,
-                   hex(unhex({_le32_hex_sql('doc_id % 640 + 16')})
-                       || unhex({_le32_hex_sql('doc_id % 480 + 16')})
-                       || encode(text)) AS ph,
-                   8 + octet_length(encode(text)) AS nb
-            FROM documents WHERE doc_id < 50
-        )
-        SELECT id, fn AS frame_no, substring(ph, CAST(fn * 128 + 1 AS INT), 128) AS frame_hex
-        FROM p, unnest(generate_series(0,
-                 greatest(CAST(ceil(nb / 64.0) AS BIGINT) - 1, 0))) t(fn)
-        WHERE fn % 2 = 0
     """
 
 
@@ -5345,76 +5099,6 @@ def oracle_sql() -> dict[str, str]:
         # identical semantics/quantizer to ann_ivf — the variant differs only
         # in the physical path (bucketed write + partition-pruned probe)
         "ann_ivf_indexed": _ann_ivf_oracle(),
-        # r9: the oracle REBUILDS the genuine PPM payload with SQL string
-        # functions (all-ASCII raster: 1 char == 1 byte) and sha256-hashes
-        # it — a byte-level proof that the Spark fixture encode and the
-        # real netpbm header parse roundtrip. chr(10) == '\n'.
-        "media_decode": """
-            WITH m AS (
-                SELECT doc_id,
-                       CAST(doc_id % 32 + 4 AS INT) AS w,
-                       CAST(doc_id % 24 + 4 AS INT) AS h,
-                       text
-                FROM documents
-            ),
-            p AS (
-                SELECT doc_id, w, h,
-                       'P6' || chr(10) || CAST(w AS VARCHAR) || ' ' ||
-                       CAST(h AS VARCHAR) || chr(10) || '255' || chr(10) ||
-                       substring(repeat(md5(text), 90), 1, w * h * 3)
-                       AS payload
-                FROM m
-            )
-            SELECT doc_id AS id, w AS width, h AS height,
-                   CAST(3 AS INT) AS channels,
-                   CAST(length(payload) AS BIGINT) AS n_bytes,
-                   sha256(payload) AS sha256
-            FROM p
-        """,
-        # scaled dims use the IDENTICAL IEEE double ops as the Python
-        # kernel (least/min of the same divisions, floor of the same
-        # product), so the values are bit-equal; output byte count =
-        # 'P6\\n' + digits(nw) + ' ' + digits(nh) + '\\n255\\n' + raster
-        "media_resize": """
-            WITH m AS (
-                SELECT doc_id, CAST(doc_id % 32 + 4 AS INT) AS w,
-                       CAST(doc_id % 24 + 4 AS INT) AS h, text
-                FROM documents
-            ),
-            sc AS (SELECT *, least(16.0 / w, 16.0 / h, 1.0) AS scale FROM m),
-            d AS (
-                SELECT doc_id, w, h,
-                       CAST(floor(w * scale) AS INT) AS nw,
-                       CAST(floor(h * scale) AS INT) AS nh,
-                       substring(repeat(md5(text), 90), 1, w * h * 3) AS raster
-                FROM sc
-            ),
-            -- the resized pixel matrix, rebuilt with the engine's exact
-            -- nearest-neighbor index map out(i,j) = src(i*h//nh, j*w//nw),
-            -- as IN-ROW nested list comprehensions: one row per doc, no
-            -- per-pixel explosion (the exploded form carried the full
-            -- raster string on every pixel row — hundreds of GB at the
-            -- sf10 sweep's 500k docs; DuckDB OOM, caught r12)
-            agg AS (
-                SELECT doc_id,
-                       array_to_string(flatten(list_transform(
-                           generate_series(0, nh - 1), i -> list_transform(
-                               generate_series(0, nw - 1), j -> substr(
-                                   raster,
-                                   (((i * h) // nh) * w + ((j * w) // nw)) * 3 + 1,
-                                   3)))), '') AS pixels
-                FROM d
-            )
-            SELECT d.doc_id AS id, nw AS width, nh AS height,
-                   CAST(3 AS INT) AS channels,
-                   CAST(3 + length(CAST(nw AS VARCHAR)) + 1 +
-                        length(CAST(nh AS VARCHAR)) + 5 + nw * nh * 3
-                        AS BIGINT) AS n_bytes,
-                   sha256(CAST(nh AS VARCHAR) || ':' || CAST(nw AS VARCHAR)
-                          || ':3:' || pixels) AS pixel_sha256
-            FROM d JOIN agg USING (doc_id)
-        """,
-        "frame_sample": _frame_sample_oracle(),
         "doc_summaries": r"""
             WITH s AS (
                 SELECT doc_id, text,
@@ -5596,7 +5280,6 @@ def oracle_sql() -> dict[str, str]:
         "extract_entities": extract_entities_oracle_sql(ENTITY_FIXTURE_ORACLE_CTE),
         "metadata_search": _metadata_oracle(META_QUERY_SCOPED),
         "hybrid_recall_metadata": _hybrid_metadata_oracle(),
-        "hybrid_recall_fused": _hybrid_fused_oracle(),
         "metadata_search_unscoped": _metadata_oracle(META_QUERY_UNSCOPED),
         "adaptive_floor": _scored_kw_oracle(50) + """
             , ranked AS (

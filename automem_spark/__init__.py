@@ -7,7 +7,7 @@ hybrid recall, graph expansion, enrichment, consolidation — as idiomatic
 Spark DataFrame programs designed for 100 TB batch scale:
 
 - columnar Parquet/Delta storage instead of row-oriented dual stores
-- Catalyst predicate pushdown instead of hand-compiled store filters
+- filters pushed into the Parquet scan instead of hand-compiled store filters
 - similarity joins instead of per-row ANN calls
 - window top-k instead of per-request LIMIT loops
 

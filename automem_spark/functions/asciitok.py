@@ -39,13 +39,15 @@ def ascii_token_spans(sub):
     """
     import pyarrow as pa
 
-    # Offsets are parsed as int32 below, which is only valid for pa.string
-    # (large_string / string_view carry 64-bit or view offsets — silently
-    # misparsing them would corrupt token spans, i.e. wrong MinHash
-    # signatures). Fail loudly instead (r15, ADVICE r14).
-    if sub.type != pa.string():
+    # Offsets are parsed as int32 from ONE buffer set below, which is only
+    # valid for a contiguous pa.string array (large_string / string_view
+    # carry 64-bit or view offsets, and a ChunkedArray has no single buffer
+    # set — misparsing either would corrupt token spans, i.e. wrong MinHash
+    # signatures). Fail loudly instead.
+    if not isinstance(sub, pa.Array) or sub.type != pa.string():
         raise TypeError(
-            f"ascii_token_spans requires a pa.string() array, got {sub.type}"
+            "ascii_token_spans requires a pa.string() Array, got "
+            f"{type(sub).__name__} of {sub.type}"
         )
     m = len(sub)
     if m == 0:

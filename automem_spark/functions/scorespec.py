@@ -31,13 +31,6 @@ from automem_spark.functions.text import assert_sql_literal_safe
 
 KEYWORD_CONTENT_BONUS = 2  # content CONTAINS keyword
 KEYWORD_TAG_BONUS = 1      # any tag CONTAINS keyword
-# raw-score normalizer: least(1, raw / (NORM_SCALE * |keywords| + NORM_BASE))
-KEYWORD_NORM_SCALE = 3
-KEYWORD_NORM_BASE = 3
-
-
-def keyword_norm_denominator(n_keywords: int) -> int:
-    return KEYWORD_NORM_SCALE * n_keywords + KEYWORD_NORM_BASE
 
 
 def _keyword_terms(keywords: list[str], phrase: str) -> list[str]:

@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from automem_spark.functions.detmath import us_mean
 from automem_spark.functions.scoring import decay_relevance_expr, protection_expr
-from automem_spark.functions.vector import cosine_expr, dot_expr, norm_expr
+from automem_spark.functions.vector import dot_expr, norm_expr
 from automem_spark.operators.graph import connected_components
 from automem_spark.operators.topk import top_k_per_group
 

@@ -136,20 +136,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_signature_expr(shingles: Column, num_hashes: int = 64) -> Column:
-    """MinHash signature: per seed i, min(xxhash64(shingle, seed=i)).
-    All JVM expressions — no UDF, no shuffle."""
-    def hash_with_seed(i: int):
-        return lambda s: F.xxhash64(s, F.lit(i))
-
-    return F.array(
-        *[
-            F.array_min(F.transform(shingles, hash_with_seed(i)))
-            for i in range(num_hashes)
-        ]
-    )
-
-
 def minhash_banded_sql(num_hashes: int, bands: int) -> str:
     """SQL text producing (id, band, bucket) from an exploded (id, shingle)
     frame bound as ``{exploded}`` — the signature-min and band-bucket
@@ -232,8 +218,7 @@ def minhash_banded_map(
     (pinned by tests/test_operators.py::test_minhash_banded_map_matches_sql
     and the pairs-level property test).
 
-    Why this beats the expression path (the repetition_filter playbook,
-    textquality.py:207 vs :290): the SQL path explodes to one row PER
+    Why this beats the expression path: the SQL path explodes to one row PER
     SHINGLE, re-hashes the shingle string ``num_hashes`` times (64 full
     xxhash64 passes over the bytes — Catalyst has no common-subexpression
     elimination across the seed children), and shuffles (docs × 64) longs
@@ -258,8 +243,19 @@ def minhash_banded_map(
     100 TB posture: per-task work is linear in that task's bytes, output is
     exactly (docs × bands) rows, and the Python crossing is Arrow-batched
     (10k docs/batch) with vectorized numpy inside — the same scan-speed
-    shape as the multimodal and repetition kernels.
+    shape as the similarity kernels.
     """
+    id_type = df.schema[id_col].dataType.simpleString()
+    out_schema = f"id {id_type}, band int, bucket bigint"
+    kernel = _minhash_band_kernel(text_col, id_col, n, num_hashes, bands)
+    return df.select(id_col, text_col).mapInPandas(kernel, schema=out_schema)
+
+
+def _minhash_band_kernel(
+    text_col: str, id_col: str, n: int, num_hashes: int, bands: int
+):
+    """The ``mapInPandas`` function of :func:`minhash_banded_map`: an
+    iterator of pandas batches in, (id, band, bucket) batches out."""
     import re as _re
     from typing import Iterator
 
@@ -274,8 +270,6 @@ def minhash_banded_map(
     )
 
     rows_per_band = num_hashes // bands
-    id_type = df.schema[id_col].dataType.simpleString()
-    out_schema = f"id {id_type}, band int, bucket bigint"
     punct = _re.compile(r"[^\w\s]", _re.ASCII)
     ws = _re.compile(r"\s+", _re.ASCII)
 
@@ -288,7 +282,7 @@ def minhash_banded_map(
         blobs: list[bytes] = []
         counts = np.empty(len(texts), dtype=np.int64)
         for k, text in enumerate(texts):
-            if text is None or (isinstance(text, float) and pd.isna(text)):
+            if text is None or (not isinstance(text, str) and pd.isna(text)):
                 norm = ""
             else:
                 norm = ws.sub(" ", punct.sub(" ", str(text).lower())).strip()
@@ -394,10 +388,13 @@ def minhash_banded_map(
             try:
                 arr = pa.array(pdf[text_col], type=pa.string(), from_pandas=True)
             except pa.lib.ArrowCapacityError:
-                # a single batch whose text exceeds the 2 GiB pa.string()
-                # payload cap (possible at maxRecordsPerBatch docs of huge
-                # text): fall back to the per-row Python path for the whole
-                # batch instead of failing the task (r15, ADVICE r14)
+                arr = None
+            if not isinstance(arr, pa.Array):
+                # a batch whose text exceeds the 2 GiB pa.string() payload
+                # cap (possible at maxRecordsPerBatch docs of huge text)
+                # comes back as a ChunkedArray, or raises: fall back to the
+                # per-row Python path for the whole batch instead of
+                # failing the task in take() below
                 ids_r, band_r, bucket_r = _sig_rows(
                     ids_np, *_py_shingle_matrix(list(pdf[text_col]))
                 )
@@ -436,7 +433,7 @@ def minhash_banded_map(
                     {"id": ids_r, "band": band_r, "bucket": bucket_r}
                 )
 
-    return df.select(id_col, text_col).mapInPandas(kernel, schema=out_schema)
+    return kernel
 
 
 def bucketed_candidate_pairs(

@@ -464,16 +464,6 @@ def extract_entities(mem: DataFrame) -> DataFrame:
     )
 
 
-def entity_tags_expr_df(mem: DataFrame) -> DataFrame:
-    """(id, entity_tags array) for the enrichment pipeline: the canonical
-    tags of every accepted entity, sorted."""
-    return (
-        extract_entities(mem)
-        .groupBy("id")
-        .agg(F.array_sort(F.collect_set("canonical_tag")).alias("entity_tags"))
-    )
-
-
 # ---------------------------------------------------------------------------
 # DuckDB oracle mirror, generated from the same constants.
 # ---------------------------------------------------------------------------

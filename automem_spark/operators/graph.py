@@ -24,7 +24,6 @@ from pyspark.sql import functions as F
 
 from automem_spark.functions.detmath import us_mean
 from automem_spark.operators.topk import top_k_per_group
-from automem_spark.plans.tuning import tuning_int
 from automem_spark.plans.checkpoint import (
     CheckpointRotation,
     checkpointing_enabled,
@@ -319,10 +318,7 @@ def resolve_supersession(
     # (an Observation on a plan the checkpoint skips blocks obs.get forever)
     fused_probe = checkpointing_enabled()
     if local_max_walks is None:
-        # cluster-sizing knob (plans/tuning.py), same surface as the CC bound
-        local_max_walks = tuning_int(
-            "supersession_local_max_walks", SUPERSESSION_LOCAL_MAX_WALKS
-        )
+        local_max_walks = SUPERSESSION_LOCAL_MAX_WALKS
     if fused_probe:
         nxt_obs = Observation("sup_walks")
         nxt = nxt.observe(nxt_obs, F.count(F.lit(1)).alias("n"))
@@ -557,9 +553,7 @@ def connected_components(
     source is untrusted.
     """
     if local_max_edges is None:
-        # cluster-sizing knob (plans/tuning.py): spark.automem.cc_local_max_
-        # edges / AUTOMEM_CC_LOCAL_MAX_EDGES, default = the measured bound
-        local_max_edges = tuning_int("cc_local_max_edges", CC_LOCAL_MAX_EDGES)
+        local_max_edges = CC_LOCAL_MAX_EDGES
     und = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     und = und.unionByName(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
     und = und.distinct()

@@ -55,10 +55,6 @@ def ascii_search_text(value: str) -> str:
     return re.sub(r"\s+", " ", text).strip().lower()
 
 
-def search_tokens(value: str) -> set[str]:
-    return {t for t in re.findall(r"[a-z0-9]+", ascii_search_text(value)) if len(t) >= 2}
-
-
 def requested_metadata_fields(query_text: str) -> set[str]:
     normalized = ascii_search_text(query_text)
     if not normalized:

@@ -27,9 +27,7 @@ from pyspark.sql import functions as F
 from automem_spark.functions.scoring import DEFAULT_WEIGHTS, Weights, hybrid_score_expr
 from automem_spark.functions.tags import exclude_tags_expr, tag_filter_expr
 from automem_spark.functions.text import extract_keywords, fingerprint_fold_sql_spark
-from automem_spark.functions.vector import cosine_expr
 from automem_spark.plans.checkpoint import maybe_checkpoint
-from automem_spark.plans.tuning import tuning_int
 
 # Channel precedence for cross-channel dedup (vector beats keyword beats
 # metadata beats tag/trending — recall.py:1956-2062).
@@ -145,148 +143,6 @@ def keyword_channel(pool: DataFrame, query: str, limit: int) -> DataFrame:
         .drop("raw_score")
     )
     return out
-
-
-#: Crossover for the single-scan keyword+metadata channel (r11). Below it
-#: the composed two-scan shape wins locally: the fused path's extra 2-key
-#: exchange stage (~0.15-0.3s fixed) costs more than re-scanning a corpus
-#: the page cache already holds (measured: fused +8-10% at sf0.1/sf1, a
-#: wash at sf10/500k rows). Above it the saved corpus scan is structural —
-#: cluster executors reading object storage pay full price for the second
-#: scan, while the fused shuffle stays bounded at ≤(limit+10) rows per
-#: partition per channel. Compared against estimate_rows (plan stats, ~2x
-#: high on parquet pools), so ~2M actual rows. Results are bit-identical
-#: on both sides (tests/test_recall_fused.py) — a stats-error flip changes
-#: the plan, never the output.
-#:
-#: Cold-cache evidence — the full bisected curve (r13, verdict ask #1;
-#: scripts/fused_crossover.py, page caches dropped before every run,
-#: min-of-3 per shape per pool, one JVM per shape, all runs idle-host):
-#:
-#:   50k rows   composed wins  (fused +14..24%)
-#:   250k rows  composed wins  (fused +2.4%)
-#:   500k rows  composed wins  (fused +21.4%)
-#:   1M rows    FUSED wins     (composed +3.6%)
-#:   2M rows    FUSED wins     (composed +21%, r12 — and +19% warm)
-#:
-#: The crossover sits in (500k, 1M) actual rows. estimate_rows runs ~2x
-#: high on parquet pools, so the constant below (~750k actual) is
-#: bracketed by a measured composed-wins point 1.5x below it and a
-#: measured fused-wins point 1.3x above it. The r12 constant (4M ≈ 2M
-#: actual) knowingly ran the composed shape across the (750k, 2M) band
-#: where fused wins cold; the r12 doubt that warm+mid-size might prefer
-#: composed was measured away at 2M (fused −19% warm). The curve is
-#: non-monotonic in margin (250k is a near-tie) but single-crossing in
-#: sign — dispatch needs only the sign.
-RECALL_FUSE_SCAN_MIN_ROWS = 1_500_000
-
-
-def _keyword_metadata_fused(
-    pool: DataFrame,
-    query: str,
-    limit: int,
-    meta_fields: dict[str, "Column"],
-    *,
-    metadata_json_col: str = "metadata",
-) -> DataFrame | None:
-    """R3 + R5 in ONE corpus scan (r11): the keyword channel and the
-    metadata sidecar each scanned the full pool independently (two parquet
-    scans of the corpus per recall — the dominant read-path IO at 100 TB
-    and one whole extra scan job locally). Both scores are now computed in
-    a single pass; each row explodes into its per-channel (match_type,
-    sort_score, match_score) struct, and a per-channel window takes each
-    channel's top slots with the channel's own ordering.
-
-    Plan shape: one scan → explode (2 rows/row, match-filtered) →
-    WindowGroupLimit partial (≤ limit+10 rows per partition per channel
-    BEFORE the exchange — the rank filter below keeps a literal bound so
-    InferWindowGroupLimit fires) → 2-key exchange of the bounded survivors
-    → exact per-channel slot filter. Semantics are pinned bit-identical to
-    keyword_channel ∪ metadata_channel by tests/test_recall_fused.py.
-
-    Returns None when either channel is degenerate (no keywords AND no
-    phrase, or no metadata value terms) — callers fall back to the
-    composed channels for those shapes.
-    """
-    from automem_spark.operators.metadata_search import (
-        METADATA_PREFILTER_MAX_TERMS,
-        metadata_score_expr_fast,
-        query_value_tokens,
-    )
-
-    normalized = query.strip().lower()
-    keywords = extract_keywords(normalized)
-    phrase = normalized if len(normalized) >= 3 else ""
-    terms = query_value_tokens(query)[:METADATA_PREFILTER_MAX_TERMS]
-    if (not keywords and not phrase) or not terms:
-        return None
-    cols = set(pool.columns)
-    if not all(f in cols and str(v) == str(F.col(f)) for f, v in meta_fields.items()):
-        return None  # arbitrary Column fields: keep the tree-builder path
-
-    max_raw = 3 * len(keywords) + (3 if phrase else 0)
-    meta_l = F.lower(F.coalesce(F.col(metadata_json_col), F.lit("")))
-    prefilter = meta_l.contains(terms[0])
-    for t in terms[1:]:
-        prefilter = prefilter | meta_l.contains(t)
-    meta_score = F.when(
-        prefilter, metadata_score_expr_fast(list(meta_fields), query)
-    ).otherwise(F.lit(0.0))
-    kw_raw = F.expr(_keyword_raw_score_sql(keywords, phrase)).cast("double")
-
-    # Stage both scores as columns in the Project UNDER the Generate: the
-    # struct fields below reference each score twice, and Catalyst does not
-    # collapse a Project into a generator expression — so each scorer runs
-    # exactly ONCE per row (inlining them into the structs doubled the
-    # per-row cost, measured 2x wall at sf1).
-    # Staging-column collision: a pool that already carries one of these
-    # names would be silently clobbered (the withColumn overwrites it and the
-    # final drop removes it). Fall back to the composed two-scan channels,
-    # which never stage columns — an advisor-demanded downgrade from an
-    # assert, which crashed such pools above the fuse threshold and was
-    # stripped entirely under `python -O` (r11 ADVICE).
-    if any(staging in pool.columns for staging in ("_kw_raw", "_meta_sc", "_ch")):
-        return None
-    staged = pool.withColumn("_kw_raw", kw_raw).withColumn("_meta_sc", meta_score)
-    ch = F.explode(
-        F.array(
-            F.struct(
-                F.lit("keyword").alias("match_type"),
-                F.col("_kw_raw").alias("sort_score"),
-                F.least(
-                    F.lit(1.0), F.col("_kw_raw") / F.lit(float(max_raw))
-                ).alias("match_score"),
-            ),
-            F.struct(
-                F.lit("metadata").alias("match_type"),
-                F.col("_meta_sc").alias("sort_score"),
-                F.col("_meta_sc").alias("match_score"),
-            ),
-        )
-    )
-    slots = min(limit, 10)
-    exploded = (
-        staged.select("*", ch.alias("_ch"))
-        .select("*", "_ch.match_type", "_ch.sort_score", "_ch.match_score")
-        .drop("_ch", "_kw_raw", "_meta_sc")
-        .filter(F.col("sort_score") > 0)
-    )
-    w_ch = Window.partitionBy("match_type").orderBy(
-        F.desc("sort_score"), F.desc("importance"), F.desc("timestamp"), F.asc("id")
-    )
-    return (
-        exploded.withColumn("_rk", F.row_number().over(w_ch))
-        # literal bound first so WindowGroupLimit prunes per-partition
-        # BEFORE the exchange; the CASE applies each channel's exact slots
-        .filter(F.col("_rk") <= max(limit, slots))
-        .filter(
-            F.col("_rk")
-            <= F.when(F.col("match_type") == "keyword", F.lit(limit)).otherwise(
-                F.lit(slots)
-            )
-        )
-        .drop("_rk", "sort_score")
-    )
 
 
 def trending_channel(pool: DataFrame, limit: int) -> DataFrame:
@@ -1108,13 +964,8 @@ def recall(
     *,
     query_vector: list[float] | None = None,
     now: str = "2026-06-01 00:00:00",
-    fuse_channels: bool | None = None,
 ) -> DataFrame:
     """End-to-end single-query recall (SURVEY.md §3.1 steps 3b-3g + 4).
-
-    fuse_channels: True forces the single-scan keyword+metadata channel,
-    False forces the composed two-scan shape, None (default) dispatches on
-    the pool's plan-stats row estimate vs RECALL_FUSE_SCAN_MIN_ROWS.
 
     Returns (id, match_type, match_score, final_score, <memory cols>) sorted
     by the deterministic tiebreak W1: final_score DESC, match_score DESC,
@@ -1135,27 +986,7 @@ def recall(
             f for f in ("source", "repo", "project", "tool", "provider", "model")
             if f in pool.columns
         ]
-        fused = None
-        if vec is None and meta_field_names and "metadata" in pool.columns:
-            if fuse_channels is None:
-                from automem_spark.operators.trainprep import estimate_rows
-
-                est = estimate_rows(pool)
-                # crossover knob (plans/tuning.py): spark.automem.recall_
-                # fuse_scan_min_rows / AUTOMEM_RECALL_FUSE_SCAN_MIN_ROWS
-                fuse_channels = est is not None and est >= tuning_int(
-                    "recall_fuse_scan_min_rows", RECALL_FUSE_SCAN_MIN_ROWS
-                )
-            if fuse_channels:
-                # single-scan keyword+metadata union (bit-identical to the
-                # two separate channels; None on degenerate queries)
-                fused = _keyword_metadata_fused(
-                    pool, req.query, req.limit,
-                    {f: F.col(f) for f in meta_field_names},
-                )
-        if fused is not None:
-            channels.append(fused)
-        elif vec is None:
+        if vec is None:
             channels.append(keyword_channel(pool, req.query, req.limit))
         else:
             # Keyword channel fills only the slots vector results left open:
@@ -1181,9 +1012,8 @@ def recall(
             )
             channels.append(kw)
         # metadata sidecar (R5) when the corpus carries whitelisted scalar
-        # metadata fields (recall.py:2015-2040) — unless already fused into
-        # the single-scan keyword+metadata channel above
-        if fused is None and meta_field_names and "metadata" in pool.columns:
+        # metadata fields (recall.py:2015-2040)
+        if meta_field_names and "metadata" in pool.columns:
             from automem_spark.operators.metadata_search import metadata_channel
 
             channels.append(

@@ -27,7 +27,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -452,8 +452,8 @@ def ivf_topk(
     # r15 (§2.2): the cell-assignment expressions below are the per-row
     # cost, and the driver's embeddings fixture scans as 1-2 splits —
     # without this the whole assignment ran on two cores of local[32].
-    # Effective ONLY together with the pushdown fixes below (the probe
-    # semi join + non-null cell): a pushed-down probe filter re-ran the
+    # Effective ONLY together with the probe fixes below (the probe
+    # semi join + non-null cell): a probe filter pushed below it re-ran the
     # assignment below this exchange, hiding the repartition's benefit.
     # Combined, measured at .sf1: ann_ivf 4.97 -> 2.0 s warm noop (−60%).
     # No-op on genuinely parallel inputs, same posture as the text/dedup

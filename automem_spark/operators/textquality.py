@@ -343,9 +343,7 @@ def text_stats_map(df: DataFrame, text_col: str = "text") -> DataFrame:
 #: (21k, 43k) estimated; 30_000 estimated (~15k actual) is bracketed by a
 #: measured frame-wins point 1.4x below and a kernel-wins point 1.4x
 #: above. Values are bit-identical on both sides (tests/test_operators.py)
-#: — an estimate error flips the plan, never the output. Tunable like the
-#: other dispatch bounds: spark.automem.text_stats_kernel_min_rows /
-#: AUTOMEM_TEXT_STATS_KERNEL_MIN_ROWS (plans/tuning.py).
+#: — an estimate error flips the plan, never the output.
 TEXT_STATS_KERNEL_MIN_ROWS = 30_000
 
 
@@ -356,11 +354,9 @@ def text_stats_auto(df: DataFrame, text_col: str = "text") -> DataFrame:
     bit-identical, so the dispatch affects time, never values. Falls back
     to the expression frame when the plan offers no usable estimate."""
     from automem_spark.operators.trainprep import estimate_rows
-    from automem_spark.plans.tuning import tuning_int
 
-    bound = tuning_int("text_stats_kernel_min_rows", TEXT_STATS_KERNEL_MIN_ROWS)
     est = estimate_rows(df)
-    if est is not None and est >= bound:
+    if est is not None and est >= TEXT_STATS_KERNEL_MIN_ROWS:
         return text_stats_map(df, text_col)
     return text_stats_frame(df, text_col)
 

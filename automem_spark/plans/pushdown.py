@@ -47,6 +47,10 @@ _GATE = "_barrier_gate_ok"
 
 
 def barrier_filter(df: DataFrame, pred: Column) -> DataFrame:
+    if _GATE in df.columns:
+        # withColumn would overwrite the caller's column, and the final
+        # drop would remove it from the output
+        raise ValueError(f"barrier_filter: input column {_GATE!r} would collide")
     gate = df.sparkSession.createDataFrame(
         [(True,)], T.StructType([T.StructField(_GATE, T.BooleanType(), False)])
     )

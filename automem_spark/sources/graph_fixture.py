@@ -32,13 +32,6 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
-_NULLS = (
-    "CAST(NULL AS DOUBLE) AS strength, CAST(NULL AS DOUBLE) AS score, "
-    "CAST(NULL AS DOUBLE) AS confidence, CAST(NULL AS DOUBLE) AS similarity, "
-    "CAST(NULL AS BIGINT) AS cnt, CAST(NULL AS STRING) AS kind, "
-    "CAST(NULL AS STRING) AS origin"
-)
-
 # No WITH clause here: the fixture must be embeddable as a CTE body inside
 # a WITH RECURSIVE list (DuckDB rejects nested WITH there); `d` is an inline
 # subquery instead.

@@ -71,11 +71,6 @@ TABLES = [
     "embeddings",
 ]
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-# Fixed "now" for recency math so results are reproducible across engines
-# (the reference uses wall-clock `datetime.now` — automem/utils/scoring.py:74).
-FIXED_NOW = "2026-06-01 00:00:00"
 
 # Memory-type assignment cycle: 7 canonical types (automem/config.py:183)
 # plus the internal MetaPattern artifact type that recall must exclude
@@ -222,10 +217,6 @@ def _load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 "ts", F.timestamp_micros((F.col("ts") / 1000).cast("long"))
             )
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
 
 
 def memories_view(spark: SparkSession, sf_dir: str) -> DataFrame:

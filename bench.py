@@ -136,18 +136,14 @@ def run_once(fn, spark, sf_dir, sink: str = "count") -> tuple[float, float]:
     return t1 - t0, time.time() - t0
 
 
-# Cold-cache rows (r13 verdict ask #6): the fused-recall dispatch constant
-# exists because of COLD-scan economics (the regime of executors reading
-# object storage), but the per-round protocol was warm-only — a regression
-# in the cold regime was invisible round-to-round. These rows re-run with
-# the OS page cache dropped before every sample: both recall shapes (the
-# two sides of RECALL_FUSE_SCAN_MIN_ROWS) and the heaviest scan row.
-# Caveat (documented, not hidden): the JVM stays warm — driver-side file
-# listings and codegen survive — so "cold" means data-page IO is cold,
-# which is exactly the component the crossover dispatches on. Disable
-# with SPARK_GRAFT_BENCH_COLD=0; if /proc/sys/vm/drop_caches is not
-# writable (non-root), cold_valid=false flags the numbers as warm.
-COLD_ROWS = ["hybrid_recall", "hybrid_recall_fused", "minhash_lsh"]
+# Cold-cache rows (r13 verdict ask #6): the regime of executors reading
+# object storage. These rows re-run with the OS page cache dropped before
+# every sample: the recall row and the heaviest scan row. Caveat
+# (documented, not hidden): the JVM stays warm — driver-side file
+# listings and codegen survive — so "cold" means data-page IO is cold.
+# Disable with SPARK_GRAFT_BENCH_COLD=0; if /proc/sys/vm/drop_caches is
+# not writable (non-root), cold_valid=false flags the numbers as warm.
+COLD_ROWS = ["hybrid_recall", "minhash_lsh"]
 
 
 # Steady-state protocol (r15, VERDICT r14 ask #3 — additive): the r14 JIT
@@ -167,7 +163,7 @@ STEADY_EXTRA = 5
 
 def drop_caches() -> bool:
     """sync + drop page cache; result CHECKED (a silent no-op would report
-    warm numbers as cold — same integrity rule as fused_crossover.py)."""
+    warm numbers as cold)."""
     try:
         os.sync()
         with open("/proc/sys/vm/drop_caches", "w") as fh:

@@ -13,7 +13,7 @@ pure NumPy over the collected (cell, embedding) table, because quality is
 a property of (centroids, assignment, probe order), all of which came from
 the shipped kernels. In-cell search is exact cosine in both.
 
-Scorecard fields follow functions/ir_metrics.py's lab contract:
+Scorecard fields follow tests/ir_metrics.py's lab contract:
   - ndcg_10      vs the exact top-10 (binary relevance) — the lab metric
   - distractor_rate_10 = fraction of retrieved items NOT in the exact
     top-10 (for same-size sets this is 1 - recall@10)
@@ -50,6 +50,7 @@ import sys
 import numpy as np
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tests"))
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 GOLDEN = os.path.join(REPO, "tests", "golden", "ivf_quality.json")
@@ -95,7 +96,7 @@ def ivf_quality_curve(
     `emb` overrides the corpus (a (vec_id, embedding) DataFrame — the
     clustered card set passes the mixture-of-Gaussians table); default is
     the sf_dir embeddings fixture."""
-    from automem_spark.functions.ir_metrics import ndcg_at_k, recall_at_k
+    from ir_metrics import ndcg_at_k, recall_at_k
     from automem_spark.operators.similarity import (
         _probe_cells,
         assign_cells,
@@ -179,7 +180,7 @@ def _print_cards(title: str, cards: list[dict], decision: dict) -> None:
 
 
 def main() -> None:
-    from automem_spark.functions.ir_metrics import lab_decision
+    from ir_metrics import lab_decision
     from automem_spark.session import get_spark
 
     arg = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"

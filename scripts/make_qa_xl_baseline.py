@@ -43,7 +43,7 @@ sys.path.insert(0, os.path.join(ROOT, "tests"))
 from automem_spark.session import get_spark  # noqa: E402
 
 import qa_xl  # noqa: E402
-from automem_spark.functions.ir_metrics import lab_decision  # noqa: E402
+from ir_metrics import lab_decision  # noqa: E402
 
 OUT = os.path.join(ROOT, "tests", "golden", "qa_xl_baseline.json")
 

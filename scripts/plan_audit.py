@@ -29,7 +29,7 @@ AUDIT = [
     "vector_topk_scale", "vector_pairs", "text_stats", "classify",
     "ann_ivf", "ann_ivf_indexed", "identity_synthesis", "event_log",
     "result_hydration", "tag_prefix_scan", "time_browse", "dedup_pipeline",
-    "training_selection", "corpus_profile", "media_resize", "gated_recall",
+    "training_selection", "corpus_profile", "gated_recall",
     "event_cube", "tag_scroll",
     "decontaminate", "pii_redact", "data_mix", "seq_pack", "training_pipeline",
     "bucketed_join", "events_partitioned", "salted_event_stats",
@@ -65,7 +65,7 @@ def scan_summaries(plan: str) -> list[str]:
             + (
                 f", pushed=[{pushed.group(1)[:70]}]"
                 if pushed and pushed.group(1)
-                else ", no pushdown"
+                else ", no pushed filters"
             )
         )
         counts[key] = counts.get(key, 0) + 1
@@ -98,21 +98,7 @@ def main() -> None:
         "(7-30x documents re-scans of pure fixture noise) is gone from every",
         "graph plan, matching how a production edges table would scan.",
         "",
-        "Cluster-sizing knobs (r14, plans/tuning.py): the three physical-",
-        "strategy dispatch bounds are runtime-configurable without a code",
-        "edit, resolution order session conf > env > default —",
-        "`spark.automem.cc_local_max_edges` / `AUTOMEM_CC_LOCAL_MAX_EDGES`",
-        "(default 1,000,000 directed edge rows; single-task union-find below,",
-        "distributed pointer-jumping above — size to ONE executor's heap at",
-        "~2 dict entries/row), `spark.automem.supersession_local_max_walks` /",
-        "`AUTOMEM_SUPERSESSION_LOCAL_MAX_WALKS` (default 1,000,000; same",
-        "shape for the chain walk), and `spark.automem.recall_fuse_scan_min_",
-        "rows` / `AUTOMEM_RECALL_FUSE_SCAN_MIN_ROWS` (default 1,500,000 pool",
-        "rows; composed two-scan recall below, one-scan fused above — the",
-        "cold-cache crossover, re-measure on your storage tier). Override",
-        "paths are dispatch-tested in tests/test_tuning_knobs.py.",
-        "",
-        "| query | shuffles | broadcasts | codegen spans | scans (cols read, pushdown) |",
+        "| query | shuffles | broadcasts | codegen spans | scans (cols read, pushed filters) |",
         "|---|---|---|---|---|",
     ]
     def audit_row(name: str) -> str:
@@ -146,7 +132,7 @@ def main() -> None:
             "(AUTOMEM_SPARK_DISABLE_CHECKPOINT=1 — counts INCLUDE the work",
             "the production run materializes once behind each checkpoint):",
             "",
-            "| query | shuffles | broadcasts | codegen spans | scans (cols read, pushdown) |",
+            "| query | shuffles | broadcasts | codegen spans | scans (cols read, pushed filters) |",
             "|---|---|---|---|---|",
         ]
         os.environ["AUTOMEM_SPARK_DISABLE_CHECKPOINT"] = "1"

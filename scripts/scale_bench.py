@@ -11,7 +11,7 @@ projection-shaped rows under-report. Scale TABLES use the noop sink
 
 Usage:
     python scripts/scale_bench.py <sf_dir> <row> [row ...]
-    python scripts/scale_bench.py .sf10 minhash_lsh chunk_dedup
+    python scripts/scale_bench.py .sf10 minhash_lsh dedup_pipeline
 
 Prints one JSON line: {"sf_dir": ..., "queries": {name: min_secs}}.
 """

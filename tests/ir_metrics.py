@@ -3,7 +3,9 @@
 
 Two forms: pure-Python per-query functions (golden-ranking regression tests)
 and a DataFrame aggregate for scoring a whole (query_id, retrieved ranking)
-result set against an expectations table in one job.
+result set against an expectations table in one job. Evaluation tooling
+for the golden-ranking and QA gates, not an engine operator, so it lives
+beside them in tests/.
 """
 
 from __future__ import annotations

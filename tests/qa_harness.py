@@ -312,7 +312,7 @@ def lab_scorecard(
     import time
     from concurrent.futures import ThreadPoolExecutor
 
-    from automem_spark.functions.ir_metrics import ndcg_at_k
+    from ir_metrics import ndcg_at_k
 
     def eval_q(config_overrides, q):
         t0 = time.time()

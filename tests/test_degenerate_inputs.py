@@ -9,7 +9,6 @@ corpus but die on the zero-row edge a real pipeline hits constantly
 """
 
 import pytest
-from pyspark.sql import functions as F
 
 
 @pytest.fixture(scope="module")
@@ -118,13 +117,6 @@ def test_identity_synthesis_on_empty(spark, empty_mem, empty_edges):
         entities, refs, empty_mem, empty_edges, now="2026-06-01 00:00:00"
     )
     assert out.count() == 0
-
-
-def test_enrich_stream_transform_on_empty(spark):
-    from automem_spark.streaming.ingest import enrich_stream_transform
-
-    df = spark.createDataFrame([], "id bigint, content string, tags array<string>")
-    assert enrich_stream_transform(df).count() == 0
 
 
 def test_pii_redact_null_text(spark):

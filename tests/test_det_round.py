@@ -36,7 +36,7 @@ def test_det_round_bit_identical_across_engines(spark, xs, k):
 
 
 def test_det_round_exact_half_boundary():
-    """The text_stats class: 0.5146875 must round identically on both
+    """An exact half boundary: 0.5146875 must round identically on both
     engines (plain round() disagreed at sf1)."""
     con = duckdb.connect()
     x = 0.5146875

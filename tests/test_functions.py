@@ -230,3 +230,51 @@ def test_ascii_token_spans_rejects_non_string_offsets():
     arr = pa.array(["a b c"], type=pa.large_string())
     with pytest.raises(TypeError, match="pa.string"):
         ascii_token_spans(arr)
+
+
+def test_ascii_token_spans_rejects_chunked_array():
+    """A ChunkedArray of pa.string() has the right type but no single
+    buffer set, so the int32 offset parse would misread it. It must be
+    rejected like any other non-contiguous input."""
+    import pyarrow as pa
+    import pytest
+
+    from automem_spark.functions.asciitok import ascii_token_spans
+
+    arr = pa.chunked_array([["a b c"], ["d e"]], type=pa.string())
+    with pytest.raises(TypeError, match="pa.string"):
+        ascii_token_spans(arr)
+
+
+def test_minhash_kernel_routes_chunked_text_to_python_path():
+    """More than 2 GiB of text in one batch makes pa.array return a
+    ChunkedArray instead of raising. The MinHash kernel must then take its
+    per-row Python path and emit the same (id, band, bucket) rows as for
+    contiguous input. A ChunkedArray-backed pandas column gives the same
+    pa.array result without allocating 2 GiB."""
+    import pandas as pd
+    import pyarrow as pa
+
+    from automem_spark.operators.dedup import _minhash_band_kernel
+
+    texts = ["the quick brown fox jumps", "Spark window merge", "a", ""]
+    ids = pd.Series([1, 2, 3, 4], dtype="int64")
+    plain = pd.DataFrame({"doc_id": ids, "text": texts})
+    chunked_col = pd.arrays.ArrowExtensionArray(
+        pa.chunked_array([texts[:2], texts[2:]], type=pa.string())
+    )
+    chunked = pd.DataFrame({"doc_id": ids, "text": pd.Series(chunked_col)})
+    assert isinstance(
+        pa.array(chunked["text"], type=pa.string(), from_pandas=True),
+        pa.ChunkedArray,
+    )
+
+    kernel = _minhash_band_kernel("text", "doc_id", 3, 16, 4)
+
+    def rows(pdf):
+        out = pd.concat(list(kernel(iter([pdf]))))
+        return sorted(map(tuple, out[["id", "band", "bucket"]].to_numpy().tolist()))
+
+    want = rows(plain)
+    assert len(want) == 4 * 4
+    assert rows(chunked) == want

@@ -13,7 +13,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from automem_spark.functions.ir_metrics import ir_metrics_df, mrr, ndcg_at_k, recall_at_k
+from ir_metrics import ir_metrics_df, mrr, ndcg_at_k, recall_at_k
 from automem_spark.functions.vector import placeholder_embedding, placeholder_embedding_udf
 from automem_spark.operators.recall import RecallRequest, recall
 
@@ -89,7 +89,7 @@ def test_distractor_guardrail(spark, golden, rankings):
     """lab_metrics.py:40-56 distractor rate: archived and MetaPattern rows
     are labelled never-relevant (every search path must drop them) — a
     nonzero distractor@k means pool filtering regressed."""
-    from automem_spark.functions.ir_metrics import distractor_rate_at_k
+    from ir_metrics import distractor_rate_at_k
     from automem_spark.sources.tables import memories_view
 
     distractors = {
@@ -109,7 +109,7 @@ def test_paired_ttest_basics():
     """lab_metrics.py:58-111 twin: degenerate inputs are inert, identical
     series are insignificant, a consistent improvement is significant with
     the conventional effect label."""
-    from automem_spark.functions.ir_metrics import paired_ttest
+    from ir_metrics import paired_ttest
 
     inert = paired_ttest([1.0], [2.0])
     assert not inert["significant"] and inert["p_value"] == 1.0
@@ -130,7 +130,7 @@ def test_paired_ttest_basics():
 def test_pick_winner_scorecard_rule():
     """lab_metrics.py:145+ decision rule: precision guardrail first, then
     NDCG, then fewer knobs, then latency; the baseline always survives."""
-    from automem_spark.functions.ir_metrics import pick_winner
+    from ir_metrics import pick_winner
 
     cards = [
         {"name": "baseline", "ndcg_10": 0.90, "distractor_rate_10": 0.00,
@@ -170,7 +170,7 @@ def test_lab_paired_comparison_defends_baseline(spark, golden, rankings):
     the baseline per-query NDCG series, and require (1) the paired t-test
     to flag the degradation as significant and (2) the scorecard rule to
     keep the baseline."""
-    from automem_spark.functions.ir_metrics import paired_ttest, pick_winner
+    from ir_metrics import paired_ttest, pick_winner
     from automem_spark.sources.tables import memories_view
 
     k = golden["k"]
@@ -211,7 +211,7 @@ def test_lab_decision_noise_band_gate():
     when the paired comparison clears the noise band — a mean-NDCG win
     driven by a couple of questions keeps the baseline; a consistent
     per-question win dethrones it."""
-    from automem_spark.functions.ir_metrics import lab_decision
+    from ir_metrics import lab_decision
 
     base_q = [0.8] * 20
     # two lucky questions: +0.025 mean, but p >> 0.05 across the series

@@ -446,26 +446,17 @@ def test_text_stats_map_bit_identical_to_frame(spark, sf_dir):
     assert kernel.exceptAll(frame).count() == 0
 
 
-def test_text_stats_auto_dispatches_on_bound(spark, sf_dir):
-    """The size dispatch must pick the kernel above the knob and the
-    expression frame below it, and the knob must be runtime-tunable
-    (spark.automem.text_stats_kernel_min_rows) like the other dispatch
-    bounds."""
+def test_text_stats_auto_dispatches_on_bound(spark, sf_dir, monkeypatch):
+    """The size dispatch must pick the kernel when the plan estimate is at
+    or above TEXT_STATS_KERNEL_MIN_ROWS and the expression frame below it."""
+    from automem_spark.operators import textquality
     from automem_spark.operators.textquality import text_stats_auto
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    key = "spark.automem.text_stats_kernel_min_rows"
-    try:
-        spark.conf.set(key, "1")
-        plan_kernel = (
-            text_stats_auto(d)._jdf.queryExecution().executedPlan().toString()
-        )
-        spark.conf.set(key, str(10**12))
-        plan_frame = (
-            text_stats_auto(d)._jdf.queryExecution().executedPlan().toString()
-        )
-    finally:
-        spark.conf.unset(key)
+    monkeypatch.setattr(textquality, "TEXT_STATS_KERNEL_MIN_ROWS", 1)
+    plan_kernel = text_stats_auto(d)._jdf.queryExecution().executedPlan().toString()
+    monkeypatch.setattr(textquality, "TEXT_STATS_KERNEL_MIN_ROWS", 10**12)
+    plan_frame = text_stats_auto(d)._jdf.queryExecution().executedPlan().toString()
     assert "MapInPandas" in plan_kernel
     assert "MapInPandas" not in plan_frame
 

@@ -423,3 +423,13 @@ def test_barrier_filter_semantics_and_pushdown_block(spark):
         assert "DataFilters: [isnotnull" in plain or "DataFilters: [(length" in plain
         assert "DataFilters: []" in barr
         assert "LeftSemi" in barr
+
+
+def test_barrier_filter_rejects_gate_column_clash(spark):
+    """barrier_filter stages its gate in a fixed column name; a caller's
+    column of that name must be refused, not overwritten and dropped."""
+    from automem_spark.plans.pushdown import barrier_filter
+
+    df = spark.createDataFrame([(1, True)], "id long, _barrier_gate_ok boolean")
+    with pytest.raises(ValueError, match="collide"):
+        barrier_filter(df, F.col("id") > 0)

@@ -76,8 +76,7 @@ _doc_wide = st.text(alphabet="aB1_ .,!é中\t\n", min_size=0, max_size=48)
 def test_minhash_banded_map_property_identical_to_sql(spark, texts):
     """The Arrow signature kernel is bit-identical to the SQL-text oracle
     anchor on adversarial generated corpora — the property pin behind the
-    r14 signature_impl default (same contract as repetition_filter_map vs
-    its expression twin)."""
+    r14 signature_impl default."""
     from pyspark.sql import functions as F
 
     from automem_spark.operators.dedup import (

@@ -96,7 +96,7 @@ def test_shipped_config_is_lab_decision_choice(spark):
     change only when the paired comparison clears the noise band"). A
     future recall-knob change must defeat this baseline the way the
     reference's lab requires, not just stay unit-green."""
-    from automem_spark.functions.ir_metrics import lab_decision, paired_ttest
+    from ir_metrics import lab_decision, paired_ttest
 
     cards = qa_harness.scorecard(spark)
     assert {c["name"] for c in cards} == set(qa_harness.CANDIDATE_CONFIGS)

@@ -99,7 +99,7 @@ def test_shipped_config_is_lab_decision_choice(spark):
     use for recency/importance), which is exactly the case the reference's
     documented rule exists for: the paired comparison must clear the noise
     band before a config change is trusted."""
-    from automem_spark.functions.ir_metrics import lab_decision, paired_ttest
+    from ir_metrics import lab_decision, paired_ttest
 
     import qa_longmem
 

@@ -118,7 +118,7 @@ def test_scorecard_series_pinned(spark, baseline):
     moves at least one quality value. Ablation cards + the lab decision
     record are pinned too (a decision flip means the fixture's separation
     properties changed — reviewable, not silently absorbed)."""
-    from automem_spark.functions.ir_metrics import lab_decision
+    from ir_metrics import lab_decision
 
     cards = qa_xl.scorecard(spark)
     by_name = {c["name"]: c for c in cards}

@@ -1,333 +1,4 @@
-"""Structured Streaming ingest + multimodal column plumbing tests."""
-
-import struct
-
-from pyspark.sql import functions as F
-
-from automem_spark.operators.multimodal import (
-    _decode_netpbm,
-    _encode_netpbm,
-    _parse_netpbm_header,
-    decode_images,
-    extract_features,
-    fake_media_table,
-    ppm_media_table,
-    resize_images,
-    sample_frames,
-)
-from automem_spark.sources.tables import load_table
-from automem_spark.streaming.ingest import enrich_stream_transform, windowed_event_counts
-
-
-def test_enrich_transform_batch(spark):
-    rows = [
-        (1, "We decided to use Spark. It is fast.", ["Project:Alpha:API"]),
-        (2, "nothing special", []),
-    ]
-    df = spark.createDataFrame(rows, "id int, content string, tags array<string>")
-    got = {r.id: r for r in enrich_stream_transform(df).collect()}
-    assert got[1].mem_type == "Decision"
-    assert got[1].summary == "We decided to use Spark."
-    assert "project:alpha" in got[1].tag_prefixes
-    assert got[2].mem_type == "Memory"
-
-
-def test_enrich_transform_streaming(spark, sf_dir, tmp_path):
-    """The same DAG must run as a real Structured Streaming query."""
-    src = str(tmp_path / "src")
-    out_rows = []
-    docs = load_table(spark, sf_dir, "documents").limit(50)
-    docs.select(
-        F.col("doc_id").alias("id"),
-        F.col("text").alias("content"),
-        F.array(F.col("lang")).alias("tags"),
-    ).write.parquet(src)
-    stream = spark.readStream.schema(
-        "id bigint, content string, tags array<string>"
-    ).parquet(src)
-    enriched = enrich_stream_transform(stream)
-    assert enriched.isStreaming
-
-    def sink(batch_df, _batch_id):
-        out_rows.extend(batch_df.collect())
-
-    q = enriched.writeStream.foreachBatch(sink).trigger(availableNow=True).start()
-    q.awaitTermination(120)
-    assert len(out_rows) == 50
-    assert all(r.processed for r in out_rows)
-
-
-def test_windowed_event_counts_stream(spark, sf_dir, tmp_path):
-    src = str(tmp_path / "ev")
-    load_table(spark, sf_dir, "events").limit(1000).write.parquet(src)
-    stream = spark.readStream.schema(
-        "event_id bigint, ts timestamp, user_id bigint, event_type string, value double, props string"
-    ).parquet(src)
-    agg = windowed_event_counts(stream, window="6 hours", watermark="1 hour")
-    results = []
-
-    def sink(batch_df, _):
-        results.extend(batch_df.collect())
-
-    q = agg.writeStream.outputMode("append").foreachBatch(sink).trigger(availableNow=True).start()
-    q.awaitTermination(120)
-    # batch-equivalent check
-    batch = windowed_event_counts(
-        load_table(spark, sf_dir, "events").limit(1000), window="6 hours"
-    ).collect()
-    # streaming append-mode may hold back the final window past the watermark;
-    # everything emitted must match the batch computation
-    batch_map = {(r.win, r.event_type): r.n for r in batch}
-    for r in results:
-        assert batch_map[(r.win, r.event_type)] == r.n
-
-
-def test_media_decode_roundtrip(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents").limit(40)
-    media = fake_media_table(docs)
-    meta = {r.id: r for r in decode_images(media).collect()}
-    for r in docs.collect():
-        m = meta[r.doc_id]
-        assert m.width == r.doc_id % 640 + 16
-        assert m.height == r.doc_id % 480 + 16
-        assert m.n_bytes == 8 + len(r.text.encode("utf-8"))
-
-
-def test_netpbm_parser_real_format():
-    """The r9 kernel is a REAL netpbm parser: spec-conformant headers with
-    arbitrary whitespace and comments parse; malformed ones are rejected."""
-    import numpy as np
-
-    raster = bytes(range(3 * 2 * 3))  # 3x2 RGB
-    assert _parse_netpbm_header(b"P6\n3 2\n255\n" + raster) == (3, 2, 3, 11)
-    # comment lines and odd whitespace are legal netpbm
-    weird = b"P6 # a comment\n# another\n 3\t2 \n255\n" + raster
-    w, h, c, hl = _parse_netpbm_header(weird)
-    assert (w, h, c) == (3, 2, 3) and weird[hl:] == raster
-    # grayscale P5
-    assert _parse_netpbm_header(b"P5\n4 1\n255\n" + bytes(4)) == (4, 1, 1, 11)
-    # rejects: wrong magic, non-255 maxval, truncated raster, fake header
-    assert _parse_netpbm_header(b"P4\n3 2\n255\n" + raster) is None
-    assert _parse_netpbm_header(b"P6\n3 2\n65535\n" + raster * 2) is None
-    assert _parse_netpbm_header(b"P6\n3 2\n255\n" + raster[:-1]) is None
-    assert _parse_netpbm_header(struct.pack("<II", 640, 480) + b"xx") is None
-    # decode returns the actual pixel matrix
-    _, _, _, px = _decode_netpbm(b"P6\n3 2\n255\n" + raster)
-    assert px.shape == (2, 3, 3) and px[1, 2, 2] == raster[-1]
-    assert _encode_netpbm(px) == b"P6\n3 2\n255\n" + raster
-    # nearest-neighbor reference: 4x4 gradient -> 2x2 picks rows/cols 0,2
-    g = np.arange(16, dtype=np.uint8).reshape(4, 4, 1)
-    rows = (np.arange(2) * 4 // 2)
-    assert list(g[rows][:, rows].flatten()) == [0, 2, 8, 10]
-
-
-def test_ppm_decode_resize_roundtrip(spark, sf_dir):
-    """Fixture PPM bytes really parse; resize output is a valid PPM whose
-    pixels are actual source pixels (checked per-byte on one doc)."""
-    docs = load_table(spark, sf_dir, "documents").limit(40)
-    media = ppm_media_table(docs)
-    meta = {r.id: r for r in decode_images(media).collect()}
-    for r in docs.select("doc_id").collect():
-        m = meta[r.doc_id]
-        assert m.width == r.doc_id % 32 + 4
-        assert m.height == r.doc_id % 24 + 4
-        assert m.channels == 3
-    resized = resize_images(media, max_width=16, max_height=16)
-    out = {r.id: r for r in resized.collect()}
-    src = {r.id: bytes(r.payload) for r in media.collect()}
-    saw_downscale = saw_passthrough = False
-    for rid, r in out.items():
-        w0, h0, _c, px0 = _decode_netpbm(src[rid])
-        dec = _decode_netpbm(bytes(r.payload))
-        assert dec is not None, "resized payload must be valid netpbm"
-        w1, h1, _c1, px1 = dec
-        assert (w1, h1) == (r.width, r.height) and w1 <= 16 and h1 <= 16
-        if (w1, h1) == (w0, h0):
-            saw_passthrough = True
-        else:
-            saw_downscale = True
-            # every output pixel is the nearest-neighbor source pixel
-            import numpy as np
-
-            rows = (np.arange(h1) * h0 // h1).astype(int)
-            cols = (np.arange(w1) * w0 // w1).astype(int)
-            assert (px1 == px0[rows][:, cols]).all()
-    assert saw_downscale and saw_passthrough
-
-
-class _StubPILImage:
-    """Minimal stand-in for the PIL.Image API surface the kernels use:
-    open().size/.getbands()/.resize().save(). Deterministic: 'decodes' the
-    dims packed after the magic and 'encodes' PNG-magic + packed dims."""
-
-    def __init__(self, w, h):
-        self.size = (w, h)
-
-    #: encoded-byte suffix — mutated in tests to emulate a different
-    #: Pillow/zlib version producing different PNG bytes for the SAME pixels
-    encoder_tag = b""
-
-    def getbands(self):
-        return ("R", "G", "B")
-
-    def tobytes(self):
-        # deterministic pixel matrix derived from dims (version-free)
-        w, h = self.size
-        return bytes((i * 31) % 256 for i in range(w * h * 3))
-
-    def resize(self, wh, resample=0):
-        return _StubPILImage(*wh)
-
-    def save(self, buf, format="PNG"):
-        buf.write(
-            b"\x89PNG\r\n\x1a\n" + struct.pack("<II", *self.size) + self.encoder_tag
-        )
-
-    @staticmethod
-    def open(fp):
-        b = fp.read()
-        w, h = struct.unpack("<II", b[8:16])
-        return _StubPILImage(w, h)
-
-
-def _fake_png(w, h):
-    return b"\x89PNG\r\n\x1a\n" + struct.pack("<II", w, h) + b"\0" * 32
-
-
-def test_compressed_codec_dispatch_with_and_without_pil():
-    """r10 seam (verdict ask #6): JPEG/PNG magic bytes dispatch to PIL when
-    the module imports; with the library absent the SAME payload falls
-    through to the legacy fake-header kernel. Both branches exercised —
-    presence via a stub module, absence for real (PIL is not in this
-    container)."""
-    import pandas as pd
-
-    from automem_spark.operators.multimodal import (
-        _decode_image_batch,
-        _is_compressed_codec,
-        _pil_image_module,
-        _resize_one,
-    )
-
-    assert _pil_image_module() is None, "container grew PIL; revisit this test"
-    png = _fake_png(40, 20)
-    assert _is_compressed_codec(png)
-    assert _is_compressed_codec(b"\xff\xd8\xff\xe0JFIF")
-    assert not _is_compressed_codec(b"P6\n1 1\n255\nabc")
-
-    # absence (real): falls through to the fake 8-byte header read, which
-    # sees the PNG magic's first 8 bytes as little-endian dims
-    absent = _decode_image_batch(pd.Series([png])).iloc[0]
-    w_magic, h_magic = struct.unpack("<II", png[:8])
-    assert (absent.width, absent.height, absent.channels) == (w_magic, h_magic, 0)
-
-    # presence (stub): real decode path reports the image dims + bands
-    import sys
-    import types
-
-    pil_pkg = types.ModuleType("PIL")
-    pil_pkg.Image = _StubPILImage
-    sys.modules["PIL"] = pil_pkg
-    try:
-        assert _pil_image_module() is _StubPILImage
-        got = _decode_image_batch(pd.Series([png])).iloc[0]
-        assert (got.width, got.height, got.channels) == (40, 20, 3)
-        # resize through the PIL branch: downscale into a 16x16 box,
-        # lossless PNG re-encode carries the new dims
-        nw, nh, payload, n_bytes, pxh = _resize_one(png, 16, 16, _StubPILImage)
-        assert (nw, nh) == (16, 8)
-        assert payload.startswith(b"\x89PNG\r\n\x1a\n")
-        assert struct.unpack("<II", payload[8:16]) == (16, 8)
-        # pixel_sha256 is the PIXEL-MATRIX identity (r11 verdict #7): a
-        # different encoder version producing different PNG BYTES for the
-        # same pixels must not move it — emulate the version bump via the
-        # stub's encoder_tag
-        _StubPILImage.encoder_tag = b"zlib-vNEXT"
-        try:
-            nw_v2, nh_v2, payload_v2, _, pxh_v2 = _resize_one(
-                png, 16, 16, _StubPILImage
-            )
-        finally:
-            _StubPILImage.encoder_tag = b""
-        assert payload_v2 != payload          # bytes drift with the encoder...
-        assert (nw_v2, nh_v2, pxh_v2) == (nw, nh, pxh)  # ...identity does not
-        # in-box passthrough returns the original bytes untouched
-        nw2, nh2, payload2, _, _ = _resize_one(_fake_png(10, 10), 16, 16, _StubPILImage)
-        assert (nw2, nh2) == (10, 10) and payload2 == _fake_png(10, 10)
-        # netpbm still wins the dispatch even with PIL present
-        ppm = b"P6\n3 2\n255\n" + bytes(18)
-        nw3, nh3, payload3, _, pxh3 = _resize_one(ppm, 16, 16, _StubPILImage)
-        assert (nw3, nh3) == (3, 2) and payload3 == ppm
-        # netpbm pixel hash = canonical dims+matrix hash, reproducible
-        import hashlib
-
-        assert pxh3 == hashlib.sha256(b"2:3:3:" + bytes(18)).hexdigest()
-        # corrupt payload (valid magic, truncated body -> open raises):
-        # zeroed meta / untouched passthrough, NOT a raised batch — at
-        # 100 TB a corrupt image must not kill the task
-        corrupt = b"\x89PNG\r\n\x1a\nxx"
-        got_c = _decode_image_batch(pd.Series([corrupt])).iloc[0]
-        assert (got_c.width, got_c.height, got_c.channels) == (0, 0, 0)
-        nw4, nh4, payload4, n4, _ = _resize_one(corrupt, 16, 16, _StubPILImage)
-        assert (nw4, nh4) == (0, 0) and payload4 == corrupt and n4 == len(corrupt)
-    finally:
-        del sys.modules["PIL"]
-    assert _pil_image_module() is None
-
-
-def test_media_features_deterministic(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents").limit(10)
-    media = fake_media_table(docs)
-    a = {r.id: tuple(r.features) for r in extract_features(media).collect()}
-    b = {r.id: tuple(r.features) for r in extract_features(media).collect()}
-    assert a == b
-    assert all(len(v) == 16 and all(0 <= x < 1 for x in v) for v in a.values())
-
-
-def test_frame_sampling(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents").limit(5)
-    media = fake_media_table(docs)
-    frames = sample_frames(media, frame_bytes=64, every_nth=2).collect()
-    assert frames
-    by_id = {}
-    for f in frames:
-        by_id.setdefault(f.id, []).append(f.frame_no)
-    for fid, nos in by_id.items():
-        assert all(n % 2 == 0 for n in nos)
-        assert sorted(nos) == nos or sorted(nos) == sorted(set(nos))
-
-
-def test_dedup_stream_drain_once(spark, tmp_path):
-    """ST1: duplicate deliveries collapse to one enriched record in a real
-    streaming query with dedup state."""
-    from datetime import datetime
-
-    from automem_spark.streaming.ingest import dedup_stream, enrich_stream_transform
-
-    src = str(tmp_path / "dupsrc")
-    rows = [
-        (i, f"memory content {i % 10}", ["t:a"], datetime(2026, 1, 1, i % 24))
-        for i in range(30)  # each content delivered 3x
-    ]
-    spark.createDataFrame(
-        rows, "id long, content string, tags array<string>, ts timestamp"
-    ).write.parquet(src)
-    stream = spark.readStream.schema(
-        "id long, content string, tags array<string>, ts timestamp"
-    ).parquet(src)
-    enriched = enrich_stream_transform(stream)
-    deduped = dedup_stream(enriched, key_cols=("fingerprint",), ts_col="ts")
-    assert deduped.isStreaming
-
-    out_rows = []
-
-    def sink(batch_df, _bid):
-        out_rows.extend(batch_df.collect())
-
-    q = deduped.writeStream.foreachBatch(sink).trigger(availableNow=True).start()
-    q.awaitTermination(120)
-    assert len(out_rows) == 10  # 30 deliveries, 10 distinct fingerprints
-    assert len({r.fingerprint for r in out_rows}) == 10
+"""Structured Streaming event-log rollup (S11/ST8)."""
 
 
 def test_event_rollup_streaming(spark, tmp_path):
@@ -371,119 +42,3 @@ def test_event_rollup_streaming(spark, tmp_path):
         # streaming n_keys is HLL-approximate (exact distinct unsupported on
         # streams); ids are all distinct per window
         assert abs(n_keys - n) / n < 0.15
-
-
-def test_streaming_ingest_drains_into_store(spark, tmp_path):
-    """ST1 + S4 end-to-end: the watermarked drain-once stream feeds
-    foreachBatch micro-batches through the same upsert used by the batch
-    write path; the final store holds exactly one latest version per id —
-    the reference's queue-worker -> store write loop as one streaming job."""
-    from datetime import datetime
-
-    from pyspark.sql import functions as F
-
-    from automem_spark.operators.ingest import upsert_memories
-    from automem_spark.streaming.ingest import dedup_stream, enrich_stream_transform
-
-    src = str(tmp_path / "ingest_src")
-    store = str(tmp_path / "store")
-    # two delivery waves per id: v1 then v2 (higher epoch); plus redeliveries
-    rows = []
-    for i in range(10):
-        for ver in (1, 2):
-            for _redeliver in range(2):
-                rows.append(
-                    (i, f"content {i} v{ver}", ["t:x"],
-                     datetime(2026, 1, 1, 6 + ver), 1000 + ver)
-                )
-    spark.createDataFrame(
-        rows,
-        "id long, content string, tags array<string>, ts timestamp,"
-        " updated_at_epoch long",
-    ).write.parquet(src)
-
-    stream = spark.readStream.schema(
-        "id long, content string, tags array<string>, ts timestamp,"
-        " updated_at_epoch long"
-    ).parquet(src)
-    enriched = enrich_stream_transform(stream)
-    # drain-once on (fingerprint) collapses redeliveries of the same payload
-    deduped = dedup_stream(enriched, key_cols=("fingerprint",), ts_col="ts")
-
-    def sink(batch_df, _bid):
-        cols = batch_df.columns
-        try:
-            current = batch_df.sparkSession.read.parquet(store).select(*cols)
-        except Exception:
-            current = batch_df.limit(0)
-        merged = upsert_memories(current, batch_df, version_col="updated_at_epoch")
-        merged.write.mode("overwrite").parquet(store + "_next")
-        # two-phase: read-back then swap (parquet has no atomic MERGE)
-        batch_df.sparkSession.read.parquet(store + "_next").write.mode(
-            "overwrite"
-        ).parquet(store)
-
-    q = deduped.writeStream.foreachBatch(sink).trigger(availableNow=True).start()
-    q.awaitTermination(120)
-
-    final = spark.read.parquet(store)
-    got = {r.id: r.content for r in final.collect()}
-    assert len(got) == 10
-    assert all(v.endswith("v2") for v in got.values()), got
-    assert final.filter(~F.col("processed")).count() == 0
-
-
-def test_retry_gate_stateful_across_batches(spark, tmp_path):
-    """ST1 attempt-counting via applyInPandasWithState: per-key state
-    persists across micro-batches THROUGH A QUERY RESTART (checkpointed),
-    successes clear it, and the third failure dead-letters."""
-    import datetime as dt
-
-    from automem_spark.streaming.retry import retry_gate
-
-    src = str(tmp_path / "attempts")
-    ckpt = str(tmp_path / "ckpt")
-    t = dt.datetime(2026, 6, 1)
-
-    def write_batch(rows, part):
-        spark.createDataFrame(rows, "id bigint, ok boolean, ts timestamp").coalesce(
-            1
-        ).write.mode("append").parquet(src)
-
-    out_rows = []
-
-    def drain():
-        stream = spark.readStream.schema("id bigint, ok boolean, ts timestamp").parquet(src)
-        q = (
-            retry_gate(stream, max_attempts=3)
-            .writeStream.foreachBatch(lambda df, _id: out_rows.extend(df.collect()))
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    # batch 1: key 1 fails once, key 2 succeeds first try
-    write_batch(
-        [(1, False, t), (2, True, t)], 1
-    )
-    drain()
-    got = {(r.id, r.status): r.attempts for r in out_rows}
-    assert got == {(2, "processed"): 1}
-
-    # batch 2 (restarted query, state restored from checkpoint):
-    # key 1 fails twice more -> dead-letter at attempt 3;
-    # key 3 fails once then succeeds inside the same batch -> processed @ 2
-    write_batch(
-        [
-            (1, False, t + dt.timedelta(minutes=1)),
-            (1, False, t + dt.timedelta(minutes=2)),
-            (3, False, t + dt.timedelta(minutes=1)),
-            (3, True, t + dt.timedelta(minutes=2)),
-        ],
-        2,
-    )
-    drain()
-    got = {(r.id, r.status): r.attempts for r in out_rows}
-    assert got[(1, "dead_letter")] == 3  # state carried the batch-1 failure
-    assert got[(3, "processed")] == 2

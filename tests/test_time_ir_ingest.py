@@ -1,44 +1,16 @@
-"""Time-expression parsing (X15/X16), IR metrics, ingest ops."""
-
-from datetime import datetime, timezone
+"""IR metrics and ingest ops."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from automem_spark.functions.ir_metrics import (
+from ir_metrics import (
     distractor_rate_at_k,
     ir_metrics_df,
     mrr,
     ndcg_at_k,
     recall_at_k,
 )
-from automem_spark.functions.timeparse import parse_time_expression, query_has_temporal_intent
 from automem_spark.operators.ingest import delete_by_ids, normalize_memories, upsert_memories
-
-NOW = datetime(2026, 6, 5, 15, 30, tzinfo=timezone.utc)  # a Friday
-
-
-def test_temporal_intent():
-    assert query_has_temporal_intent("what is my current editor?")
-    assert query_has_temporal_intent("what changed last time")
-    assert not query_has_temporal_intent("currency exchange rates")
-    assert not query_has_temporal_intent("nowhere to go")
-    assert not query_has_temporal_intent(None)
-
-
-def test_parse_time_expressions():
-    s, e = parse_time_expression("today", now=NOW)
-    assert s == "2026-06-05T00:00:00+00:00" and e == "2026-06-06T00:00:00+00:00"
-    s, e = parse_time_expression("yesterday", now=NOW)
-    assert s == "2026-06-04T00:00:00+00:00"
-    s, e = parse_time_expression("last 30 days", now=NOW)
-    assert s == "2026-05-06T15:30:00+00:00" and e == NOW.isoformat()
-    s, e = parse_time_expression("this week", now=NOW)
-    assert s == "2026-06-01T00:00:00+00:00" and e == "2026-06-08T00:00:00+00:00"
-    s, e = parse_time_expression("last month", now=NOW)
-    assert s == "2026-05-01T00:00:00+00:00" and e == "2026-06-01T00:00:00+00:00"
-    assert parse_time_expression("gibberish", now=NOW) == (None, None)
-    assert parse_time_expression(None) == (None, None)
 
 
 def test_ir_metrics_pure():

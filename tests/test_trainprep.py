@@ -574,74 +574,6 @@ def test_sweep_parts_exactly_partition_the_full_rows(spark, sf_dir):
     assert first and first == again
 
 
-def test_chunk_dedup_stream_matches_batch_across_boundaries(spark, sf_dir, tmp_path):
-    """Micro-batch boundary equivalence for the streaming chunk-dedup twin
-    (streaming/ingest.py:chunk_dedup_stream): documents delivered in doc_id
-    order across MULTIPLE micro-batches (maxFilesPerTrigger=1 over files
-    with forced mtime order) must yield, after a per-doc rollup of the
-    chunk verdicts, exactly the batch chunk_dedup output — the same
-    boundary-equivalence property test_sessionize.py pins."""
-    import os
-
-    import pandas as pd
-
-    from automem_spark.operators.trainprep import chunk_dedup
-    from automem_spark.streaming.ingest import chunk_dedup_stream
-
-    batch = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .filter(F.col("doc_id") < 120)
-        .select("doc_id", "text")
-    )
-    src = str(tmp_path / "docs")
-    os.makedirs(src)
-    # three chronological files; mtimes force the FileStreamSource order
-    splits = [(0, 40), (40, 80), (80, 120)]
-    for i, (lo, hi) in enumerate(splits):
-        part = batch.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-        pdir = str(tmp_path / f"p{i}")
-        part.coalesce(1).write.parquet(pdir)
-        (pq,) = [f for f in os.listdir(pdir) if f.endswith(".parquet")]
-        dst = os.path.join(src, f"{i:04d}.parquet")
-        os.rename(os.path.join(pdir, pq), dst)
-        os.utime(dst, (1_700_000_000 + i * 60, 1_700_000_000 + i * 60))
-
-    stream = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    out: list = []
-    n_batches: list[int] = []
-    q = (
-        chunk_dedup_stream(stream)
-        .writeStream.outputMode("append")
-        .foreachBatch(
-            lambda df, _id: (out.extend(df.collect()), n_batches.append(1))
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    assert len(n_batches) >= 3, "boundary test needs multiple micro-batches"
-
-    rolled = (
-        pd.DataFrame(
-            [(r.doc_id, r.is_dup) for r in out], columns=["doc_id", "is_dup"]
-        )
-        .groupby("doc_id")
-        .agg(n_chunks=("is_dup", "size"), n_dup_chunks=("is_dup", "sum"))
-    )
-    expect = {
-        r["doc_id"]: (r["n_chunks"], r["n_dup_chunks"], r["keep"])
-        for r in chunk_dedup(batch).collect()
-    }
-    assert set(rolled.index) == set(expect)
-    for doc_id, row in rolled.iterrows():
-        n, d, _keep = expect[doc_id]
-        assert (row["n_chunks"], row["n_dup_chunks"]) == (n, d), doc_id
-
-
 def test_semantic_decontaminate_matmul_equals_expr_path(spark, sf_dir):
     """The broadcast-matmul twin must reproduce the expression path's
     output EXACTLY (ids, rounded max cosines, flags) — the same twin

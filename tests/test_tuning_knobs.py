@@ -1,37 +1,18 @@
-"""Config surface for the three dispatch bounds (r13 verdict ask #5).
+"""Loop-path dispatch for the two graph bounds.
 
-CC_LOCAL_MAX_EDGES, SUPERSESSION_LOCAL_MAX_WALKS and
-RECALL_FUSE_SCAN_MIN_ROWS are cluster-sizing knobs (the CC comment derives
-its bound from a 4-8 GB executor heap); plans/tuning.py reads them from
-``spark.automem.*`` runtime conf, then ``AUTOMEM_*`` env, then the module
-default. One test per knob proves the conf value flips the dispatch to the
-OTHER physical path (outputs stay identical — the identity itself is pinned
-by test_graph.py / test_recall_fused.py / test_properties.py); one more
-pins the resolution order and the untouched defaults.
+CC_LOCAL_MAX_EDGES and SUPERSESSION_LOCAL_MAX_WALKS pick a single-task
+path below the bound and a distributed join loop above it. The fixtures sit
+far below both bounds, so each test forces the loop path through the
+explicit keyword argument (``local_max_edges=0`` / ``local_max_walks=0``)
+and proves the two physical paths give the same output.
 """
 
-import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as E
 import automem_spark.operators.graph as G
-from automem_spark.operators.recall import RecallRequest, recall
 from automem_spark.operators.similarity import cosine_threshold_self_join
-from automem_spark.plans.tuning import tuning_int
 from automem_spark.sources.tables import load_table
-
-
-@pytest.fixture
-def _clean_conf(spark):
-    keys = [
-        "spark.automem.cc_local_max_edges",
-        "spark.automem.supersession_local_max_walks",
-        "spark.automem.recall_fuse_scan_min_rows",
-        "spark.automem.test_knob",
-    ]
-    yield
-    for k in keys:
-        spark.conf.unset(k)
 
 
 def _count_calls(monkeypatch, module, name):
@@ -47,24 +28,7 @@ def _count_calls(monkeypatch, module, name):
     return calls
 
 
-def test_resolution_order_and_defaults(spark, monkeypatch, _clean_conf):
-    # default when nothing is set
-    assert tuning_int("test_knob", 77) == 77
-    # env beats default
-    monkeypatch.setenv("AUTOMEM_TEST_KNOB", "88")
-    assert tuning_int("test_knob", 77) == 88
-    # session conf beats env
-    spark.conf.set("spark.automem.test_knob", "99")
-    assert tuning_int("test_knob", 77) == 99
-    # the shipped defaults themselves are unchanged
-    assert G.CC_LOCAL_MAX_EDGES == 1_000_000
-    assert G.SUPERSESSION_LOCAL_MAX_WALKS == 1_000_000
-    from automem_spark.operators.recall import RECALL_FUSE_SCAN_MIN_ROWS
-
-    assert RECALL_FUSE_SCAN_MIN_ROWS == 1_500_000
-
-
-def test_cc_knob_dispatches_loop_path(spark, sf_dir, monkeypatch, _clean_conf):
+def test_cc_knob_dispatches_loop_path(spark, sf_dir, monkeypatch):
     emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 60)
     pairs = cosine_threshold_self_join(emb, 0.25, item_id="vec_id")
     nodes = emb.select(F.col("vec_id").alias("id"))
@@ -72,35 +36,23 @@ def test_cc_knob_dispatches_loop_path(spark, sf_dir, monkeypatch, _clean_conf):
     # default bound (1M) >> fixture edges: local union-find path
     a = {(r.id, r.component) for r in G.connected_components(pairs, nodes).collect()}
     assert len(calls) == 1
-    # conf = 0 forces the distributed propagation loop — same output
-    spark.conf.set("spark.automem.cc_local_max_edges", "0")
-    b = {(r.id, r.component) for r in G.connected_components(pairs, nodes).collect()}
+    # a zero bound forces the distributed propagation loop — same output
+    b = {
+        (r.id, r.component)
+        for r in G.connected_components(pairs, nodes, local_max_edges=0).collect()
+    }
     assert len(calls) == 1  # local path NOT taken again
     assert a == b
 
 
-def test_supersession_knob_dispatches_loop_path(
-    spark, sf_dir, monkeypatch, _clean_conf
-):
+def test_supersession_knob_dispatches_loop_path(spark, sf_dir, monkeypatch):
     edges = E.edges_view(spark, sf_dir)
     calls = _count_calls(monkeypatch, G, "_supersession_local_walk")
     a = {(r.start, r.head, r.hops) for r in G.resolve_supersession(edges).collect()}
     assert len(calls) == 1 and a
-    spark.conf.set("spark.automem.supersession_local_max_walks", "0")
-    b = {(r.start, r.head, r.hops) for r in G.resolve_supersession(edges).collect()}
+    b = {
+        (r.start, r.head, r.hops)
+        for r in G.resolve_supersession(edges, local_max_walks=0).collect()
+    }
     assert len(calls) == 1  # join-loop path this time
     assert a == b
-
-
-def test_recall_fuse_knob_dispatches_fused_path(spark, sf_dir, _clean_conf):
-    # local fixture is far below the 1.5M-row crossover: default = composed
-    # two-scan shape; conf = 1 flips the same call to the one-scan fused
-    # plan (the bit-identity of the two shapes is pinned in
-    # test_recall_fused.py — here we only prove the knob reaches dispatch)
-    mem = E.memories_view(spark, sf_dir)
-    req = RecallRequest(query=E.RECALL_QUERY, limit=10)
-    two = recall(mem, req, now=E.NOW)
-    assert two._jdf.queryExecution().executedPlan().toString().count("Scan parquet") == 2
-    spark.conf.set("spark.automem.recall_fuse_scan_min_rows", "1")
-    one = recall(mem, req, now=E.NOW)
-    assert one._jdf.queryExecution().executedPlan().toString().count("Scan parquet") == 1

@@ -221,7 +221,7 @@ def test_ivf_quality_lab_decision_is_rederivable(spark):
     import json
     import os
 
-    from automem_spark.functions.ir_metrics import lab_decision
+    from ir_metrics import lab_decision
 
     path = os.path.join(os.path.dirname(__file__), "golden", "ivf_quality.json")
     with open(path) as f:
@@ -261,7 +261,7 @@ def test_ivf_quality_lab_clustered_decision_is_rederivable(spark):
     import json
     import os
 
-    from automem_spark.functions.ir_metrics import lab_decision
+    from ir_metrics import lab_decision
 
     path = os.path.join(
         os.path.dirname(__file__), "golden", "ivf_quality_clustered.json"
