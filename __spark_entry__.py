@@ -24,7 +24,11 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from automem_spark.functions import scorespec
-from automem_spark.functions.scoring import hybrid_score_expr, decay_relevance_expr
+from automem_spark.functions.scoring import (
+    decay_relevance_expr,
+    hybrid_score_sql_spark,
+    token_array_sql,
+)
 from automem_spark.functions.text import (
     assert_sql_literal_safe,
     fingerprint_fold_sql_duck,
@@ -88,7 +92,7 @@ from automem_spark.functions.tags import exclude_tags_expr
 from automem_spark.operators.recall import (
     adaptive_score_floor,
     inject_priority_ids,
-    recall_many,
+    recall_many_hybrid,
     recall_with_scope_fallback,
     recency_rerank,
 )
@@ -1416,26 +1420,11 @@ def q_cluster_summaries(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _scored_keyword_channel(spark: SparkSession, sf_dir: str, limit: int) -> DataFrame:
     """keyword channel + hybrid score, shared by the rerank/floor queries."""
-    from automem_spark.functions.scoring import hybrid_score_expr
-    from automem_spark.functions.text import extract_keywords as _ek
-
     mem = memories_view(spark, sf_dir)
     pool = base_filter(mem, RecallRequest())
     chan = keyword_channel(pool, RECALL_QUERY, limit)
-    return chan.withColumn(
-        "final_score",
-        hybrid_score_expr(
-            match_type=F.col("match_type"),
-            match_score=F.col("match_score"),
-            content=F.col("content"),
-            tags=F.col("tags"),
-            importance=F.col("importance"),
-            confidence=F.col("confidence"),
-            timestamp=F.col("timestamp"),
-            now=F.lit(NOW).cast("timestamp"),
-            tokens=_ek(RECALL_QUERY),
-        ),
-    )
+    tokens = token_array_sql(extract_keywords(RECALL_QUERY))
+    return chan.withColumn("final_score", F.expr(hybrid_score_sql_spark(tokens, NOW)))
 
 
 def q_adaptive_floor(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1973,7 +1962,7 @@ MULTI_QUERIES = [
 def q_multi_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R10/R11 multi-query fan-out: N recalls in one job (recall.py:2151-2223)."""
     mem = memories_view(spark, sf_dir)
-    out = recall_many(mem, MULTI_QUERIES, limit=5, now=NOW)
+    out = recall_many_hybrid(mem, MULTI_QUERIES, 5, now=NOW)
     return out.select(
         "query_id", "id",
         F.round("match_score", 6).alias("match_score"),
@@ -2008,8 +1997,6 @@ def q_multi_recall_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata sidecar (≤ min(limit,10)), channel-precedence dedup, X1/X2
     hybrid blend — multi-query ≡ N× single-query recall
     (recall.py:1939-2149 per sub-query, :2151-2223 for the fan-out)."""
-    from automem_spark.operators.recall import recall_many_hybrid
-
     mem = memories_view(spark, sf_dir)
     emb = _t(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("id"), "embedding"
@@ -2288,29 +2275,15 @@ def q_gated_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     unit tests)."""
     from dataclasses import replace as dc_replace
 
-    from automem_spark.functions.scoring import DEFAULT_WEIGHTS, hybrid_score_expr
+    from automem_spark.functions.scoring import DEFAULT_WEIGHTS
     from automem_spark.operators.recall import base_filter, keyword_channel
 
     mem = memories_view(spark, sf_dir)
     pool = base_filter(mem, RecallRequest())
     kw = keyword_channel(pool, RECALL_QUERY, 10)
     w = dc_replace(DEFAULT_WEIGHTS, relevance_gate=0.5)
-    tokens = extract_keywords(RECALL_QUERY)
-    scored = kw.withColumn(
-        "final_score",
-        hybrid_score_expr(
-            match_type=F.col("match_type"),
-            match_score=F.col("match_score"),
-            content=F.col("content"),
-            tags=F.col("tags"),
-            importance=F.col("importance"),
-            confidence=F.col("confidence"),
-            timestamp=F.col("timestamp"),
-            now=F.lit(NOW).cast("timestamp"),
-            tokens=tokens,
-            w=w,
-        ),
-    )
+    tokens = token_array_sql(extract_keywords(RECALL_QUERY))
+    scored = kw.withColumn("final_score", F.expr(hybrid_score_sql_spark(tokens, NOW, w)))
     return scored.select(
         "id",
         F.round("match_score", 6).alias("match_score"),
@@ -2497,7 +2470,7 @@ def q_auto_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     """R8/R9/R10 auto-decompose (recall.py:152-307, :2151-2223): one natural
     question -> entity/topic sub-queries, all run as ONE multi-recall job."""
     mem = memories_view(spark, sf_dir)
-    out = recall_many(mem, DECOMPOSED_QUERIES, limit=5, now=NOW)
+    out = recall_many_hybrid(mem, DECOMPOSED_QUERIES, 5, now=NOW)
     return out.select(
         "query_id", "id",
         F.round("match_score", 6).alias("match_score"),

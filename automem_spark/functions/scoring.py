@@ -1,9 +1,11 @@
-"""Hybrid recall scoring as pure column expressions.
+"""Hybrid recall scoring and the consolidation scores.
 
 Reimplements the reference's ~11-component linear score
-(automem/utils/scoring.py:137-280; weights automem/config.py:473-482) so the
-entire re-rank runs JVM-side inside whole-stage codegen — no Python in the
-hot path. Component gating rules (X2 in SURVEY.md §2.8) are CASE exprs.
+(automem/utils/scoring.py:137-280; weights automem/config.py:473-482) as
+ONE Spark-SQL emitter, `hybrid_score_sql_spark`, that every recall path
+parses with a single `F.expr` — the entire re-rank runs JVM-side, no Python
+in the hot path. Component gating rules (X2 in SURVEY.md §2.8) are CASE
+exprs. The Column-tree reference twin lives in tests/scoring_oracle.py.
 """
 
 from __future__ import annotations
@@ -13,7 +15,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from automem_spark.functions.text import assert_sql_literal_safe, content_tokens_expr
+from automem_spark.functions.text import assert_sql_literal_safe
 
 
 @dataclass(frozen=True)
@@ -55,59 +57,6 @@ class Weights:
 #: test_shipped_config_is_lab_decision_choice — the legacy blend must
 #: now LOSE to this one under pick_winner + the paired noise band).
 DEFAULT_WEIGHTS = Weights(recency=0.15, importance=0.05)
-
-
-def recency_score_expr(ts: Column, now: Column, w: Weights = DEFAULT_WEIGHTS) -> Column:
-    """Linear `1 - age_days/window` floored at 0, or exp half-life
-    `0.5^(age/window)` (scoring.py:66-81). Future timestamps -> 1.0."""
-    age_days = (now.cast("double") - ts.cast("double")) / 86400.0
-    age_days = F.greatest(age_days, F.lit(0.0))
-    if w.recency_curve == "exp":
-        score = F.pow(F.lit(0.5), age_days / w.recency_window_days)
-    else:
-        score = F.greatest(F.lit(0.0), F.lit(1.0) - age_days / w.recency_window_days)
-    return F.when(ts.isNull(), F.lit(0.0)).otherwise(score)
-
-
-def keyword_component_expr(
-    match_type: Column, match_score: Column, content: Column, tokens: list[str]
-) -> Column:
-    """Keyword component: clamped match_score for keyword/trending matches,
-    else content-token overlap fallback hits/len(tokens)
-    (scoring.py:185-196)."""
-    fallback = F.lit(0.0)
-    if tokens:
-        ctoks = content_tokens_expr(content)
-        hits = sum(
-            (F.array_contains(ctoks, t).cast("int") for t in tokens), F.lit(0)
-        )
-        fallback = F.when(
-            F.length(F.coalesce(content, F.lit(""))) > 0, hits / F.lit(float(len(tokens)))
-        ).otherwise(F.lit(0.0))
-    return F.when(
-        match_type.isin("keyword", "trending"),
-        F.least(F.lit(1.0), F.coalesce(match_score, F.lit(0.0))),
-    ).otherwise(fallback)
-
-
-def tag_score_expr(tags: Column, tokens: list[str], w: Weights = DEFAULT_WEIGHTS) -> Column:
-    """Token hits over lowercased tags / denominator (scoring.py:160-177).
-
-    NOTE round 1: metadata terms not yet included in the hit set (metadata
-    sidecar lands with the metadata channel); tags-only matches the corpus
-    we test on, which carries no metadata column.
-    """
-    if not tokens:
-        return F.lit(0.0)
-    lower_tags = F.transform(tags, lambda t: F.lower(t))
-    hits = sum(
-        (F.array_contains(lower_tags, t).cast("int") for t in tokens), F.lit(0)
-    )
-    if w.tag_score_token_cap > 0:
-        denom = max(min(len(tokens), w.tag_score_token_cap), 1)
-    else:
-        denom = max(len(tokens), 1)
-    return F.least(F.lit(1.0), hits / F.lit(float(denom)))
 
 
 def context_bonus_expr(
@@ -152,180 +101,117 @@ def context_bonus_expr(
     return bonus
 
 
-def hybrid_score_expr(
-    *,
-    match_type: Column,
-    match_score: Column,
-    content: Column,
-    tags: Column,
-    importance: Column,
-    confidence: Column,
-    timestamp: Column,
-    now: Column,
-    tokens: list[str],
-    relation_score: Column | None = None,
-    relevance_score: Column | None = None,
-    exact_match: Column | None = None,
-    context_bonus: Column | None = None,
-    w: Weights = DEFAULT_WEIGHTS,
-) -> Column:
-    """The full linear blend (scoring.py:250-262).
-
-    final = 0.35*vector + 0.35*keyword + 0.35*metadata + 0.25*relation
-          + 0.2*tag + 0.1*importance + 0.05*confidence + 0.1*recency
-          + 0.2*exact + 0.0*relevance + context_bonus
-    with per-component gating:
-      vector component only when match_type='vector';
-      metadata component only when match_type='metadata';
-      keyword: see keyword_component_expr.
-    """
-    zero = F.lit(0.0)
-    vector_c = F.when(match_type == "vector", F.coalesce(match_score, zero)).otherwise(zero)
-    keyword_c = keyword_component_expr(match_type, match_score, content, tokens)
-    metadata_c = F.when(match_type == "metadata", F.coalesce(match_score, zero)).otherwise(zero)
-    relation_c = F.coalesce(relation_score, zero) if relation_score is not None else zero
-    tag_c = tag_score_expr(tags, tokens, w)
-    importance_c = F.coalesce(importance.cast("double"), zero)
-    confidence_c = F.coalesce(confidence.cast("double"), zero)
-    recency_c = recency_score_expr(timestamp, now, w)
-    exact_c = F.coalesce(exact_match, zero) if exact_match is not None else zero
-    relevance_c = F.coalesce(relevance_score, zero) if relevance_score is not None else zero
-
-    # Within-pool relevance gate (scoring.py:229-236): when evidence
-    # (max of query-topical components) < gate, linearly ramp down the
-    # query-independent components. gate=0 (default) skips the branch so
-    # legacy scores stay bit-identical.
-    if tokens and w.relevance_gate > 0:
-        evidence = F.greatest(vector_c, keyword_c, metadata_c, exact_c)
-        scale = F.when(
-            evidence < F.lit(w.relevance_gate), evidence / F.lit(w.relevance_gate)
-        ).otherwise(F.lit(1.0))
-        importance_c = importance_c * scale
-        confidence_c = confidence_c * scale
-        recency_c = recency_c * scale
-        tag_c = tag_c * scale
-        relevance_c = relevance_c * scale
-
-    final = (
-        F.lit(w.vector) * vector_c
-        + F.lit(w.keyword) * keyword_c
-        + F.lit(w.metadata) * metadata_c
-        + F.lit(w.relation) * relation_c
-        + F.lit(w.tag) * tag_c
-        + F.lit(w.importance) * importance_c
-        + F.lit(w.confidence) * confidence_c
-        + F.lit(w.recency) * recency_c
-        + F.lit(w.exact) * exact_c
-        + F.lit(w.relevance) * relevance_c
-    )
-    if context_bonus is not None:
-        final = final + context_bonus
-    return final
+def token_array_sql(tokens: list[str]) -> str:
+    """Driver-side query tokens as a Spark-SQL array literal, the
+    ``tokens_sql`` argument of `hybrid_score_sql_spark` for single-query
+    scoring. Each token passes the charset contract at this interpolation
+    site (they land inside single-quoted literals)."""
+    if not tokens:
+        return "CAST(array() AS ARRAY<STRING>)"
+    return "array(" + ", ".join(
+        f"'{assert_sql_literal_safe(t, 'query token')}'" for t in tokens
+    ) + ")"
 
 
 def hybrid_score_sql_spark(
-    *,
-    tokens: list[str],
-    now: str,
-    w: Weights = DEFAULT_WEIGHTS,
-    match_type: str = "`match_type`",
-    match_score: str = "`match_score`",
-    content: str = "`content`",
-    tags: str = "`tags`",
-    importance: str = "`importance`",
-    confidence: str = "`confidence`",
-    timestamp: str = "`timestamp`",
+    tokens_sql: str, now: str, w: Weights = DEFAULT_WEIGHTS
 ) -> str:
-    """`hybrid_score_expr` (no optional components, relevance gate off) as
-    Spark-SQL text for the one-`F.expr` fast path.
+    """The X1 linear blend (scoring.py:250-262) as Spark-SQL text — the one
+    production scorer; every caller wraps it in a single `F.expr`.
 
-    Two let-bindings make the twin FASTER than the tree it mirrors, not
-    just cheaper to build: the Column form re-evaluates the content
-    tokenizer and the tag-lowering once per query token per row (Catalyst
-    does no CSE across higher-order-function arguments — the lang_id
-    no-CSE class); here `ctoks`/`ltags` bind them once per row. Every
-    numeric operand is CAST to DOUBLE in the Column twin's exact
-    association order; equivalence is pinned bit-identical by
-    tests/test_hybrid_score_fast.py."""
-    assert not (tokens and w.relevance_gate > 0), "gated path: use the tree"
-    # charset contract at the interpolation site (not just at the fold):
-    # these land inside single-quoted SQL literals below
-    for t in tokens:
-        assert_sql_literal_safe(t, "query token")
+    final = 0.35*vector + 0.35*keyword + 0.35*metadata + 0.2*tag
+          + 0.1*importance + 0.05*confidence + 0.1*recency
+    over the candidate columns `match_type`, `match_score`, `content`,
+    `tags`, `importance`, `confidence`, `timestamp`. The reference's
+    relation, exact-match and relevance components are always zero on
+    every path here, so they are not emitted (adding 0.0 is FP-neutral).
+
+    X2 gating: the vector/metadata components count only for rows that
+    channel matched; the keyword component is min(1, match_score) for
+    keyword/trending matches, else the content-token overlap
+    hits/|tokens| (scoring.py:185-196). The tag component is tag hits over
+    |tokens|, or over min(|tokens|, cap) with `tag_score_token_cap`; NULL
+    `tags` count as no tags. X3 recency is linear or exp half-life. The
+    X4 gate (scoring.py:229-236), when `relevance_gate` > 0 and the query
+    has tokens, ramps the query-independent components down by
+    evidence/gate where evidence = max(vector, keyword, metadata) < gate.
+
+    ``tokens_sql`` is an ARRAY<STRING> expression: a column (`tokens` in
+    multi-query recall) or `token_array_sql(tokens)`. Let-bindings
+    (`ctoks`, `ltags`) evaluate the content tokenizer and the tag
+    lowering once per row — Catalyst does no CSE across higher-order
+    function arguments. Every numeric operand is DOUBLE in the reference
+    twin's association order; tests/scoring_oracle.py keeps that Column
+    twin and tests/test_hybrid_score_fast.py pins the two bit-identical."""
     assert_sql_literal_safe(now, "now timestamp")
 
     def d(x: float) -> str:
         return f"CAST({x!r} AS DOUBLE)"
 
+    def hits(arr: str) -> str:
+        return (
+            f"aggregate({tokens_sql}, 0,"
+            f" (acc, qt) -> acc + CAST(array_contains({arr}, qt) AS INT))"
+        )
+
+    n_tokens = f"size({tokens_sql})"
+    tag_n = n_tokens
+    if w.tag_score_token_cap > 0:
+        tag_n = f"least({n_tokens}, {w.tag_score_token_cap})"
     vector_c = (
-        f"(CASE WHEN {match_type} = 'vector' THEN"
-        f" coalesce({match_score}, {d(0.0)}) ELSE {d(0.0)} END)"
+        "(CASE WHEN `match_type` = 'vector' THEN"
+        f" coalesce(`match_score`, {d(0.0)}) ELSE {d(0.0)} END)"
     )
     metadata_c = (
-        f"(CASE WHEN {match_type} = 'metadata' THEN"
-        f" coalesce({match_score}, {d(0.0)}) ELSE {d(0.0)} END)"
+        "(CASE WHEN `match_type` = 'metadata' THEN"
+        f" coalesce(`match_score`, {d(0.0)}) ELSE {d(0.0)} END)"
     )
-    if tokens:
-        hits = " + ".join(
-            f"CAST(array_contains(ctoks, '{t}') AS INT)" for t in tokens
-        )
-        fallback = (
-            f"(CASE WHEN length(coalesce({content}, '')) > 0 THEN"
-            f" ({hits}) / {d(float(len(tokens)))} ELSE {d(0.0)} END)"
-        )
-    else:
-        fallback = d(0.0)
     keyword_c = (
-        f"(CASE WHEN {match_type} IN ('keyword', 'trending') THEN"
-        f" least({d(1.0)}, coalesce({match_score}, {d(0.0)}))"
-        f" ELSE {fallback} END)"
+        "(CASE WHEN `match_type` IN ('keyword', 'trending') THEN"
+        f" least({d(1.0)}, coalesce(`match_score`, {d(0.0)}))"
+        " ELSE (CASE WHEN length(coalesce(`content`, '')) > 0 THEN"
+        f" {hits('ctoks')} / CAST(greatest({n_tokens}, 1) AS DOUBLE)"
+        f" ELSE {d(0.0)} END) END)"
     )
-    if tokens:
-        if w.tag_score_token_cap > 0:
-            denom = max(min(len(tokens), w.tag_score_token_cap), 1)
-        else:
-            denom = max(len(tokens), 1)
-        tag_hits = " + ".join(
-            f"CAST(array_contains(ltags, '{t}') AS INT)" for t in tokens
-        )
-        tag_c = f"least({d(1.0)}, ({tag_hits}) / {d(float(denom))})"
-    else:
-        tag_c = d(0.0)
-    importance_c = f"coalesce(CAST({importance} AS DOUBLE), {d(0.0)})"
-    confidence_c = f"coalesce(CAST({confidence} AS DOUBLE), {d(0.0)})"
+    tag_c = (
+        f"least({d(1.0)}, {hits('ltags')} / CAST(greatest({tag_n}, 1) AS DOUBLE))"
+    )
+    importance_c = f"coalesce(CAST(`importance` AS DOUBLE), {d(0.0)})"
+    confidence_c = f"coalesce(CAST(`confidence` AS DOUBLE), {d(0.0)})"
     now_d = f"CAST(CAST('{now}' AS TIMESTAMP) AS DOUBLE)"
     age = (
-        f"greatest(({now_d} - CAST({timestamp} AS DOUBLE)) / {d(86400.0)},"
+        f"greatest(({now_d} - CAST(`timestamp` AS DOUBLE)) / {d(86400.0)},"
         f" {d(0.0)})"
     )
     if w.recency_curve == "exp":
         rec = f"power({d(0.5)}, {age} / {d(w.recency_window_days)})"
     else:
         rec = f"greatest({d(0.0)}, {d(1.0)} - {age} / {d(w.recency_window_days)})"
-    recency_c = (
-        f"(CASE WHEN {timestamp} IS NULL THEN {d(0.0)} ELSE {rec} END)"
-    )
-    # the Column twin's exact term order, including the zero-lit optional
-    # components (adding 0.0 is FP-neutral but keeps association identical)
+    recency_c = f"(CASE WHEN `timestamp` IS NULL THEN {d(0.0)} ELSE {rec} END)"
+    if w.relevance_gate > 0:
+        gate = d(w.relevance_gate)
+        evidence = f"greatest({vector_c}, {keyword_c}, {metadata_c})"
+        scale = (
+            f"(CASE WHEN {n_tokens} > 0 AND {evidence} < {gate}"
+            f" THEN {evidence} / {gate} ELSE {d(1.0)} END)"
+        )
+        tag_c, importance_c, confidence_c, recency_c = (
+            f"({c} * {scale})" for c in (tag_c, importance_c, confidence_c, recency_c)
+        )
     final = (
         f"{d(w.vector)} * {vector_c}"
         f" + {d(w.keyword)} * {keyword_c}"
         f" + {d(w.metadata)} * {metadata_c}"
-        f" + {d(w.relation)} * {d(0.0)}"
         f" + {d(w.tag)} * {tag_c}"
         f" + {d(w.importance)} * {importance_c}"
         f" + {d(w.confidence)} * {confidence_c}"
         f" + {d(w.recency)} * {recency_c}"
-        f" + {d(w.exact)} * {d(0.0)}"
-        f" + {d(w.relevance)} * {d(0.0)}"
     )
-    if not tokens:  # no bindings referenced — skip the wrappers
-        return final
     ctoks = (
-        f"array_distinct(regexp_extract_all(lower({content}),"
+        "array_distinct(regexp_extract_all(lower(`content`),"
         " '\\\\b[a-z0-9]+\\\\b', 0))"
     )
-    ltags = f"transform({tags}, tg -> lower(tg))"
+    ltags = "transform(coalesce(`tags`, array()), tg -> lower(tg))"
     return (
         f"element_at(transform(array({ctoks}), ctoks ->"
         f" element_at(transform(array({ltags}), ltags -> {final}), 1)), 1)"

@@ -148,13 +148,3 @@ def first_sentence_summary_expr(content: Column, max_len: int = 240) -> Column:
     )
     return F.trim(truncated)
 
-
-def content_tokens_expr(content: Column) -> Column:
-    r"""`\b[a-z0-9]+\b` token set of lowercased content — the
-    keyword-component fallback tokenizer in hybrid scoring
-    (automem/utils/scoring.py:188-194). The word boundaries matter:
-    underscore-joined content like `foo_bar` yields NO tokens (underscore is
-    a word char, so no boundary exists), matching the reference."""
-    return F.array_distinct(
-        F.regexp_extract_all(F.lower(content), F.lit(r"\b[a-z0-9]+\b"), 0)
-    )

@@ -2,7 +2,7 @@
 
 Driver-side per-query parsing (SURVEY.md §4.2 item 5) that turns one natural
 question into a list of sub-queries, which then run as ONE Spark job through
-``recall_many`` (queries-as-DataFrame fan-out).
+``recall_many_hybrid`` (queries-as-DataFrame fan-out).
 
 Reference semantics:
 - R8 entity extraction: capitalized-word heuristic + possessive regex with a

@@ -213,7 +213,7 @@ def entity_expand(
     """
     from pyspark.sql import Window
 
-    from automem_spark.functions.scoring import hybrid_score_expr
+    from automem_spark.functions.scoring import hybrid_score_sql_spark, token_array_sql
 
     slugs = (
         seeds.select(F.explode("tags").alias("tag"))
@@ -242,20 +242,14 @@ def entity_expand(
         .filter(F.col("_rid") == 1)
         .drop("_r", "_rid")
     )
-    scored = cand.withColumn(
-        "final_score",
-        hybrid_score_expr(
-            match_type=F.lit("entity_expansion"),
-            match_score=F.lit(0.0),
-            content=F.col("content"),
-            tags=F.col("tags"),
-            importance=F.col("importance"),
-            confidence=F.col("confidence"),
-            timestamp=F.col("timestamp"),
-            now=F.lit(now).cast("timestamp"),
-            tokens=query_tokens,
+    scored = (
+        cand.withColumn("match_type", F.lit("entity_expansion"))
+        .withColumn("match_score", F.lit(0.0))
+        .withColumn(
+            "final_score",
+            F.expr(hybrid_score_sql_spark(token_array_sql(query_tokens), now))
+            + F.lit(boost),
         )
-        + F.lit(boost),
     )
     return (
         scored.select(

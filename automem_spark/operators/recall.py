@@ -12,9 +12,11 @@ reference's seen-id ordering, recall.py:1956-2062), then one score expression
 re-ranks. Everything is JVM column expressions; the only Python is per-query
 keyword extraction on the driver.
 
-Scale notes: the corpus scan is shared across channels (one cached projection),
-filters are pushed to the parquet scan, and the final sort is a top-k
-(TakeOrderedAndProject), never a full sort at 100 TB.
+Scale notes: nothing is cached — each channel is its own subtree over
+`base_filter`'s pool, so a recall with a query vector evaluates the vector
+channel three times (as a channel, in the keyword channel's anti-join, and
+in the remaining-slot count). Filters are pushed to the parquet scan, and
+the final sort is a top-k (TakeOrderedAndProject), never a full sort.
 """
 
 from __future__ import annotations
@@ -24,7 +26,12 @@ from dataclasses import dataclass, field, replace
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from automem_spark.functions.scoring import DEFAULT_WEIGHTS, Weights, hybrid_score_expr
+from automem_spark.functions.scoring import (
+    DEFAULT_WEIGHTS,
+    Weights,
+    hybrid_score_sql_spark,
+    token_array_sql,
+)
 from automem_spark.functions.tags import exclude_tags_expr, tag_filter_expr
 from automem_spark.functions.text import extract_keywords, fingerprint_fold_sql_spark
 from automem_spark.plans.checkpoint import maybe_checkpoint
@@ -201,135 +208,6 @@ def vector_channel(
     )
 
 
-def recall_many(
-    memories: DataFrame,
-    queries: list[tuple[str, str]],
-    limit: int,
-    *,
-    now: str = "2026-06-01 00:00:00",
-    w: Weights = DEFAULT_WEIGHTS,
-) -> DataFrame:
-    """Multi-query recall as ONE job (R10/R11, recall.py:1740-1742,
-    :2151-2223) — the queries-as-DataFrame design from SURVEY.md §3.1: N
-    recall requests broadcast against a single corpus pass instead of N
-    sequential store round-trips. This is the LoCoMo/LongMemEval harness
-    shape (hundreds of questions over one corpus).
-
-    queries: [(query_id, query_text)] — tokens extracted driver-side with
-    the reference tokenizer so semantics match single-query recall exactly.
-    Output: (query_id, id, match_score, final_score, rank<=limit per query).
-
-    Plan shape: corpus scan (shared, filters pushed down) × broadcast
-    queries → keyword score via an aggregate() over the per-query token
-    array → per-query window top-k. One shuffle (the window), regardless of
-    query count.
-    """
-    spark = memories.sparkSession
-    rows = []
-    for qid, text in queries:
-        normalized = text.strip().lower()
-        toks = extract_keywords(normalized)
-        phrase = normalized if len(normalized) >= 3 else ""
-        rows.append((qid, toks, phrase, 3 * len(toks) + (3 if phrase else 0)))
-    qdf = F.broadcast(
-        spark.createDataFrame(
-            rows, "query_id string, tokens array<string>, phrase string, max_raw int"
-        )
-    )
-
-    pool = base_filter(memories, RecallRequest())
-    # r14: bind lowered content/tags per corpus row BEFORE the query cross
-    # join. Inline, both subtrees sat in the kw_raw/tag_hits lambda bodies
-    # and re-evaluated per (row × query × token) — lambda bodies re-run
-    # per element and Catalyst does not CSE across HOF lambdas. Bound,
-    # they run once per corpus row; all references are attribute reads.
-    # Values unchanged (multi_recall oracle row + two-phase-ordering tests
-    # pin the scores).
-    pool = pool.withColumn(
-        "_kw_content", F.lower(F.coalesce(F.col("content"), F.lit("")))
-    ).withColumn(
-        "_kw_tags",
-        F.transform(F.coalesce(F.col("tags"), F.array()), lambda t: F.lower(t)),
-    )
-    content = F.col("_kw_content")
-    tags_l = F.col("_kw_tags")
-
-    kw_raw = F.aggregate(
-        F.col("tokens"),
-        F.lit(0),
-        lambda acc, kw: acc
-        + F.when(content.contains(kw), F.lit(2)).otherwise(F.lit(0))
-        + F.when(F.exists(tags_l, lambda t: t.contains(kw)), F.lit(1)).otherwise(F.lit(0)),
-    )
-    phrase_bonus = F.when(
-        (F.col("phrase") != "") & content.contains(F.col("phrase")), F.lit(2)
-    ).otherwise(F.lit(0)) + F.when(
-        (F.col("phrase") != "") & F.exists(tags_l, lambda t: t.contains(F.col("phrase"))),
-        F.lit(1),
-    ).otherwise(F.lit(0))
-
-    scored = (
-        pool.crossJoin(qdf)
-        .withColumn("raw_score", (kw_raw + phrase_bonus).cast("double"))
-        .filter(F.col("raw_score") > 0)
-        .withColumn(
-            "match_score",
-            F.least(F.lit(1.0), F.col("raw_score") / F.col("max_raw").cast("double")),
-        )
-    )
-    # hybrid re-score (keyword channel semantics: keyword_c = min(1, score),
-    # tag_score over the query's own tokens)
-    now_col = F.lit(now).cast("timestamp")
-    tag_hits = F.aggregate(
-        F.col("tokens"),
-        F.lit(0),
-        lambda acc, kw: acc + F.array_contains(tags_l, kw).cast("int"),
-    )
-    tag_score = F.when(
-        F.size(F.col("tokens")) > 0,
-        F.least(F.lit(1.0), tag_hits / F.size(F.col("tokens")).cast("double")),
-    ).otherwise(F.lit(0.0))
-    recency = F.when(F.col("timestamp").isNull(), F.lit(0.0)).otherwise(
-        F.greatest(
-            F.lit(0.0),
-            F.lit(1.0)
-            - F.greatest((now_col.cast("double") - F.col("timestamp").cast("double")) / 86400.0, F.lit(0.0))
-            / F.lit(w.recency_window_days),
-        )
-    )
-    final = (
-        F.lit(w.keyword) * F.least(F.lit(1.0), F.col("match_score"))
-        + F.lit(w.tag) * tag_score
-        + F.lit(w.importance) * F.coalesce(F.col("importance"), F.lit(0.0))
-        + F.lit(w.confidence) * F.coalesce(F.col("confidence"), F.lit(0.0))
-        + F.lit(w.recency) * recency
-    )
-    scored = scored.withColumn("final_score", final)
-    # Two-phase ordering, exactly N× single-query recall (r12): slot
-    # SELECTION is the keyword channel's raw ordering (raw DESC,
-    # importance, timestamp, id — runtime_recall_helpers.py:595-724), but
-    # the OUTPUT rank is the W1 blended sort the single-query path applies
-    # after scoring (final DESC, match_score, importance, timestamp, id).
-    # Before r12 the raw rank was also the output rank, so batch recall
-    # disagreed with recall() whenever the blend reordered the kept
-    # candidates — surfaced by the XL QA near-dup family. Both windows
-    # share the query_id partitioning, so Catalyst plans ONE exchange.
-    w_slot = Window.partitionBy("query_id").orderBy(
-        F.desc("raw_score"), F.desc("importance"), F.desc("timestamp"), F.asc("id")
-    )
-    kept = scored.withColumn("_slot", F.row_number().over(w_slot)).filter(
-        F.col("_slot") <= limit
-    )
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.desc("final_score"), F.desc("match_score"), F.desc("importance"),
-        F.desc("timestamp"), F.asc("id"),
-    )
-    return (
-        kept.withColumn("rank", F.row_number().over(w_rank))
-        .select("query_id", "id", "match_score", "final_score", "rank")
-    )
-
-
 def recall_many_hybrid(
     memories: DataFrame,
     queries: list[tuple[str, str]],
@@ -412,9 +290,10 @@ def recall_many_hybrid(
     winners = maybe_checkpoint(winners)
     n_vec = winners.groupBy("query_id").agg(F.count("*").alias("_n_vec"))
 
-    # r14: bind lowered content/tags once per corpus row before the query
-    # cross join (see recall_many — the inline subtrees re-evaluated per
-    # (row × query × token) inside the HOF lambda bodies)
+    # r14: bind lowered content/tags once per corpus row BEFORE the query
+    # cross join. Inline, both subtrees sat in the kw_raw lambda bodies and
+    # re-evaluated per (row × query × token) — lambda bodies re-run per
+    # element and Catalyst does not CSE across HOF lambdas.
     j = pool.withColumn(
         "_kw_content", F.lower(F.coalesce(F.col("content"), F.lit("")))
     ).withColumn(
@@ -538,72 +417,13 @@ def recall_many_hybrid(
     # broadcast back against the corpus (never the reverse) ---
     cand = (
         pool.select("id", "content", "tags", "importance", "confidence", "timestamp")
-        .withColumn(
-            "_kw_tags",
-            F.transform(F.coalesce(F.col("tags"), F.array()), lambda t: F.lower(t)),
-        )
         .join(F.broadcast(cand), "id")
         .join(qdf, "query_id")
     )
-
-    # --- X1/X2 hybrid blend with per-query token arrays ---
-    now_col = F.lit(now).cast("timestamp")
-    from automem_spark.functions.text import content_tokens_expr
-
-    # bound once per candidate row (the kw_hits lambda re-evaluates its
-    # body per token — same no-CSE class as the channel scoring above)
-    cand = cand.withColumn("_kw_ctoks", content_tokens_expr(F.col("content")))
-    ctoks = F.col("_kw_ctoks")
-    kw_hits = F.aggregate(
-        F.col("tokens"),
-        F.lit(0),
-        lambda acc, kw: acc + F.array_contains(ctoks, kw).cast("int"),
+    # --- X1/X2 hybrid blend over each query's own token array ---
+    cand = cand.withColumn(
+        "final_score", F.expr(hybrid_score_sql_spark("`tokens`", now, w))
     )
-    kw_fallback = F.when(
-        (F.size(F.col("tokens")) > 0)
-        & (F.length(F.coalesce(F.col("content"), F.lit(""))) > 0),
-        kw_hits / F.size(F.col("tokens")).cast("double"),
-    ).otherwise(F.lit(0.0))
-    keyword_c = F.when(
-        F.col("match_type").isin("keyword", "trending"),
-        F.least(F.lit(1.0), F.coalesce(F.col("match_score"), F.lit(0.0))),
-    ).otherwise(kw_fallback)
-    vector_c = F.when(
-        F.col("match_type") == "vector", F.coalesce(F.col("match_score"), F.lit(0.0))
-    ).otherwise(F.lit(0.0))
-    metadata_c = F.when(
-        F.col("match_type") == "metadata", F.coalesce(F.col("match_score"), F.lit(0.0))
-    ).otherwise(F.lit(0.0))
-    tag_hits = F.aggregate(
-        F.col("tokens"),
-        F.lit(0),
-        lambda acc, kw: acc + F.array_contains(tags_l, kw).cast("int"),
-    )
-    tag_c = F.when(
-        F.size(F.col("tokens")) > 0,
-        F.least(F.lit(1.0), tag_hits / F.size(F.col("tokens")).cast("double")),
-    ).otherwise(F.lit(0.0))
-    recency_c = F.when(F.col("timestamp").isNull(), F.lit(0.0)).otherwise(
-        F.greatest(
-            F.lit(0.0),
-            F.lit(1.0)
-            - F.greatest(
-                (now_col.cast("double") - F.col("timestamp").cast("double")) / 86400.0,
-                F.lit(0.0),
-            )
-            / F.lit(w.recency_window_days),
-        )
-    )
-    final = (
-        F.lit(w.vector) * vector_c
-        + F.lit(w.keyword) * keyword_c
-        + F.lit(w.metadata) * metadata_c
-        + F.lit(w.tag) * tag_c
-        + F.lit(w.importance) * F.coalesce(F.col("importance"), F.lit(0.0))
-        + F.lit(w.confidence) * F.coalesce(F.col("confidence"), F.lit(0.0))
-        + F.lit(w.recency) * recency_c
-    )
-    cand = cand.withColumn("final_score", final)
 
     w_rank = Window.partitionBy("query_id").orderBy(
         F.desc("final_score"), F.desc("match_score"), F.desc("importance"),
@@ -629,18 +449,7 @@ def recall_with_scope_fallback(
     pool. Output adds `in_scope` and a stable `position`.
     """
     scoped = recall(memories, req, now=now).withColumn("in_scope", F.lit(True))
-    unscoped_req = RecallRequest(
-        query=req.query,
-        limit=req.limit,
-        exclude_tags=req.exclude_tags,
-        tag_mode=req.tag_mode,
-        tag_match=req.tag_match,
-        start=req.start,
-        end=req.end,
-        min_score=req.min_score,
-        sort=req.sort,
-        weights=req.weights,
-    )
+    unscoped_req = replace(req, tags=[])
     fallback_pool = memories.filter(
         ~tag_filter_expr(F.col("tags"), req.tags, mode=req.tag_mode, match=req.tag_match)
     )
@@ -860,23 +669,11 @@ def recall_full(
 
     pool = base_filter(memories, req)
     tokens = extract_keywords(req.query.strip().lower())
-    now_col = F.lit(now).cast("timestamp")
 
     # 3b-3f: keyword channel + hybrid score + X5 context bonus
     seeds = keyword_channel(pool, req.query, req.limit).withColumn(
         "final_score",
-        hybrid_score_expr(
-            match_type=F.col("match_type"),
-            match_score=F.col("match_score"),
-            content=F.col("content"),
-            tags=F.col("tags"),
-            importance=F.col("importance"),
-            confidence=F.col("confidence"),
-            timestamp=F.col("timestamp"),
-            now=now_col,
-            tokens=tokens,
-            w=req.weights,
-        )
+        F.expr(hybrid_score_sql_spark(token_array_sql(tokens), now, req.weights))
         + context_bonus_expr(
             tags=F.col("tags"),
             mem_type=F.col("type"),
@@ -1029,30 +826,10 @@ def recall(
     for ch in channels[1:]:
         candidates = candidates.unionByName(ch)
 
-    now_col = F.lit(now).cast("timestamp")
-    if not (tokens and req.weights.relevance_gate > 0):
-        # the X1 blend over plain candidate columns — one-F.expr fast path
-        # (the tree costs ~0.24s of py4j calls per query and re-runs the
-        # content tokenizer per token per row; equivalence test-pinned)
-        from automem_spark.functions.scoring import hybrid_score_sql_spark
-
-        score_col = F.expr(
-            hybrid_score_sql_spark(tokens=tokens, now=now, w=req.weights)
-        )
-    else:
-        score_col = hybrid_score_expr(
-            match_type=F.col("match_type"),
-            match_score=F.col("match_score"),
-            content=F.col("content"),
-            tags=F.col("tags"),
-            importance=F.col("importance"),
-            confidence=F.col("confidence"),
-            timestamp=F.col("timestamp"),
-            now=now_col,
-            tokens=tokens,
-            w=req.weights,
-        )
-    scored = candidates.withColumn("final_score", score_col)
+    scored = candidates.withColumn(
+        "final_score",
+        F.expr(hybrid_score_sql_spark(token_array_sql(tokens), now, req.weights)),
+    )
     if req.min_score is not None:
         scored = scored.filter(F.col("final_score") >= req.min_score)  # F9
     deduped = dedup_results(scored)

@@ -2,7 +2,7 @@
 
 Pins, from one deterministic run:
 - accuracy + every per-question verdict AND evidence ids (330 questions,
-  answered through the real paths: one recall_many batch, per-window
+  answered through the real paths: one recall_many_hybrid batch, per-window
   scoped batches, recall_full for the supersession family);
 - the shipped config's per-question NDCG@3 series from the sampled lab
   scorecard, plus the full ablation cards and the lab_decision record.
@@ -22,7 +22,7 @@ answers all 16 correctly.
 Headroom (r11 verdict ask #4): min_accuracy now sits ~0.88 — the
 paraphrase / multi_hop / near_dup families are built to be missed by the
 shipped config (keyword channel blind to paraphrase; no join for 2-hop
-composition; recall_many's by-design raw-score ranking puts the
+composition; recall_many_hybrid's raw-score slot selection puts the
 higher-importance near-dup draft above the newer decided row — the
 measurable target for a future blended batch ranking). The fp_twin
 sub-family (X9 fingerprint-radius twins, differing past char 320) passes

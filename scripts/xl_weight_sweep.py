@@ -1,7 +1,7 @@
 """Empirical weight sweep over the XL QA families (r12 verdict ask #3).
 
 Runs the full XL question set under candidate Weights configs through the
-same batch paths the baseline uses (recall_many for flat/scoped questions,
+same batch paths the baseline uses (recall_many_hybrid for flat/scoped questions,
 recall_full untouched for the supersession probes) and prints per-category
 accuracy per config — the instrument for choosing which candidate to take
 into the lab_decision gate.
@@ -23,7 +23,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 import qa_xl  # noqa: E402
 from automem_spark.functions.scoring import DEFAULT_WEIGHTS, Weights  # noqa: E402
-from automem_spark.operators.recall import recall_many  # noqa: E402
+from automem_spark.operators.recall import recall_many_hybrid  # noqa: E402
 from automem_spark.session import get_spark  # noqa: E402
 
 CONFIGS = {
@@ -53,7 +53,7 @@ def answer_all_weighted(spark, w: Weights) -> dict[str, list[int]]:
     def batch_answers(pool, questions):
         pairs = [(q["qid"], q["query"]) for q in questions]
         rows = (
-            recall_many(pool, pairs, limit=qa_xl.TOP_K, now=qa_xl.NOW, w=w)
+            recall_many_hybrid(pool, pairs, qa_xl.TOP_K, now=qa_xl.NOW, w=w)
             .orderBy("query_id", "rank")
             .collect()
         )

@@ -204,12 +204,12 @@ def answer_decomposed(memories: DataFrame, question: dict) -> list[int]:
     auto_decompose + queries_to_run loop, recall.py:2151-2223). Evidence =
     per-sub-query top ids, deduplicated in (query, rank) order."""
     from automem_spark.operators.decompose import decompose_query
-    from automem_spark.operators.recall import recall_many
+    from automem_spark.operators.recall import recall_many_hybrid
 
     subs = decompose_query(question["query"])
     pairs = [(f"q{i:02d}", s) for i, s in enumerate(subs)]
     rows = (
-        recall_many(memories, pairs, limit=TOP_K, now=NOW)
+        recall_many_hybrid(memories, pairs, TOP_K, now=NOW)
         .orderBy("query_id", "rank")
         .collect()
     )

@@ -11,7 +11,7 @@ temporal scoping, and abstention questions whose tokens provably appear
 nowhere in the corpus (asserted at generation time).
 
 Answering uses the engine's BATCH design point: every standard and
-abstention question runs through ONE recall_many job (queries-as-
+abstention question runs through ONE recall_many_hybrid job (queries-as-
 DataFrame, SURVEY.md §3.1 — the LoCoMo harness shape), temporal-scoped
 questions run one batch per distinct window over an F5-filtered pool,
 and the supersession questions go through the full recall_full
@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from automem_spark.functions.text import extract_keywords
 from automem_spark.operators.enrichment import classify_memory_expr
-from automem_spark.operators.recall import RecallRequest, recall_full, recall_many
+from automem_spark.operators.recall import RecallRequest, recall_full, recall_many_hybrid
 
 NOW = "2026-06-01 00:00:00"
 TOP_K = 3
@@ -558,11 +558,11 @@ def build_edges(spark: SparkSession) -> DataFrame:
 def _batch_answers(
     memories: DataFrame, questions: list[dict], *, limit: int = TOP_K
 ) -> dict[str, list[int]]:
-    """All questions as ONE recall_many job → qid -> top ids by rank.
+    """All questions as ONE recall_many_hybrid job → qid -> top ids by rank.
     Questions absent from the result (no match) map to []."""
     pairs = [(q["qid"], q["query"]) for q in questions]
     rows = (
-        recall_many(memories, pairs, limit=limit, now=NOW)
+        recall_many_hybrid(memories, pairs, limit, now=NOW)
         .orderBy("query_id", "rank")
         .collect()
     )
@@ -636,7 +636,7 @@ def run_all(spark: SparkSession) -> dict:
 # Sampled lab scorecard: the XL corpus is big enough for weight ablations to
 # separate (the mini's binary containment ties at 100%); a seeded question
 # sample keeps the gate inside the pytest budget. Ablations run through
-# single-query recall(): since r12 recall_many's OUTPUT rank is the same
+# single-query recall(): recall_many_hybrid's OUTPUT rank is the same
 # W1 blended sort (slot selection stays raw-score, like the single-query
 # keyword channel), but recall() remains the per-config ablation surface
 # because overrides thread through RecallRequest there.

@@ -5,7 +5,7 @@ from pyspark.sql import functions as F
 
 from automem_spark.operators.consolidation import creative_pairs, forget_classify
 from automem_spark.operators.enrichment import classify_memory_expr, detect_patterns_batch
-from automem_spark.operators.recall import RecallRequest, recall, recall_many
+from automem_spark.operators.recall import RecallRequest, recall, recall_many_hybrid
 from automem_spark.sources.graph_fixture import edges_view
 from automem_spark.sources.tables import load_table, memories_view
 
@@ -88,7 +88,7 @@ def test_recall_many_matches_single(spark, sf_dir):
     q = "spark window merge fast"
     single = recall(mem, RecallRequest(query=q, limit=5), now=NOW).collect()
     many = (
-        recall_many(mem, [("q0", q)], limit=5, now=NOW).orderBy("rank").collect()
+        recall_many_hybrid(mem, [("q0", q)], 5, now=NOW).orderBy("rank").collect()
     )
     assert [r.id for r in single] == [r.id for r in many]
     s_scores = {r.id: round(r.final_score, 9) for r in single}

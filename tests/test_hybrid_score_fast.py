@@ -1,21 +1,27 @@
-"""Equivalence pins for the X1 hybrid-score blend's two builds.
+"""Bit-identity pins for the X1 hybrid-score blend.
 
-`hybrid_score_expr` (Column reference twin) vs `hybrid_score_sql_spark`
-(the one-`F.expr` fast path recall() ships when the relevance gate is
-off) — bit-identical across match types, null columns, future
-timestamps, both recency curves, and the token-cap knob.
+The engine scores with ONE Spark-SQL emitter, `hybrid_score_sql_spark`,
+parsed by a single `F.expr` on every recall path. Its reference twin is
+the Column tree in tests/scoring_oracle.py. The two must agree exactly
+(`==`) across match types, NULL columns (NULL tags count as no tags),
+future timestamps, both recency curves, the tag-denominator cap, the X4
+relevance gate, and both token forms: a literal `array(...)` (single-query
+recall) and a token column (multi-query recall).
 
 Reference: automem/utils/scoring.py:137-280.
 """
 
+from dataclasses import replace
+
 import pytest
 from pyspark.sql import functions as F
+from scoring_oracle import hybrid_score_expr
 
 from automem_spark.functions.scoring import (
     DEFAULT_WEIGHTS,
     Weights,
-    hybrid_score_expr,
     hybrid_score_sql_spark,
+    token_array_sql,
 )
 
 NOW = "2026-06-01 00:00:00"
@@ -29,6 +35,7 @@ ROWS = [
     (5, "relation", None, "window fast spark merge extra", ["SPARK", "fast"], 1.0, 1.0, "2020-01-01 00:00:00"),
     (6, "other", 0.5, "", None, 0.3, 0.4, "2026-03-15 08:30:00"),
     (7, "keyword", None, "foo_bar underscore no tokens", ["merge"], 0.2, 0.6, "2026-05-31 23:59:59"),
+    (8, "vector", 0.05, "merge notes only", ["Window"], 0.7, 0.8, "2026-05-01 00:00:00"),  # under the gate
 ]
 
 TOKEN_SETS = [["spark", "window", "merge", "fast"], ["spark"], []]
@@ -37,6 +44,7 @@ WEIGHTS = [
     DEFAULT_WEIGHTS,
     Weights(recency_curve="exp"),
     Weights(tag_score_token_cap=2),
+    replace(DEFAULT_WEIGHTS, relevance_gate=0.5),
 ]
 
 
@@ -66,17 +74,38 @@ def test_fast_blend_bit_identical(frame, tokens, widx):
         tokens=tokens,
         w=w,
     )
-    fast = F.expr(hybrid_score_sql_spark(tokens=tokens, now=NOW, w=w))
-    rows = frame.select("id", tree.alias("tree"), fast.alias("fast")).collect()
+    literal = F.expr(hybrid_score_sql_spark(token_array_sql(tokens), NOW, w))
+    column = F.expr(hybrid_score_sql_spark("`tokens`", NOW, w))
+    rows = (
+        frame.withColumn("tokens", F.expr(token_array_sql(tokens)))
+        .select("id", tree.alias("tree"), literal.alias("lit"), column.alias("col"))
+        .collect()
+    )
+    assert len(rows) == len(ROWS)
     for r in rows:
-        assert r["tree"] == r["fast"], (r["id"], tokens, widx, r["tree"], r["fast"])
-
-
-def test_gated_weights_refuse_fast_path():
-    with pytest.raises(AssertionError):
-        hybrid_score_sql_spark(
-            tokens=["spark"], now=NOW, w=Weights(relevance_gate=0.2)
+        assert r["tree"] == r["lit"] == r["col"], (
+            r["id"], tokens, widx, r["tree"], r["lit"], r["col"]
         )
+
+
+def test_null_tags_score_no_tag_component(spark):
+    """NULL `tags` give a tag component of 0, not 1: hand-computed score of
+    a keyword hit through recall(). Query "spark" on content "spark notes":
+    raw 2 (content) + 2 (whole phrase) over 3*1+3 -> match_score 4/6;
+    final = 0.35*4/6 + 0.2*0 + 0.05*0.5 + 0.05*0.5 + 0.15*1 (age 0)."""
+    from datetime import datetime
+
+    from automem_spark.operators.recall import RecallRequest, recall
+
+    mem = spark.createDataFrame(
+        [(1, "spark notes", None, 0.5, 0.5, datetime(2026, 6, 1), False, "Note")],
+        "id long, content string, tags array<string>, importance double,"
+        " confidence double, timestamp timestamp, archived boolean, type string",
+    )
+    (row,) = recall(mem, RecallRequest(query="spark", limit=5), now=NOW).collect()
+    expected = 0.35 * (4 / 6) + 0.05 * 0.5 + 0.05 * 0.5 + 0.15 * 1.0
+    assert row["match_score"] == pytest.approx(4 / 6, abs=1e-12)
+    assert row["final_score"] == pytest.approx(expected, abs=1e-12)
 
 
 def test_keyword_raw_score_sql_matches_tree(spark):
@@ -167,8 +196,8 @@ def test_dedup_key_sql_matches_tree(spark):
 
 
 def test_recall_ships_identical_scores(spark, sf_dir):
-    """End-to-end: recall() (fast path) returns the same frame as a
-    tree-scored rebuild of the same candidates."""
+    """End-to-end: recall() scores its page through the emitter and
+    returns the same scores on a second build."""
     from __spark_entry__ import RECALL_QUERY, memories_view
     from automem_spark.operators.recall import RecallRequest, recall
 

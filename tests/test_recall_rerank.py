@@ -74,36 +74,61 @@ def test_recency_rerank_single_row_no_div_zero(spark):
 def test_recall_many_hybrid_equals_n_single_recalls(spark, sf_dir):
     """R10/R11 contract: the one-pass multi-query fan-out must return, per
     query, exactly what N independent single-query recall() calls return
-    (same ids, channels, scores at 5dp) — the LoCoMo harness shape."""
-    import __spark_entry__ as entry
-    from automem_spark.operators.recall import RecallRequest, recall
+    (same ids, channels, scores to 1e-9) — the LoCoMo harness shape. Checked
+    under every blend knob (recency curve, tag-denominator cap, relevance
+    gate), so a knob one path honours and the other ignores fails here.
+    The weight sets run in one test to keep its id stable."""
+    from dataclasses import replace
 
-    multi = {
-        (r.query_id, r.id): (r.match_type, r.match_score, r.final_score)
-        for r in entry.q_multi_recall_hybrid(spark, sf_dir).collect()
-    }
+    import __spark_entry__ as entry
+    from automem_spark.functions.scoring import DEFAULT_WEIGHTS, Weights
+    from automem_spark.operators.recall import RecallRequest, recall, recall_many_hybrid
+
     mem = entry.memories_view(spark, sf_dir)
     emb = entry._t(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("id"), "embedding"
     )
     corpus = mem.join(emb.hint("merge"), "id")
-    for qid, text in entry.MULTI_HYBRID_QUERIES:
-        vid = entry.MULTI_HYBRID_VECTOR_IDS.get(qid)
-        qv = entry._query_embedding(spark, sf_dir, vid) if vid is not None else None
-        single = recall(
-            corpus,
-            RecallRequest(query=text, limit=entry.MULTI_HYBRID_LIMIT),
-            query_vector=qv,
-            now=entry.NOW,
-        ).select("id", "match_type", "match_score", "final_score").collect()
-        got = {(q, i) for (q, i) in multi if q == qid}
-        want = {(qid, r.id) for r in single}
-        assert got == want, f"{qid}: id sets differ: {got ^ want}"
-        for r in single:
-            mt, ms, fs = multi[(qid, r.id)]
-            assert mt == r.match_type, (qid, r.id, mt, r.match_type)
-            assert ms == pytest.approx(round(r.match_score, 5), abs=2e-5)
-            assert fs == pytest.approx(round(r.final_score, 5), abs=2e-5)
+    vecs = {
+        qid: entry._query_embedding(spark, sf_dir, vid)
+        for qid, vid in entry.MULTI_HYBRID_VECTOR_IDS.items()
+    }
+    weight_sets = {
+        "default": DEFAULT_WEIGHTS,
+        "exp": Weights(recency_curve="exp"),
+        "cap2": Weights(tag_score_token_cap=2),
+        "gate0.5": replace(DEFAULT_WEIGHTS, relevance_gate=0.5),
+        # keyword pages here score 0.5-0.53, so only a higher gate ramps them
+        "gate0.6": replace(DEFAULT_WEIGHTS, relevance_gate=0.6),
+    }
+    for label, w in weight_sets.items():
+        multi = {
+            (r.query_id, r.id): (r.match_type, r.match_score, r.final_score)
+            for r in recall_many_hybrid(
+                corpus,
+                entry.MULTI_HYBRID_QUERIES,
+                entry.MULTI_HYBRID_LIMIT,
+                query_vectors=vecs,
+                meta_fields={f: F.col(f) for f in entry._META_FIELDS},
+                now=entry.NOW,
+                w=w,
+            ).collect()
+        }
+        for qid, text in entry.MULTI_HYBRID_QUERIES:
+            single = recall(
+                corpus,
+                RecallRequest(query=text, limit=entry.MULTI_HYBRID_LIMIT, weights=w),
+                query_vector=vecs.get(qid),
+                now=entry.NOW,
+            ).select("id", "match_type", "match_score", "final_score").collect()
+            got = {(q, i) for (q, i) in multi if q == qid}
+            want = {(qid, r.id) for r in single}
+            assert got == want, f"{label} {qid}: id sets differ: {got ^ want}"
+            for r in single:
+                mt, ms, fs = multi[(qid, r.id)]
+                assert mt == r.match_type, (label, qid, r.id, mt, r.match_type)
+                assert ms == pytest.approx(r.match_score, abs=1e-9), (label, qid, r.id)
+                assert fs == pytest.approx(r.final_score, abs=1e-9), (label, qid, r.id)
 
 
 def test_context_tag_separator_cross_match(spark):

@@ -15,7 +15,7 @@ import os
 
 import pytest
 
-from automem_spark.functions.scoring import hybrid_score_sql_spark
+from automem_spark.functions.scoring import hybrid_score_sql_spark, token_array_sql
 from automem_spark.functions.text import assert_sql_literal_safe, extract_keywords
 from automem_spark.operators import metadata_search as ms
 from automem_spark.operators.trainprep import (
@@ -41,9 +41,9 @@ def test_sql_literal_safe_rejects(bad):
 
 def test_hybrid_score_sql_rejects_unsafe_token():
     with pytest.raises(AssertionError):
-        hybrid_score_sql_spark(tokens=["fine", "o'brien"], now="2026-06-01 00:00:00")
+        token_array_sql(["fine", "o'brien"])
     with pytest.raises(AssertionError):
-        hybrid_score_sql_spark(tokens=["fine"], now="2026' OR 1=1 --")
+        hybrid_score_sql_spark(token_array_sql(["fine"]), "2026' OR 1=1 --")
 
 
 def test_duckdb_emitters_reject_unsafe_token():

@@ -147,7 +147,11 @@ def test_relevance_gate_scales_crumb_components(spark):
 
     from pyspark.sql import functions as F
 
-    from automem_spark.functions.scoring import DEFAULT_WEIGHTS, hybrid_score_expr
+    from automem_spark.functions.scoring import (
+        DEFAULT_WEIGHTS,
+        hybrid_score_sql_spark,
+        token_array_sql,
+    )
 
     df = spark.createDataFrame(
         [(1, "nothing topical here", ["unrelated"], 0.8, 1.0,
@@ -156,17 +160,14 @@ def test_relevance_gate_scales_crumb_components(spark):
         " confidence double, timestamp timestamp",
     )
 
+    cand = df.withColumn("match_type", F.lit("keyword")).withColumn(
+        "match_score", F.lit(0.0)
+    )
+    tokens = token_array_sql(["spark", "merge"])
+
     def score(w):
-        return df.select(
-            hybrid_score_expr(
-                match_type=F.lit("keyword"), match_score=F.lit(0.0),
-                content=F.col("content"), tags=F.col("tags"),
-                importance=F.col("importance"), confidence=F.col("confidence"),
-                timestamp=F.col("timestamp"),
-                now=F.lit("2026-06-01 00:00:00").cast("timestamp"),
-                tokens=["spark", "merge"], w=w,
-            ).alias("s")
-        ).collect()[0]["s"]
+        sql = hybrid_score_sql_spark(tokens, "2026-06-01 00:00:00", w)
+        return cand.select(F.expr(sql).alias("s")).collect()[0]["s"]
 
     ungated = score(DEFAULT_WEIGHTS)
     gated = score(dc_replace(DEFAULT_WEIGHTS, relevance_gate=0.5))
