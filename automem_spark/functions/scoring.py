@@ -25,13 +25,10 @@ class Weights:
     vector: float = 0.35
     keyword: float = 0.35
     metadata: float = 0.35
-    relation: float = 0.25
     tag: float = 0.2
     importance: float = 0.1
     confidence: float = 0.05
     recency: float = 0.1
-    exact: float = 0.2
-    relevance: float = 0.0
     # context-bonus sub-weights (scoring.py:84-134)
     context_tag: float = 0.45
     context_type: float = 0.25

@@ -61,8 +61,10 @@ def fingerprint_dedup(
 ) -> DataFrame:
     """Near-identical dedup on the reference's 320-char fingerprint (X9).
 
-    r15: ensure_parallelism at the head — same single-split rationale as
-    exact_dedup above."""
+    r15: ensure_parallelism at the head, so the regex-heavy fingerprint
+    runs on a parallel scan instead of a single split — measured
+    4.9 -> 3.2 s at .sf1 (OPTIMIZATION_r15.md). The same change at
+    exact_dedup's cheap hash head measured negative (see its docstring)."""
     return (
         ensure_parallelism(df).withColumn("fp", fingerprint_expr(F.col(text_col)))
         .filter(F.col("fp").isNotNull())
@@ -816,10 +818,10 @@ def near_dup_dedup(
     applies — transitivity matters (A~B, B~C ⇒ {A,B,C} is one cluster even
     when A~C fell under the threshold).
 
-    Scale: components via the pointer-jumping label propagation (O(log d)
-    rounds over edge endpoints only — see graph.connected_components);
-    singleton documents never enter the loop. Output:
-    (id, component, keep) for every input document.
+    Scale: components via a single-task union-find over the candidate
+    pairs (see graph.connected_components); singleton documents only take
+    the broadcast fill-in join. Output: (id, component, keep) for every
+    input document.
     """
     from automem_spark.operators.graph import connected_components
 

@@ -11,24 +11,23 @@ Reference counterparts (SURVEY.md §2.4):
 - A6  graph stats                             automem/api/graph.py:366-458
 - C3  connected components (clustering)       consolidation.py:457-617
 
-All bounded traversals are driver loops of joins (fixed iteration counts,
-localCheckpoint between rounds to cut lineage); connected components uses
-min-label propagation. At 100 TB: edges hash-partitioned by src; each
-iteration is one shuffle on the frontier, which shrinks geometrically.
+Each bounded walk has one physical strategy. Supersession chains (one
+newest edge per source) and connected components (thresholded candidate
+pairs) gather their small graph into one task and walk it there: a pointer
+chase and a min-label union-find. The BFS keeps its frontier on the driver
+as a set of ids and runs one literal-id filter on `edges` per depth. None of
+them launches a job while the plan is built, except the BFS's one collect
+per depth.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from automem_spark.functions.detmath import us_mean
 from automem_spark.operators.topk import top_k_per_group
-from automem_spark.plans.checkpoint import (
-    CheckpointRotation,
-    checkpointing_enabled,
-    maybe_checkpoint,
-)
+from automem_spark.plans.checkpoint import maybe_checkpoint
 
 # State-suppressing relations (recall.py:82).
 SUPERSESSION_TYPES = ("INVALIDATED_BY", "EVOLVED_INTO")
@@ -178,62 +177,12 @@ def expand_relations(
     )
 
 
-# One supersession hop over (start, head, hops, path, nxt): advance when the
-# next node exists and is not already on the visited path (cycle guard).
-# `NOT (advance)` covers `done` exactly: nxt NULL -> advance is FALSE (not
-# NULL: the AND short-circuits on `nxt IS NOT NULL`) -> done TRUE; nxt
-# present -> done = contains(path, marker).
-_SUP_ADVANCE = (
-    "nxt IS NOT NULL"
-    " AND NOT contains(path, concat('|', cast(nxt AS string), '|'))"
-)
-SUPERSESSION_ADVANCE_SQL = (
-    "start",
-    f"CASE WHEN {_SUP_ADVANCE} THEN nxt ELSE head END AS head",
-    f"CASE WHEN {_SUP_ADVANCE} THEN hops + 1 ELSE hops END AS hops",
-    f"CASE WHEN {_SUP_ADVANCE} THEN concat(path, cast(nxt AS string), '|')"
-    " ELSE path END AS path",
-    f"NOT ({_SUP_ADVANCE}) AS done",
-)
-
-
-def supersession_advance_columns(stepped: DataFrame) -> DataFrame:
-    """Column-tree twin of SUPERSESSION_ADVANCE_SQL — kept ONLY as the
-    equivalence reference for the SQL text (the hot path uses the text)."""
-    marker = F.concat(F.lit("|"), F.col("nxt").cast("string"), F.lit("|"))
-    adv = F.col("nxt").isNotNull() & ~F.col("path").contains(marker)
-    return stepped.select(
-        "start",
-        F.when(adv, F.col("nxt")).otherwise(F.col("head")).alias("head"),
-        F.when(adv, F.col("hops") + 1).otherwise(F.col("hops")).alias("hops"),
-        F.when(adv, F.concat(F.col("path"), F.col("nxt").cast("string"), F.lit("|")))
-        .otherwise(F.col("path"))
-        .alias("path"),
-        F.when(
-            F.col("nxt").isNull() | F.col("path").contains(marker), F.lit(True)
-        )
-        .otherwise(F.lit(False))
-        .alias("done"),
-    )
-
-
-#: Walk-count bound under which resolve_supersession runs the chain walk
-#: as ONE task instead of max_hops checkpointed join rounds (r13 — the
-#: same dispatch shape as CC_LOCAL_MAX_EDGES, gated on an exact count
-#: that rides the `nxt` checkpoint's own observe job). `nxt` holds one
-#: row per superseded node; 1M rows is a ~2M-entry dict walked in well
-#: under a second in one executor core. The corpus-sized work — the
-#: newest-edge-per-source window and the optional active-state semi-join
-#: — stays distributed on BOTH paths; only the bounded pointer chase
-#: changes strategy. Above the bound the join loop runs unchanged.
-SUPERSESSION_LOCAL_MAX_WALKS = 1_000_000
-
-
 def _supersession_local_walk(nxt: DataFrame, max_hops: int) -> DataFrame:
-    """Single-task twin of the hop loop: follow cur -> nxt pointers up to
-    max_hops with the same visited-set cycle guard. coalesce(1) narrows
-    the checkpointed frame without a shuffle; the iterator is drained
-    fully before walking so the map sees every edge."""
+    """Follow cur -> nxt pointers up to max_hops in one task, with a
+    visited-set cycle guard. coalesce(1) narrows the frame behind the
+    newest-edge window's shuffle, so the scan and the window's map side stay
+    parallel; the iterator is drained fully before walking so the map sees
+    every edge."""
     from pyspark.sql.types import IntegerType, StructField, StructType
 
     ctype = nxt.schema["cur"].dataType
@@ -275,10 +224,9 @@ def resolve_supersession(
     *,
     max_hops: int = 5,
     node_state: DataFrame | None = None,
-    local_max_walks: int | None = None,
 ) -> DataFrame:
     """J4: walk INVALIDATED_BY/EVOLVED_INTO chains to their head, ≤max_hops,
-    cycle-safe via a visited-path check (recall.py:452-593).
+    cycle-safe via a visited-set check (recall.py:452-593).
 
     When ``node_state`` (id, state_reason) is given, each hop considers only
     edges whose TARGET is active (state_reason IS NULL), falling back to the
@@ -289,13 +237,10 @@ def resolve_supersession(
     unconditionally) used by the standalone J4 query.
 
     Returns (start, head, hops) for every node with a (qualifying) outgoing
-    supersession edge. Driver loop of `max_hops` joins; the frontier shrinks
-    every round (chains are short in practice), localCheckpoint truncates
-    lineage. An open-walk count rides each round's checkpoint job as an
-    `observe` metric (r11), so the loop exits as soon as every walk is done
-    — chains are 1-2 hops in practice, which saves the tail rounds' whole
-    frame materializations (sf0.1: 5 rounds → 2; the early exit is
-    output-identical because a round with zero open walks is a no-op).
+    supersession edge. The corpus-sized work (the newest-edge-per-source
+    window and the optional active-state semi-join) is distributed; the
+    bounded pointer chase over one row per superseded node runs in one task
+    (`_supersession_local_walk`). Building the plan launches no job.
     """
     sup = edges.filter(F.col("rel_type").isin(*SUPERSESSION_TYPES))
     if node_state is not None:
@@ -304,8 +249,8 @@ def resolve_supersession(
         )
         # active_dst is a corpus-sized id projection — a semi join with a
         # merge hint keeps it off the broadcast path (local-mode AQE happily
-        # broadcasts the whole corpus id column; at 100 TB that is the
-        # broadcast-limit wall). Both sides shuffle on dst instead.
+        # broadcasts the whole corpus id column). Both sides shuffle on dst
+        # instead.
         sup = sup.join(active_dst.hint("merge"), "dst", "left_semi")
     # newest qualifying edge per source (deterministic tiebreak on dst)
     nxt = top_k_per_group(
@@ -314,50 +259,7 @@ def resolve_supersession(
         [F.desc("updated_at_epoch"), F.desc("dst")],
         1,
     ).select(F.col("src").alias("cur"), F.col("dst").alias("nxt"))
-    # observe-probe guard MUST be the checkpoint layer's own predicate
-    # (an Observation on a plan the checkpoint skips blocks obs.get forever)
-    fused_probe = checkpointing_enabled()
-    if local_max_walks is None:
-        local_max_walks = SUPERSESSION_LOCAL_MAX_WALKS
-    if fused_probe:
-        nxt_obs = Observation("sup_walks")
-        nxt = nxt.observe(nxt_obs, F.count(F.lit(1)).alias("n"))
-    nxt = maybe_checkpoint(nxt)
-    n_walks = nxt_obs.get["n"] if fused_probe else nxt.count()
-    if n_walks <= local_max_walks:
-        return _supersession_local_walk(nxt, max_hops)
-    rotation = CheckpointRotation()
-
-    state = nxt.selectExpr(
-        "cur AS start",
-        "cur AS head",
-        "0 AS hops",
-        "concat('|', cast(cur AS string), '|') AS path",
-        "false AS done",
-    )
-    for _hop in range(max_hops):
-        stepped = (
-            state.filter(~F.col("done"))
-            .join(nxt, F.col("head") == F.col("cur"), "left")
-            .select("start", "head", "hops", "path", "nxt")
-        )
-        # per-hop advance as SQL text (r12): the Column twin built ~50 py4j
-        # trees per round (~0.2s/round of the row's 1.3s build tax); one
-        # selectExpr call parses JVM-side. Pinned row-identical to the twin
-        # by tests/test_graph.py::test_supersession_advance_sql_matches_columns.
-        advanced = stepped.selectExpr(*SUPERSESSION_ADVANCE_SQL)
-        # each round's state fully supersedes the last — rotate so prior
-        # rounds' blocks are freed instead of leaking O(max_hops) copies
-        new_state = advanced.unionByName(state.filter(F.col("done")))
-        if fused_probe:
-            obs = Observation(f"sup_round_{_hop}")
-            new_state = new_state.observe(
-                obs, F.sum((~F.col("done")).cast("int")).alias("open")
-            )
-        state = rotation.checkpoint(new_state)
-        if fused_probe and not obs.get["open"]:
-            break
-    return state.select("start", "head", "hops").filter(F.col("hops") > 0)
+    return _supersession_local_walk(nxt, max_hops)
 
 
 def related_memories_bfs(
@@ -372,47 +274,37 @@ def related_memories_bfs(
     """J6: variable-length undirected traversal, DISTINCT targets with min
     depth, ordered by importance DESC, ts DESC (recall.py:2893-2997).
 
+    The frontier is bounded by the walk, not the corpus, so it stays on the
+    driver as a set of ids: each depth is one literal-id filter on `edges`
+    (it pushes into the scan) and one collect, and the walk stops as soon
+    as the frontier is empty.
+
     Output: (id, depth, importance rounded)."""
     e = edges
     if rel_types:
         e = e.filter(F.col("rel_type").isin(*rel_types))
-    und = maybe_checkpoint(
-        e.select("src", "dst").unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        ).distinct()
-    )
-
-    spark = edges.sparkSession
-    frontier = spark.createDataFrame([(int(s),) for s in seed_ids], "id bigint")
-    visited = frontier.withColumn("depth", F.lit(0))
-    # checkpoint the ACCUMULATOR (visited) with rotation — each round's
-    # visited supersedes the last and the frontier re-derives from it, so
-    # prior rounds' blocks can be freed (a per-round checkpoint of `nxt`
-    # would leak: visited keeps referencing every round's frame)
-    rotation = CheckpointRotation()
-    fused_probe = checkpointing_enabled()
+    depth_of = {int(s): 0 for s in seed_ids}
+    frontier = set(depth_of)
     for depth in range(1, max_depth + 1):
-        nxt = (
-            frontier.join(und, frontier.id == und.src)
-            .select(F.col("dst").alias("id"))
-            .distinct()
-            .join(visited.select("id"), "id", "left_anti")
-        )
-        new_visited = visited.unionByName(nxt.withColumn("depth", F.lit(depth)))
-        # frontier-size probe rides the checkpoint's own job (r12, same
-        # pattern as the supersession/CC observe-exits): an empty frontier
-        # makes every remaining round a no-op union — exit instead of
-        # paying max_depth-depth more checkpoint jobs. Output-identical.
-        if fused_probe:
-            obs = Observation(f"bfs_depth_{depth}")
-            new_visited = new_visited.observe(
-                obs, F.sum((F.col("depth") == depth).cast("int")).alias("fresh")
-            )
-        visited = rotation.checkpoint(new_visited)
-        if fused_probe and not obs.get["fresh"]:
+        if not frontier:
             break
-        frontier = visited.filter(F.col("depth") == depth).select("id")
-    out = visited.filter(F.col("depth") > 0)
+        ids = sorted(frontier)
+        hits = (
+            e.filter(F.col("src").isin(ids) | F.col("dst").isin(ids))
+            .select("src", "dst")
+            .collect()
+        )
+        nxt = {
+            b
+            for src, dst in hits
+            for a, b in ((src, dst), (dst, src))
+            if a in frontier and b is not None and b not in depth_of
+        }
+        depth_of.update(dict.fromkeys(nxt, depth))
+        frontier = nxt
+    out = edges.sparkSession.createDataFrame(
+        [(i, d) for i, d in depth_of.items() if d > 0], "id bigint, depth int"
+    )
     mem = memories.select("id", "importance", F.col("timestamp").cast("double").alias("_ts"))
     return (
         out.join(mem, "id")
@@ -422,40 +314,13 @@ def related_memories_bfs(
     )
 
 
-#: Directed-edge-row bound under which connected_components runs a single
-#: in-task union-find instead of the distributed label-propagation loop
-#: (r12 verdict ask #5). At bench scale the loop is pure fixed overhead:
-#: a 150-node / 277-pair similarity graph costs 6 blocking rounds x ~0.3s
-#: of stage scheduling to propagate labels a single task resolves in
-#: microseconds. The bound is the 100 TB guard: 1M directed rows (500k
-#: undirected candidate pairs) is ~1s of path-compressed union-find in
-#: one executor core and a ~2x|E|-entry label map that broadcasts in MBs
-#: — and a THRESHOLDED candidate graph at 100 TB (cosine/LSH survivors)
-#: is routinely this small even when |V| is billions, in which case the
-#: broadcast label join is map-side over the node frame, strictly better
-#: than |V|-wide iterative shuffles. Above the bound the loop's
-#: O(log diameter) pointer-jumping rounds take over unchanged. Both paths
-#: are output-identical (pinned by tests/test_graph.py against brute
-#: force and tests/test_properties.py against a reference union-find).
-#:
-#: Measured headroom (scripts/cc_scale_check.py, r13): on a 2M-edge /
-#: 3M-node random graph — 2x ABOVE this bound — the single-task path
-#: still finishes in 17.8s vs the loop's 80.4s (local[32]), agreeing on
-#: all 1,000,287 components with zero label mismatches. The bound stays
-#: at 1M anyway: the union-find's in-task label map is ~2 dict entries
-#: per edge row (~400MB at 2M rows), which must fit ONE executor's heap
-#: on a real cluster (4-8GB typical), and the loop's relative cost here
-#: is understated by local[32]'s network-free shuffles.
-CC_LOCAL_MAX_EDGES = 1_000_000
-
-
 def _cc_local_labels(und: DataFrame) -> DataFrame:
     """Single-task min-label union-find over the (already doubled,
-    deduped) edge frame. coalesce(1) narrows the checkpointed 32-partition
-    frame into one task WITHOUT a shuffle; mapInPandas accumulates every
-    Arrow batch of that partition before emitting, so the union-find sees
-    the whole edge set. Returns (id, component) for ENDPOINT nodes only —
-    the caller fills in the singletons with a broadcast left join."""
+    deduped) edge frame. coalesce(1) narrows the distinct's post-shuffle
+    partitions into one task; mapInPandas accumulates every Arrow batch of
+    that partition before emitting, so the union-find sees the whole edge
+    set. Returns (id, component) for ENDPOINT nodes only — the caller fills
+    in the singletons with a broadcast left join."""
     from pyspark.sql.types import StructField, StructType
 
     atype = und.schema["a"].dataType
@@ -501,184 +366,34 @@ def connected_components(
     node_id: str = "id",
     src: str = "src",
     dst: str = "dst",
-    max_iters: int = 30,
-    check_every: int = 1,
-    local_max_edges: int | None = None,
 ) -> DataFrame:
     """C3's clustering core: connected components (consolidation.py:559-586
     does a driver-side DFS).
 
-    Two physical strategies behind one contract, dispatched on the EXACT
-    directed-edge-row count that rides the edge checkpoint's own observe
-    job (so the gate costs zero extra actions):
-
-    - <= local_max_edges (default CC_LOCAL_MAX_EDGES): single-task
-      union-find over the candidate edges (`_cc_local_labels`), singleton
-      fill-in via a broadcast left join — one job end-to-end instead of
-      one blocking job per propagation round. This is the common regime
-      for THRESHOLDED candidate graphs even at 100 TB corpus scale.
-    - above it: distributed min-label propagation with POINTER JUMPING,
-      as before:
-
-    Each round: (1) neighbor-min — every node adopts the smallest label among
-    itself and its neighbors (one join+agg); (2) pointer jump — every node
-    re-reads the CURRENT label of its label (one self-join), so label chains
-    halve and convergence is O(log diameter) rounds, not O(diameter) — the
-    round-count fix for long-chain graphs at 100 TB (a diameter-10⁴ path
-    converges in ~14 rounds instead of 10⁴).
-
-    Convergence detection: labels only ever decrease, so SUM(component)
-    strictly decreases iff any label changed. The probe rides the
-    checkpoint's OWN job as an `observe` metric (r11): the eager
-    localCheckpoint already executes the round's plan, and the Observation
-    node collects the sum during that same execution — so each round costs
-    exactly ONE driver-blocking job instead of checkpoint + a separate
-    scalar-agg job. Probing every round (`check_every=1`) is now strictly
-    free, and each skipped probe would risk a whole wasted round after
-    convergence. max_iters stays as the safety bound. (The r11 alternative
-    of fusing 2 propagate+jump steps per checkpointed round measured
-    SLOWER at sf0.1 — 2.37s vs 2.24s — the deeper per-round plan costs
-    AQE/Catalyst more than the saved round-trips; rejected.)
+    The candidate pairs are thresholded (cosine or LSH survivors), so the
+    graph is small even when the node frame is not: one task runs a
+    min-label union-find over the deduped undirected edges
+    (`_cc_local_labels`), and the node frame fills in its singletons with a
+    broadcast left join, so it never shuffles. The `distinct()` in front of
+    that task is a shuffle on purpose: without it, coalesce(1) would squeeze
+    the upstream pair computation into the same single task. Building the
+    plan launches no job.
 
     Output: (id, component) where component = min node id in the component.
 
     Contract: every edge endpoint in `pairs` must appear in `nodes`
     (endpoints ⊆ nodes). All in-repo callers derive `pairs` from the node
-    frame, so this always holds. Under violation the two physical
-    strategies deliberately diverge rather than pay a per-run semi-join to
-    agree on garbage: the local union-find path drops phantom endpoints
-    (its label join is FROM the node frame) while the propagation loop
-    emits them — and phantom groups carry a NULL `_old`, so the
-    change-count probe ignores them. Validate inputs upstream if the edge
-    source is untrusted.
+    frame, so this always holds; a phantom endpoint is dropped, because the
+    label join runs FROM the node frame.
     """
-    if local_max_edges is None:
-        local_max_edges = CC_LOCAL_MAX_EDGES
     und = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     und = und.unionByName(und.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    und = und.distinct()
-    # the density probe's approx_count_distinct rides the edge-frame
-    # checkpoint's own job (observe, r11); the EXACT directed-row count for
-    # the local-union-find gate rides the same observation (r13) — neither
-    # probe costs a job of its own
-    fuse_density = checkpointing_enabled()
-    if fuse_density:
-        und_obs = Observation("cc_density")
-        und = und.observe(
-            und_obs,
-            F.approx_count_distinct("a").alias("n"),
-            F.count(F.lit(1)).alias("m"),
-        )
-    und = maybe_checkpoint(und)
-
-    all_nodes = nodes.select(F.col(node_id).alias("id"))
-    if fuse_density:
-        n_edge_rows = und_obs.get["m"]
-        approx_endpoints = und_obs.get["n"]
-    else:
-        _probe = und.agg(
-            F.approx_count_distinct("a").alias("n"), F.count(F.lit(1)).alias("m")
-        ).collect()[0]
-        n_edge_rows, approx_endpoints = _probe["m"], _probe["n"]
-    if n_edge_rows <= local_max_edges:
-        # small candidate graph: one task resolves it (see CC_LOCAL_MAX_
-        # EDGES). Labels are bounded by 2x the edge rows, so the fill-in
-        # join for singleton nodes broadcasts — the node frame never
-        # shuffles at all on this path.
-        labels = _cc_local_labels(und)
-        return all_nodes.join(F.broadcast(labels), "id", "left").select(
-            "id",
-            F.coalesce(F.col("component"), F.col("id")).alias("component"),
-        )
-    # Singleton split: a node with no incident edge can never change its
-    # label — keep it OUT of the iteration so every round's shuffle is
-    # |endpoints|, not |V|. But the split itself costs a distinct over the
-    # edge endpoints plus an anti-join, which is pure fixed overhead when
-    # most nodes touch an edge (the r5 driver fixture: +22% wall). So GATE
-    # it on a density probe that costs no extra shuffle: approx_count_
-    # distinct over the already-checkpointed edge frame (one partial-agg
-    # scan) vs a node count. Only when a clear majority of nodes are
-    # singletons does the split pay for itself; output is identical on
-    # both paths (property-tested against union-find).
-    n_nodes = all_nodes.count()
-    if n_nodes > 0 and approx_endpoints < 0.6 * n_nodes:
-        # sparse: split. labels IS the endpoint set (the old semi-join was
-        # a no-op re-derivation of it — folded away in r6).
-        endpoints = maybe_checkpoint(
-            und.select(F.col("a").alias("id")).distinct()
-        )
-        singles = all_nodes.join(endpoints, "id", "left_anti").withColumn(
-            "component", F.col("id")
-        )
-        labels = endpoints.withColumn("component", F.col("id"))
-    else:
-        # dense-ish: iterate over all nodes; no split overhead.
-        singles = None
-        labels = all_nodes.withColumn("component", F.col("id"))
-    # each round's labels fully supersede the last — rotate checkpoints so
-    # at most two generations of the label frame are resident (a bare
-    # per-round localCheckpoint leaks O(rounds) copies per run)
-    rotation = CheckpointRotation()
-    for it in range(max_iters):
-        # neighbor-min as union + partial-aggregating groupBy (map-side
-        # combine): each node keeps min(own label, neighbors' labels) in one
-        # shuffle — no join-then-left-join round trip. The round's OLD label
-        # rides along (`_old`, null on contrib rows; every group holds
-        # exactly one labels row, so max() recovers it) purely to feed the
-        # change-count probe below.
-        contrib = labels.join(und, labels.id == und.a).select(
-            F.col("b").alias("id"),
-            "component",
-            F.lit(None).cast(labels.schema["component"].dataType).alias("_old"),
-        )
-        stepped = (
-            labels.withColumn("_old", F.col("component"))
-            .unionByName(contrib)
-            .groupBy("id")
-            .agg(F.min("component").alias("component"), F.max("_old").alias("_old"))
-        )
-        # pointer jump: component <- label(component); labels are ids, so a
-        # self-join keyed on the label value shortcuts chains geometrically.
-        # (A double jump per round was measured in r5: one fewer round but
-        # one more shuffle per round — a wash on propagation-bound graphs,
-        # so the single jump stays.)
-        jump = stepped.select(
-            F.col("id").alias("component"), F.col("component").alias("_cc")
-        )
-        new_labels = stepped.join(jump, "component", "left").select(
-            "id",
-            F.least(
-                F.col("component"), F.coalesce(F.col("_cc"), F.col("component"))
-            ).alias("component"),
-            "_old",
-        )
-        probe = (it + 1) % check_every == 0
-        fused = probe and checkpointing_enabled()
-        # convergence probe = EXACT count of labels this round changed
-        # (post-jump vs the round's own input). r13: the previous probe was
-        # SUM(component) equality across rounds — exact for the monotone
-        # numeric labels every current caller uses, but a type hole: the
-        # operator's contract is "component = min node id", and a string-id
-        # node frame crashed the sum with CAST_INVALID_INPUT (caught by the
-        # string-id property test). The change count is type-agnostic,
-        # detects convergence in the same round (zero changes == the
-        # sum-equality round), and rides the same checkpoint job.
-        changes_expr = F.sum(
-            (F.col("component") != F.col("_old")).cast("long")
-        ).alias("s")
-        if fused:
-            obs = Observation(f"cc_round_{it}")
-            new_labels = new_labels.observe(obs, changes_expr)
-        labels = rotation.checkpoint(new_labels.drop("_old") if not probe else new_labels)
-        if probe:
-            # metric collected during the checkpoint's own execution.
-            # (With checkpoints disabled for plan tests nothing executed, so
-            # an Observation would block forever — fall back to a collect.)
-            s = obs.get["s"] if fused else labels.agg(changes_expr).collect()[0][0]
-            labels = labels.drop("_old")
-            if s == 0:
-                break
-    return labels.unionByName(singles) if singles is not None else labels
+    labels = _cc_local_labels(und.distinct())
+    return (
+        nodes.select(F.col(node_id).alias("id"))
+        .join(F.broadcast(labels), "id", "left")
+        .select("id", F.coalesce(F.col("component"), F.col("id")).alias("component"))
+    )
 
 
 def preference_ranking(edges: DataFrame, k: int = 10) -> DataFrame:

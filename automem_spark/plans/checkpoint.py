@@ -1,11 +1,11 @@
 """Checkpoint gate: `localCheckpoint` with an off-switch for plan tests.
 
-Operators materialize small reused frames (bounded candidate sets, loop
-frontiers) with `localCheckpoint` to cut lineage and avoid recomputing a
-corpus scan per consumer. But a checkpoint replaces the subtree with
-`Scan ExistingRDD` in the physical plan, which blinds the plan-shape guards
-in tests/test_plan_scale.py (a corpus scan hidden behind a checkpoint could
-be broadcast unbounded and the guard would not see it). Setting
+Operators materialize small reused frames (bounded candidate sets) with
+`localCheckpoint` to cut lineage and avoid recomputing a corpus scan per
+consumer. But a checkpoint replaces the subtree with `Scan ExistingRDD` in
+the physical plan, which blinds the plan-shape guards in
+tests/test_plan_scale.py (a corpus scan hidden behind a checkpoint could be
+broadcast unbounded and the guard would not see it). Setting
 AUTOMEM_SPARK_DISABLE_CHECKPOINT=1 keeps the full lineage visible so the
 guards inspect the real subtree; production runs leave it unset.
 """
@@ -19,103 +19,7 @@ from pyspark.sql import DataFrame
 DISABLE_ENV = "AUTOMEM_SPARK_DISABLE_CHECKPOINT"
 
 
-def checkpointing_enabled() -> bool:
-    """THE predicate for whether maybe_checkpoint / CheckpointRotation will
-    actually execute a checkpoint job. Loop operators that attach `observe`
-    metrics to a checkpointed frame MUST gate the Observation on this same
-    function (not a re-derived env check): an Observation attached to a plan
-    the checkpoint layer then skips never executes, and `obs.get` blocks the
-    driver forever (advisor, r11). Centralizing the predicate here means a
-    future extra skip condition automatically reaches every probe guard."""
-    return not os.environ.get(DISABLE_ENV)
-
-
 def maybe_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
-    if not checkpointing_enabled():
+    if os.environ.get(DISABLE_ENV):
         return df
     return df.localCheckpoint(eager=eager)
-
-
-class CheckpointRotation:
-    """Per-iteration checkpointing for loops where each round's frame fully
-    SUPERSEDES the previous one (label propagation, frontier advance).
-
-    A bare per-round `localCheckpoint` leaks: the materialized blocks of
-    every round stay in the block manager until session end — O(rounds)
-    corpus-sized copies per run, taxing every later query in a shared
-    session (the r4 bench-drift root cause). `checkpoint(df)` materializes
-    the new frame eagerly, THEN frees the blocks of the frame from the
-    previous call, so at most two generations are ever resident.
-
-    Only safe when the caller never touches the previous frame again after
-    the call returns — an unpersisted localCheckpoint has no lineage to
-    recompute from. Do NOT use for accumulator frames (e.g. a `visited`
-    union that keeps referencing earlier rounds' frames): checkpoint the
-    accumulator itself instead.
-    """
-
-    def __init__(self) -> None:
-        self._ids: list[int] = []
-        self._sc = None
-
-    @staticmethod
-    def _persistent_ids(sc) -> set[int]:
-        # ONE py4j round trip: iterating keySet() directly costs an RPC per
-        # element per call, which at ~2 calls/iteration × O(session RDDs)
-        # elements dominated the whole loop on small graphs (measured ~0.5s
-        # of a 3s connected-components run at sf0.1)
-        # Parsing a Java toString is format-coupled; degrade gracefully on
-        # any token that is not an int (an id we fail to see is merely not
-        # eagerly freed — session teardown still reclaims it) rather than
-        # crashing the loop.
-        s = sc._jsc.getPersistentRDDs().keySet().toString()
-        ids: set[int] = set()
-        for tok in s.strip("[]").split(","):
-            tok = tok.strip()
-            if tok:
-                try:
-                    ids.add(int(tok))
-                except ValueError:
-                    continue
-        return ids
-
-    def checkpoint(self, df: DataFrame) -> DataFrame:
-        if not checkpointing_enabled():
-            return df
-        sc = df.sparkSession.sparkContext
-        self._sc = sc
-        out = df.localCheckpoint(eager=True)
-        # Read the materialized RDD's id directly off the checkpointed
-        # frame's analyzed plan (a LogicalRDD). The previous implementation
-        # diffed the session-global persistent-RDD id set around the call,
-        # which is RACY under concurrent jobs: a sibling thread's checkpoint
-        # landing between the two snapshots got adopted into this rotation
-        # and unpersisted out from under it (CHECKPOINT_RDD_BLOCK_ID_NOT_
-        # FOUND in the sibling job — surfaced by the thread-pooled QA
-        # scorecard gate). The direct read is exact, thread-safe, and one
-        # py4j round trip cheaper. Fallback: skip tracking this generation
-        # (leak one frame until session end) rather than guess from a
-        # global diff.
-        try:
-            new_ids = [out._jdf.queryExecution().analyzed().rdd().id()]
-        except Exception:  # pragma: no cover — plan-shape drift across versions
-            new_ids = []
-        jmap = sc._jsc.getPersistentRDDs()
-        for rid in self._ids:
-            jrdd = jmap.get(rid)
-            if jrdd is not None:
-                jrdd.unpersist(False)
-        self._ids = new_ids
-        return out
-
-    def release(self) -> None:
-        """Free the final generation too — only call once the loop's result
-        has been fully consumed (the checkpointed frame has no lineage to
-        recompute from). Optional; session teardown also reclaims."""
-        if self._sc is not None:
-            live = self._sc._jsc.getPersistentRDDs()
-            for rid in self._ids:
-                jrdd = live.get(rid)
-                if jrdd is not None:
-                    jrdd.unpersist(False)
-        self._ids = []

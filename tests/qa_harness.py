@@ -270,15 +270,14 @@ def _candidate_configs() -> dict[str, dict]:
         "recency_heavy": {
             "overrides": {
                 "weights": Weights(
-                    vector=0.0, keyword=0.0, metadata=0.0, relation=0.0,
+                    vector=0.0, keyword=0.0, metadata=0.0,
                     tag=0.0, importance=0.0, confidence=0.0, recency=1.0,
-                    exact=0.0,
                 )
             },
             "complexity": 1,
         },
         "keyword_off": {
-            "overrides": {"weights": Weights(keyword=0.0, exact=0.0, tag=0.0)},
+            "overrides": {"weights": Weights(keyword=0.0, tag=0.0)},
             "complexity": 2,
         },
         "no_signals": {

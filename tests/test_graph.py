@@ -1,8 +1,11 @@
 """Graph-layer operator tests on the deterministic edges fixture."""
 
+from collections import Counter
+
 from pyspark.sql import functions as F
 
 from automem_spark.operators.graph import (
+    SUPERSESSION_TYPES,
     connected_components,
     expand_relations,
     graph_stats,
@@ -57,26 +60,48 @@ def test_supersession_chains(spark, sf_dir):
     assert got[41] == (40, 1)
 
 
-def test_supersession_paths_identical(spark, sf_dir):
-    """The r13 dispatch (single-task pointer walk below
-    SUPERSESSION_LOCAL_MAX_WALKS, checkpointed join loop above) must be
-    output-identical on both the raw walk and the state-gated walk that
-    current_state_filter drives."""
-    from automem_spark.operators.graph import SUPERSESSION_TYPES
+def _reference_supersession(edge_rows, active=None, max_hops=5):
+    """Pure-Python J4 walk: the newest (updated_at_epoch DESC, dst DESC)
+    qualifying edge per source, followed ≤max_hops with a visited-set
+    guard. `active` (a set of ids) gates each edge on its target."""
+    newest = {}
+    for src, dst, rel, ts in edge_rows:
+        if rel not in SUPERSESSION_TYPES or (active is not None and dst not in active):
+            continue
+        key = (ts is not None, ts or 0, dst)  # DESC puts NULL epochs last
+        if src not in newest or key > newest[src]:
+            newest[src] = key
+    step = {src: key[2] for src, key in newest.items()}
+    out = set()
+    for start in step:
+        head, hops, seen = start, 0, {start}
+        while hops < max_hops and step.get(head) is not None and step[head] not in seen:
+            head = step[head]
+            seen.add(head)
+            hops += 1
+        if hops:
+            out.add((start, head, hops))
+    return out
 
+
+def test_supersession_paths_identical(spark, sf_dir):
+    """The single-task chain walk matches a pure-Python reference walk on
+    both the raw walk and the state-gated walk that current_state_filter
+    drives."""
     edges = edges_view(spark, sf_dir)
     mem = memories_view(spark, sf_dir)
     state = mem.select(
         "id",
         F.when(F.col("id") % 3 == 0, F.lit("superseded")).alias("state_reason"),
     )
-    for ns in (None, state):
-        local = resolve_supersession(edges, node_state=ns, local_max_walks=10**9)
-        loop = resolve_supersession(edges, node_state=ns, local_max_walks=0)
-        got_local = {(r.start, r.head, r.hops) for r in local.collect()}
-        got_loop = {(r.start, r.head, r.hops) for r in loop.collect()}
-        assert got_local == got_loop
-        assert got_local  # non-degenerate fixture
+    edge_rows = [
+        tuple(r) for r in edges.select("src", "dst", "rel_type", "updated_at_epoch").collect()
+    ]
+    active = {r.id for r in state.filter(F.col("state_reason").isNull()).collect()}
+    for ns, act in ((None, None), (state, active)):
+        got = {(r.start, r.head, r.hops) for r in resolve_supersession(edges, node_state=ns).collect()}
+        assert got == _reference_supersession(edge_rows, act)
+        assert got  # non-degenerate fixture
 
 
 def test_bfs_depths(spark, sf_dir):
@@ -111,21 +136,29 @@ def test_connected_components_vs_bruteforce(spark, sf_dir):
 
 
 def test_connected_components_paths_identical(spark, sf_dir):
-    """The r13 dispatch (single-task union-find below CC_LOCAL_MAX_EDGES,
-    distributed pointer-jumping loop above) must be output-identical —
-    force each side of the gate over the same graph and compare exactly.
-    Includes singletons: vec_id < 150 leaves nodes with no pair above the
-    cosine threshold, exercising the broadcast fill-in join on the local
-    path and the density-gated singleton split on the loop path."""
+    """The single-task union-find matches a driver-side union-find over all
+    150 nodes. vec_id < 150 leaves nodes with no pair above the cosine
+    threshold, so the broadcast singleton fill-in is exercised too."""
     emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 150)
     pairs = cosine_threshold_self_join(emb, 0.25, item_id="vec_id")
     nodes = emb.select(F.col("vec_id").alias("id"))
-    local = connected_components(pairs, nodes, local_max_edges=10**9)
-    loop = connected_components(pairs, nodes, local_max_edges=0)
-    got_local = {(r.id, r.component) for r in local.collect()}
-    got_loop = {(r.id, r.component) for r in loop.collect()}
-    assert got_local == got_loop
-    assert len(got_local) == 150
+    got = {r.id: r.component for r in connected_components(pairs, nodes).collect()}
+    parent = {r.id: r.id for r in nodes.collect()}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for r in pairs.collect():
+        a, b = find(r.src), find(r.dst)
+        if a != b:
+            parent[max(a, b)] = min(a, b)
+    assert len(parent) == 150
+    assert got == {i: find(i) for i in parent}
+    sizes = Counter(got.values())
+    assert max(sizes.values()) > 1 and min(sizes.values()) == 1  # merged + singletons
 
 
 def test_stats_drift_preferences(spark, sf_dir):
@@ -208,45 +241,9 @@ def test_graph_neighbors_dedup_and_sentinels(spark, sf_dir):
             assert r["depth"] == -1 and -1.0 <= r["sim"] <= 1.0
 
 
-def test_supersession_advance_sql_matches_columns(spark):
-    # the SQL-text hop (r12 build-tax fix) must be row-identical to the
-    # Column twin on every advance shape: step, cycle-hit, dead-end,
-    # NULL-nxt, and an id whose string form could collide without the
-    # |-delimiters (1 vs 11)
-    from automem_spark.operators.graph import (
-        SUPERSESSION_ADVANCE_SQL,
-        supersession_advance_columns,
-    )
-
-    rows = [
-        (1, 2, 1, "|1|2|", 3),        # plain step
-        (4, 5, 1, "|4|5|", 4),        # cycle back to start
-        (6, 7, 1, "|6|7|", None),     # dead end
-        (8, 8, 0, "|8|", 8),          # self-loop on first hop
-        (11, 1, 1, "|11|1|", 11),     # substring-collision guard: '|11|'
-    ]
-    stepped = spark.createDataFrame(
-        rows, "start bigint, head bigint, hops int, path string, nxt bigint"
-    )
-    a = sorted(map(tuple, stepped.selectExpr(*SUPERSESSION_ADVANCE_SQL).collect()))
-    b = sorted(map(tuple, supersession_advance_columns(stepped).collect()))
-    assert a == b
-    # and the hop semantics themselves: 11 must advance (|11| does not
-    # contain the |11|-delimited... it does! nxt=11 IS on the path) — the
-    # cycle guard must stop it
-    byid = {r[0]: r for r in a}
-    assert byid[1][4] is False and byid[1][1] == 3      # stepped to 3
-    assert byid[4][4] is True                            # cycle detected
-    assert byid[6][4] is True                            # dead end
-    assert byid[11][4] is True                           # |11| already visited
-
-
-def test_bfs_early_exit_output_identical(spark, monkeypatch):
-    # a graph exhausted at depth 1: the observe-exit (r12) must stop the
-    # loop after the first empty frontier and return exactly what the
-    # fixed-round loop returns
-    import os
-
+def test_bfs_early_exit_output_identical(spark):
+    # a graph exhausted at depth 2: the walk stops on the first empty
+    # frontier and returns exactly the hand-computed min depths
     edges = spark.createDataFrame(
         [(1, 2, "RELATES_TO"), (2, 3, "RELATES_TO")],
         "src bigint, dst bigint, rel_type string",
@@ -255,8 +252,5 @@ def test_bfs_early_exit_output_identical(spark, monkeypatch):
         [(i, 0.5, "2026-01-01 00:00:00") for i in (1, 2, 3)],
         "id bigint, importance double, timestamp string",
     ).withColumn("timestamp", F.col("timestamp").cast("timestamp"))
-    fast = related_memories_bfs([1], edges, mem, max_depth=5).collect()
-    monkeypatch.setenv("AUTOMEM_SPARK_DISABLE_CHECKPOINT", "1")
-    slow = related_memories_bfs([1], edges, mem, max_depth=5).collect()
-    assert sorted(map(tuple, fast)) == sorted(map(tuple, slow))
-    assert {(r.id, r.depth) for r in fast} == {(2, 1), (3, 2)}
+    got = related_memories_bfs([1], edges, mem, max_depth=5).collect()
+    assert {(r.id, r.depth) for r in got} == {(2, 1), (3, 2)}

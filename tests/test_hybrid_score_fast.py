@@ -261,9 +261,7 @@ def test_shipped_weights_pinned_independently():
         DEFAULT_WEIGHTS.vector,
         DEFAULT_WEIGHTS.keyword,
         DEFAULT_WEIGHTS.metadata,
-        DEFAULT_WEIGHTS.relation,
         DEFAULT_WEIGHTS.tag,
-        DEFAULT_WEIGHTS.exact,
-    ) == (0.35, 0.35, 0.35, 0.25, 0.2, 0.2)
+    ) == (0.35, 0.35, 0.35, 0.2)
     # and Weights() remains the reference-default (legacy) blend
     assert (Weights().recency, Weights().importance) == (0.1, 0.1)

@@ -1,0 +1,62 @@
+"""Build-time job budgets for the graph walks.
+
+Building a DataFrame should not run Spark jobs; a job launched while the
+plan is built blocks the request before its action starts. Each check
+builds one operator inside its own job group and counts the jobs Spark's
+status tracker attributes to that group.
+"""
+
+import itertools
+
+import pytest
+from pyspark.sql import functions as F
+
+from automem_spark.operators.graph import (
+    connected_components,
+    related_memories_bfs,
+    resolve_supersession,
+)
+from automem_spark.operators.similarity import cosine_threshold_self_join
+from automem_spark.sources.graph_fixture import edges_view
+from automem_spark.sources.tables import load_table, memories_view
+
+_groups = itertools.count()
+
+
+def build_jobs(spark, build) -> int:
+    """Number of Spark jobs launched while `build()` runs."""
+    sc = spark.sparkContext
+    group = f"job-budget-{next(_groups)}"
+    sc.setJobGroup(group, "build")
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job-start events reach the status store through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def graph(spark, sf_dir):
+    edges = edges_view(spark, sf_dir)
+    mem = memories_view(spark, sf_dir)
+    state = mem.select(
+        "id",
+        F.when(F.col("id") % 3 == 0, F.lit("superseded")).alias("state_reason"),
+    )
+    emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 150)
+    pairs = cosine_threshold_self_join(emb, 0.25, item_id="vec_id")
+    nodes = emb.select(F.col("vec_id").alias("id"))
+    return edges, mem, state, pairs, nodes
+
+
+def test_graph_walk_build_job_budget(spark, graph):
+    edges, mem, state, pairs, nodes = graph
+    assert build_jobs(spark, lambda: resolve_supersession(edges)) == 0
+    assert build_jobs(spark, lambda: resolve_supersession(edges, node_state=state)) == 0
+    assert build_jobs(spark, lambda: connected_components(pairs, nodes)) == 0
+    assert build_jobs(
+        spark, lambda: related_memories_bfs([0, 5, 10], edges, mem, max_depth=1)
+    ) <= 2

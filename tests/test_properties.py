@@ -148,10 +148,8 @@ def test_connected_components_matches_union_find(spark, case):
 @settings(max_examples=_SPARK_EXAMPLES, deadline=None,
           suppress_health_check=list(HealthCheck))
 def test_connected_components_string_ids_both_paths(spark, case):
-    """The r13 single-task union-find path must honor non-numeric node id
-    types: component = lexicographic MIN id, identical on both sides of
-    the CC_LOCAL_MAX_EDGES dispatch (the local path's pandas union-find
-    compares python strings; the loop path compares Spark strings)."""
+    """The single-task union-find must honor non-numeric node id types:
+    component = lexicographic MIN id, as in the reference union-find."""
     from automem_spark.operators.graph import connected_components
 
     n, edges = case
@@ -163,12 +161,8 @@ def test_connected_components_string_ids_both_paths(spark, case):
         pairs = pairs.limit(0)
     expect_int = _union_find_components(n, [(a, b) for a, b in edges if a != b])
     expect = {ids[i]: ids[c] for i, c in expect_int.items()}
-    local = {r.id: r.component
-             for r in connected_components(pairs, nodes, local_max_edges=10**9).collect()}
-    loop = {r.id: r.component
-            for r in connected_components(pairs, nodes, local_max_edges=0).collect()}
-    assert local == expect
-    assert loop == expect
+    got = {r.id: r.component for r in connected_components(pairs, nodes).collect()}
+    assert got == expect
 
 
 @given(st.lists(st.text(alphabet="ab C!", min_size=0, max_size=10),
