@@ -45,7 +45,7 @@ from automem_spark.operators.dedup import (
     simhash60_md5_expr,
 )
 from automem_spark.operators.recall import RecallRequest, keyword_channel, recall, base_filter
-from automem_spark.operators.similarity import cosine_threshold_self_join, cosine_topk_join
+from automem_spark.operators.similarity import cosine_threshold_self_join
 from automem_spark.operators.textquality import (
     LANG_MARKERS,
     lang_id_expr,
@@ -712,7 +712,7 @@ def q_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash fingerprints. Uses the md5-token-hash twin of the xxhash64
     production expression so the full bit-vote algorithm is value-checked
-    against the DuckDB oracle (simhash64_expr itself stays unit-tested)."""
+    against the DuckDB oracle (the xxhash64 fingerprint stays unit-tested)."""
     # r14: parallelize the single-split fixture scan (see q_lang_id)
     docs = ensure_parallelism(_t(spark, sf_dir, "documents"))
     return docs.select("doc_id", simhash60_md5_expr(F.col("text")).alias("simhash"))
@@ -741,11 +741,12 @@ def q_vector_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vector top-K cosine (R1, runtime_recall_helpers.py:940-1030): top 10
     neighbors of vec_id=0's embedding, double-precision cosine."""
     emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") == 0).select(
-        F.lit("q0").alias("query_id"), F.col("embedding").alias("query_embedding")
-    )
-    out = cosine_topk_join(emb, queries, 10, item_id="vec_id")
-    return out.select("vec_id", F.round("sim", 5).alias("sim"))
+    qvec = [
+        ("q0", [float(x) for x in r.embedding])
+        for r in emb.filter(F.col("vec_id") == 0).collect()
+    ]
+    out = cosine_topk_mapinpandas(emb, qvec, 10, item_id="vec_id")
+    return out.select(F.col("id").alias("vec_id"), F.round("sim", 5).alias("sim"))
 
 
 def q_vector_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1485,8 +1486,9 @@ def q_startup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_vector_topk_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R1 scale path: NumPy matmul per partition via mapInPandas + partial
-    top-k — identical results to the expression-based vector_topk."""
+    """R1 top-k with the kernel's own output column (`id`): NumPy matmul
+    per partition via mapInPandas + partial top-k — the same kernel and
+    rows as vector_topk."""
     emb = _t(spark, sf_dir, "embeddings")
     qvec = [
         (("q0"), [float(x) for x in r.embedding])
@@ -1510,8 +1512,7 @@ _META_FIELDS = ["source", "repo", "project", "tool", "model"]
 def _metadata_search(spark: SparkSession, sf_dir: str, query_text: str) -> DataFrame:
     mem = memories_view(spark, sf_dir)
     pool = base_filter(mem, RecallRequest())
-    fields = {f: F.col(f) for f in _META_FIELDS}
-    out = metadata_channel(pool, query_text, 10, fields)
+    out = metadata_channel(pool, query_text, 10, _META_FIELDS)
     return out.select("id", F.round("match_score", 6).alias("match_score"), "project", "tool")
 
 
@@ -2013,7 +2014,7 @@ def q_multi_recall_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
         MULTI_HYBRID_QUERIES,
         MULTI_HYBRID_LIMIT,
         query_vectors=vecs,
-        meta_fields={f: F.col(f) for f in _META_FIELDS},
+        meta_fields=_META_FIELDS,
         now=NOW,
     )
     return out.select(

@@ -77,6 +77,12 @@ def tag_prefixes_expr(tags: Column) -> Column:
     return F.array_distinct(F.flatten(F.transform(tags, prefixes_of)))
 
 
+def _or_empty(tags: Column) -> Column:
+    """A NULL tag array is an empty one: an untagged row matches no filter
+    and no exclusion."""
+    return F.coalesce(tags, F.array().cast("array<string>"))
+
+
 def _startswith(prefix: str):
     """1-ary lambda factory (PySpark higher-order funcs count lambda params,
     so default-arg closures would be mis-typed as 2-ary)."""
@@ -106,12 +112,13 @@ def tag_filter_expr(
     exact/any: EXISTS overlap; exact/all: filters ⊆ tags;
     prefix: match against the materialized tag_prefixes when available,
     else startswith over raw tags (graph_store.py:18-37). Canonicalizes
-    '/' to ':' on both sides like the reference.
+    '/' to ':' on both sides like the reference. NULL `tags` /
+    `tag_prefixes` match nothing, so ``~tag_filter_expr`` keeps the row.
     """
     filters = normalize_filters(filters)
     if not filters:
         return F.lit(True)
-    lower_tags = F.transform(tags, lambda t: F.lower(t))
+    lower_tags = F.transform(_or_empty(tags), lambda t: F.lower(t))
 
     if match == "exact":
         flit = F.array(*[F.lit(f) for f in filters])
@@ -122,7 +129,7 @@ def tag_filter_expr(
     # prefix match: canonical form uses ':'-joined prefixes
     canon_filters = [re.sub(r"[:/]+", ":", f) for f in filters]
     if tag_prefixes is not None:
-        idx = tag_prefixes
+        idx = _or_empty(tag_prefixes)
         per_filter = [F.array_contains(idx, f) for f in canon_filters]
     else:
         canon_tags = F.transform(lower_tags, lambda t: F.regexp_replace(t, "[:/]+", ":"))
@@ -135,11 +142,11 @@ def tag_filter_expr(
 
 def exclude_tags_expr(tags: Column, excluded: list[str]) -> Column:
     """Row passes if NO excluded tag matches exactly or by prefix
-    (runtime_recall_helpers.py:472-487)."""
+    (runtime_recall_helpers.py:472-487). A row with NULL `tags` passes."""
     excluded = normalize_filters(excluded)
     if not excluded:
         return F.lit(True)
-    lower_tags = F.transform(tags, lambda t: F.lower(t))
+    lower_tags = F.transform(_or_empty(tags), lambda t: F.lower(t))
     canon_tags = F.transform(lower_tags, lambda t: F.regexp_replace(t, "[:/]+", ":"))
     hits = []
     for e in excluded:

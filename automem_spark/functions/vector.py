@@ -45,24 +45,6 @@ def cosine_expr(a: Column, b: Column) -> Column:
     return F.when(denom == 0.0, F.lit(0.0)).otherwise(dot_expr(a, b) / denom)
 
 
-def l2_normalize_expr(a: Column) -> Column:
-    """Unit-normalize so Euclidean LSH (BucketedRandomProjectionLSH) over the
-    result is cosine-equivalent: for unit vectors, L2² = 2 - 2·cos.
-
-    r14: the norm is bound as a lambda variable (transform over a
-    single-element wrapper). Referenced raw, it sat in the division
-    lambda's body and re-evaluated PER ELEMENT — the O(d) norm aggregate
-    ran d+1 times per row. Same arithmetic per value (division order and
-    the zero-norm passthrough unchanged)."""
-
-    def body(n: Column) -> Column:
-        return F.when(n == 0.0, a.cast("array<double>")).otherwise(
-            F.transform(a, lambda x: x.cast("double") / n)
-        )
-
-    return F.element_at(F.transform(F.array(norm_expr(a)), body), 1)
-
-
 def placeholder_embedding(content: str, dim: int = 64) -> list[float]:
     """Bit-exact twin of the reference placeholder provider
     (automem/embedding/placeholder.py:28-42)."""

@@ -1,18 +1,21 @@
-"""Deduplication family for large-scale corpora.
+"""Deduplication family over a memory or document corpus.
 
 The reference dedups only at result level (R7 fingerprint, recall.py:310-389).
-A 100 TB training-data pipeline needs corpus-level dedup; these operators add
-the standard family, each as a DataFrame program:
+These operators add corpus-level dedup, each as a DataFrame program:
 
 - exact_dedup: hash-groupBy on normalized content (one shuffle).
 - fingerprint_dedup: the reference's 320-char fingerprint as corpus dedup.
 - ngram_jaccard_pairs: exact n-gram-shingle Jaccard over candidate pairs.
-- minhash_lsh_pairs: MinHash + banded LSH — the scale path. Shingle →
-  minhash signature (xxhash64 with k seeds, all JVM expressions) → band →
-  groupBy-band bucket join → candidate pairs → exact Jaccard verify.
-- simhash64: 64-bit SimHash fingerprint from token hashes, JVM-only.
+- minhash_lsh_pairs: MinHash + banded LSH. One Arrow pass computes the
+  signatures and band buckets (`minhash_banded_map`) → (band, bucket)
+  pair generation → exact Jaccard verify.
+- simhash64_signatures: 64-bit SimHash fingerprints from token hashes.
 - simhash_pairs: banded hamming join — pigeonhole-exact near-dup pairs at
   hamming <= bands-1, sharing the one-shuffle bucket pair machinery.
+
+The SQL-expression twins of the MinHash banding and of SimHash64 are test
+oracles (tests/dedup_oracle.py); the kernels are pinned bit-identical to
+them.
 """
 
 from __future__ import annotations
@@ -138,73 +141,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def minhash_banded_sql(num_hashes: int, bands: int) -> str:
-    """SQL text producing (id, band, bucket) from an exploded (id, shingle)
-    frame bound as ``{exploded}`` — the signature-min and band-bucket
-    extraction of :func:`minhash_lsh_pairs` in one JVM-side parse.
-    All arguments are module-controlled ints (no string interpolation of
-    user data)."""
-    rows_per_band = num_hashes // bands
-    hashes = ", ".join(f"xxhash64(s, {i}) AS h{i}" for i in range(num_hashes))
-    mins = ", ".join(f"min(h{i}) AS s{i}" for i in range(num_hashes))
-    band_structs = ", ".join(
-        "struct({b} AS band, xxhash64(concat_ws(',', {cols})) AS bucket)".format(
-            b=b,
-            cols=", ".join(
-                f"cast(s{b * rows_per_band + r} AS string)"
-                for r in range(rows_per_band)
-            ),
-        )
-        for b in range(bands)
-    )
-    return f"""
-        SELECT id, bb.band AS band, bb.bucket AS bucket
-        FROM (
-            SELECT id, explode(array({band_structs})) AS bb
-            FROM (
-                SELECT id, {mins}
-                FROM (SELECT id, {hashes} FROM {{exploded}})
-                GROUP BY id
-            )
-        )
-    """
-
-
-def minhash_banded_columns(
-    exploded: DataFrame, num_hashes: int, bands: int
-) -> DataFrame:
-    """Column-tree twin of :func:`minhash_banded_sql` — kept ONLY as the
-    equivalence reference for the SQL text (the tree costs ~0.9s of py4j
-    calls per build at 64/32; the hot path uses the text)."""
-    rows_per_band = num_hashes // bands
-    hash_cols = [
-        F.xxhash64(F.col("s"), F.lit(i)).alias(f"h{i}") for i in range(num_hashes)
-    ]
-    sigs = (
-        exploded.select("id", *hash_cols)
-        .groupBy("id")
-        .agg(*[F.min(f"h{i}").alias(f"s{i}") for i in range(num_hashes)])
-    )
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.xxhash64(
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.col(f"s{b * rows_per_band + r}").cast("string")
-                        for r in range(rows_per_band)
-                    ],
-                )
-            ).alias("bucket"),
-        )
-        for b in range(bands)
-    ]
-    return sigs.select("id", F.explode(F.array(*band_structs)).alias("bb")).select(
-        "id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-    )
-
-
 def minhash_banded_map(
     df: DataFrame,
     *,
@@ -214,15 +150,16 @@ def minhash_banded_map(
     num_hashes: int = 64,
     bands: int = 16,
 ) -> DataFrame:
-    """Arrow-kernel twin of :func:`minhash_banded_sql`: (id, band, bucket)
-    straight from the document rows in ONE ``mapInPandas`` pass — no
-    shingle explode, no signature groupBy shuffle — bit-identical output
-    (pinned by tests/test_operators.py::test_minhash_banded_map_matches_sql
-    and the pairs-level property test).
+    """MinHash band buckets (id, band, bucket) straight from the document
+    rows in ONE ``mapInPandas`` pass — no shingle explode, no signature
+    groupBy shuffle. Bit-identical to the SQL-expression oracle in
+    tests/dedup_oracle.py (pinned by
+    tests/test_operators.py::test_minhash_banded_map_matches_sql and the
+    property test).
 
-    Why this beats the expression path: the SQL path explodes to one row PER
-    SHINGLE, re-hashes the shingle string ``num_hashes`` times (64 full
-    xxhash64 passes over the bytes — Catalyst has no common-subexpression
+    Why a kernel: the SQL expression form explodes to one row PER SHINGLE,
+    re-hashes the shingle string ``num_hashes`` times (64 full xxhash64
+    passes over the bytes — Catalyst has no common-subexpression
     elimination across the seed children), and shuffles (docs × 64) longs
     through a groupBy to take the mins. The kernel hashes each shingle's
     bytes ONCE (vectorized numpy XXH64, functions/xxh64np.py) and derives
@@ -232,7 +169,7 @@ def minhash_banded_map(
     signature stage; the only remaining exchange in the LSH pipeline is the
     (band, bucket) groupBy that candidate generation genuinely needs.
 
-    Bit-identity contract with the SQL text (all property-pinned):
+    Bit-identity contract with the SQL oracle (all property-pinned):
     - tokenizer: ``re.ASCII`` mirrors Java's ASCII-only ``\\w``/``\\s`` in
       ``normalized_text_expr``; NULL text normalizes to ``""`` exactly like
       the expression chain (split(NULL) -> one empty shingle);
@@ -242,10 +179,10 @@ def minhash_banded_map(
     - bucket = xxhash64 of the comma-joined SIGNED decimal signature
       segment, same as ``concat_ws(',', cast(s AS string)...)``.
 
-    100 TB posture: per-task work is linear in that task's bytes, output is
-    exactly (docs × bands) rows, and the Python crossing is Arrow-batched
-    (10k docs/batch) with vectorized numpy inside — the same scan-speed
-    shape as the similarity kernels.
+    Per-task work is linear in that task's bytes, output is exactly
+    (docs × bands) rows, and the Python crossing is Arrow-batched (10k
+    docs/batch) with vectorized numpy inside — the same scan-speed shape
+    as the similarity kernels.
     """
     id_type = df.schema[id_col].dataType.simpleString()
     out_schema = f"id {id_type}, band int, bucket bigint"
@@ -530,20 +467,13 @@ def minhash_lsh_pairs(
     bands: int = 16,
     verify: bool = True,
     max_bucket_size: int = 512,
-    signature_impl: str = "map",
 ) -> DataFrame:
     """MinHash + banded-LSH near-dup candidate generation, with exact
     Jaccard verification (so output ⊆ ngram_jaccard_pairs output).
 
-    signature_impl: "map" (default, r14) computes signatures + banding in
-    one Arrow ``mapInPandas`` pass (:func:`minhash_banded_map` — hashes
-    each shingle once, no explode, no signature shuffle); "sql" is the
-    JVM-expression path (:func:`minhash_banded_sql`), kept as the
-    SQL-expressible oracle anchor and pinned bit-identical to the kernel.
-
-    Plan shape at 100 TB: one narrow pass computes signatures (one shuffle
-    of (docs × num_hashes) longs with map-side combine), explode to `bands`
-    rows per doc, ONE shuffle on (band, bucket) that feeds both the
+    Plan shape: one Arrow pass computes signatures and band buckets
+    (:func:`minhash_banded_map`, no shuffle), ONE shuffle on (band, bucket)
+    that feeds both the
     bucket-size gate (count window) and pair generation (collect_list →
     in-array pair expansion — arrays bounded by the cap), then a distinct
     over candidate pairs and a verify join against the shingle sets only
@@ -561,35 +491,9 @@ def minhash_lsh_pairs(
     cheaply than pairwise LSH. 0 disables the cap.
     """
     df = ensure_parallelism(df)
-    if signature_impl == "map":
-        # r14 default: one Arrow pass per partition — see minhash_banded_map
-        banded = minhash_banded_map(
-            df, text_col=text_col, id_col=id_col, n=n,
-            num_hashes=num_hashes, bands=bands,
-        )
-    else:
-        # Oracle-anchor expression path. Explode shingles FIRST, then hash
-        # per shingle-row, then groupBy-min. Computing the signature as one
-        # nested array expression looks elegant but is pathological:
-        # Catalyst collapses projections and higher-order lambdas get no
-        # common-subexpression elimination, so the shingle build would be
-        # re-evaluated once per hash per band (~2000× per row). The explode
-        # → 64 plain hash columns → partial-agg min shape keeps every
-        # expression evaluated exactly once and map-side combine bounds the
-        # shuffle at (docs × 64) longs.
-        exploded = df.select(
-            F.col(id_col).alias("id"),
-            F.explode(shingles_expr(F.col(text_col), n)).alias("s"),
-        )
-        # hash + signature-min + band extraction as ONE SQL text (r12): the
-        # Column constructor built ~(2*num_hashes + bands*rows_per_band)
-        # py4j trees per call — ~0.9s of the row's 2.0s build tax at the
-        # default 64/32 shape. The text parses JVM-side in one round trip;
-        # plan and results are pinned identical to the Column twin by
-        # tests/test_operators.py::test_minhash_banded_sql_matches_columns.
-        banded = exploded.sparkSession.sql(
-            minhash_banded_sql(num_hashes, bands), exploded=exploded
-        )
+    banded = minhash_banded_map(
+        df, text_col=text_col, id_col=id_col, n=n, num_hashes=num_hashes, bands=bands
+    )
     cand = bucketed_candidate_pairs(banded, max_bucket_size)
     if not verify:
         return cand
@@ -640,60 +544,11 @@ def minhash_lsh_pairs(
     )
 
 
-def simhash64_expr(text: Column) -> Column:
-    """64-bit SimHash of the word set: for each bit, sign of Σ±1 over token
-    hashes. Pure JVM expressions (token → xxhash64 → per-bit vote).
-
-    Bit values are 2^bit as exact double→long casts (powers of two are exact
-    in IEEE754); bit 63 contributes Long.MIN_VALUE so the result is proper
-    two's-complement without ANSI overflow.
-
-    Empty tokens are filtered so an empty/punctuation-only document hashes to
-    0 (split("") yields [""] which would otherwise vote with hash('')).
-    """
-    words = F.array_distinct(
-        F.filter(F.split(normalized_text_expr(text), " "), lambda w: w != "")
-    )
-
-    def bit_value(bit: Column) -> Column:
-        return F.when(bit < 63, F.pow(F.lit(2.0), bit).cast("long")).otherwise(
-            F.lit(-9223372036854775808).cast("long")
-        )
-
-    # r14: bind the token-hash array as a lambda variable (same fix as
-    # shingles_expr). The per-bit vote aggregate's lambda body referenced
-    # the raw `hashes` subtree, and lambda bodies re-evaluate per element:
-    # tokenize + xxhash64 of EVERY word ran once PER BIT (64x per row).
-    # Bound, they run once; the 64 x |words| vote walk (the algorithm
-    # itself) reads the bound array. Values unchanged — pinned by the
-    # simhash oracle rows and the md5-twin equality tests.
-    def body(hashes: Column) -> Column:
-        bits = F.sequence(F.lit(0), F.lit(63))
-        return F.aggregate(
-            bits,
-            F.lit(0).cast("long"),
-            lambda acc, bit: acc
-            + F.when(
-                F.aggregate(
-                    hashes,
-                    F.lit(0).cast("long"),
-                    lambda votes, h: votes
-                    + F.when(F.getbit(h, bit) == 1, F.lit(1)).otherwise(F.lit(-1)),
-                )
-                > 0,
-                bit_value(bit),
-            ).otherwise(F.lit(0).cast("long")),
-        )
-
-    wrapped = F.array(F.transform(words, lambda w: F.xxhash64(w)))
-    return F.element_at(F.transform(wrapped, body), 1)
-
-
 def simhash60_md5_expr(text: Column) -> Column:
-    """60-bit SimHash using md5-derived token hashes — the oracle twin of
-    :func:`simhash64_expr`.
+    """60-bit SimHash using md5-derived token hashes — the cross-engine
+    twin of the xxhash64 fingerprint (:func:`simhash64_signatures`).
 
-    xxhash64 has no ANSI-SQL equivalent, so the production fingerprint above
+    xxhash64 has no ANSI-SQL equivalent, so the production fingerprint
     cannot be cross-checked by an external engine. This variant derives each
     token hash from the first 15 hex chars of md5 (60 bits — sign-safe in a
     signed 64-bit long), which both Spark and DuckDB compute identically, so
@@ -705,7 +560,8 @@ def simhash60_md5_expr(text: Column) -> Column:
         F.filter(F.split(normalized_text_expr(text), " "), lambda w: w != "")
     )
 
-    # same lambda-binding as simhash64_expr: hash-per-bit → hash-once
+    # the token-hash array is bound as a lambda variable: inline, tokenize
+    # + hash of every word would re-run once PER BIT
     def body(hashes: Column) -> Column:
         bits = F.sequence(F.lit(0), F.lit(59))
         return F.aggregate(
@@ -762,7 +618,7 @@ def simhash_pairs(
     then a popcount verify on candidates only.
 
     `sim_expr` defaults to the xxhash64 production fingerprint
-    (:func:`simhash64_expr`); pass :func:`simhash60_md5_expr` (with
+    (:func:`simhash64_signatures`); pass :func:`simhash60_md5_expr` (with
     n_bits=60) for the cross-engine oracle twin. Output: (src, dst,
     hamming).
     """
@@ -839,16 +695,17 @@ def simhash64_signatures(
     df: DataFrame, *, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """(id, sh) SimHash64 signatures via explode → 64 vote columns →
-    partial-aggregating groupBy — the high-throughput twin of the per-row
-    :func:`simhash64_expr`.
+    partial-aggregating groupBy: for each bit, the sign of Σ±1 over the
+    xxhash64 of the distinct words. An empty document hashes to 0.
 
-    The expression form evaluates a nested aggregate lambda per bit per
+    The per-row expression form (the test oracle in tests/dedup_oracle.py)
+    evaluates a nested aggregate lambda per bit per
     token (O(64·T) interpreted higher-order calls per row — correct, and
     fine as the scalar definition, but outside whole-stage codegen). This
     shape hashes each token once, derives all 64 ±1 votes as flat codegen
     columns, and lets map-side combine bound the shuffle at (docs × 64)
-    ints — the same rationale as the MinHash signature pass. Bit-identical
-    to simhash64_expr (pinned by test).
+    ints. Bit-identical to the expression form (pinned by
+    tests/test_operators.py::test_simhash_signatures_match_expression_form).
     """
     words = df.select(
         F.col(id_col).alias("id"),

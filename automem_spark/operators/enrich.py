@@ -17,10 +17,8 @@ bounded join, composed over a single corpus scan:
   keyed on id, combiner-sized payload).
 - temporal links: as-of range join partitioned by a grouping key — an
   equi-join with range residual, never a corpus-wide window.
-- semantic neighbors: exact cosine self-join for bounded corpora; at scale
-  pass ``use_lsh=True`` to swap in the BucketedRandomProjectionLSH
-  threshold join (same output contract, candidate-bucketed instead of
-  all-pairs).
+- semantic neighbors: the exact cosine threshold self-join over the
+  window's embeddings (one broadcast nested-loop join).
 - patterns: explode + two-level aggregate; the per-type top-term table is
   at most |types| rows and is broadcast back.
 
@@ -41,10 +39,7 @@ from automem_spark.operators.enrichment import (
     detect_patterns_batch,
 )
 from automem_spark.operators.entity_extract import extract_entities
-from automem_spark.operators.similarity import (
-    cosine_threshold_self_join,
-    lsh_threshold_self_join,
-)
+from automem_spark.operators.similarity import cosine_threshold_self_join
 from automem_spark.plans.checkpoint import maybe_checkpoint
 from automem_spark.plans.parallelism import ensure_parallelism
 
@@ -61,7 +56,6 @@ def enrich_pipeline(
     max_temporal: int = 3,
     neighbor_threshold: float = 0.25,
     max_neighbors: int = 5,
-    use_lsh: bool = False,
     pattern_min_members: int = 4,
     pattern_min_confidence: float = 0.5,
 ) -> DataFrame:
@@ -118,8 +112,7 @@ def enrich_pipeline(
         emb = embeddings.join(
             mem.select(F.col("id").alias("vec_id")), "vec_id", "left_semi"
         )
-        join_fn = lsh_threshold_self_join if use_lsh else cosine_threshold_self_join
-        pairs = join_fn(emb, neighbor_threshold, item_id="vec_id")
+        pairs = cosine_threshold_self_join(emb, neighbor_threshold, item_id="vec_id")
         und = pairs.select(F.col("src").alias("id")).unionAll(
             pairs.select(F.col("dst").alias("id"))
         )

@@ -529,23 +529,19 @@ def graph_neighbors(
     center = embeddings.filter(F.col("vec_id") == center_id).collect()
     if not center:
         return graph_part
-    from automem_spark.operators.similarity import cosine_topk_join
+    from automem_spark.operators.similarity import cosine_topk_mapinpandas
 
     qv = [float(x) for x in center[0]["embedding"]]
-    spark = embeddings.sparkSession
-    queries = spark.createDataFrame(
-        [("c", qv)], "query_id string, query_embedding array<double>"
+    top = cosine_topk_mapinpandas(
+        embeddings, [("c", qv)], semantic_limit + 1, item_id="vec_id"
     )
-    top = cosine_topk_join(embeddings, queries, semantic_limit + 1, item_id="vec_id")
     sem = (
-        top.filter(F.col("vec_id") != center_id)
-        .join(bfs.select(F.col("id").alias("vec_id")), "vec_id", "left_anti")
-        .join(
-            memories.select(F.col("id").alias("vec_id"), "importance"), "vec_id"
-        )
+        top.filter(F.col("id") != center_id)
+        .join(bfs.select("id"), "id", "left_anti")
+        .join(memories.select("id", "importance"), "id")
     )
     sem_part = sem.select(
-        F.col("vec_id").alias("id"),
+        "id",
         F.lit("semantic").alias("source"),
         F.lit(-1).cast("bigint").alias("depth"),
         F.round("sim", 5).alias("sim"),

@@ -6,9 +6,10 @@ Reference: automem/search/runtime_recall_helpers.py:727-868 (channel),
 
 Shape: the QUERY analysis (tokenization, requested-field detection) is
 per-request driver Python — identical to the reference's — while the per-row
-VALUE scoring compiles to column expressions specialized with the query's
-constants, so the scan stays JVM-side. A paired SQL generator emits the same
-specialized logic as DuckDB SQL for the correctness oracle.
+VALUE scoring is one Spark-SQL expression specialized with the query's
+constants, so the scan stays JVM-side. The same generator emits the DuckDB
+SQL for the correctness oracle; a hand-built Column-tree twin lives in
+tests/metadata_oracle.py.
 
 Round-1 scope: scalar whitelisted fields (source, repo, project, tool,
 model, ...). The entities sub-dict handling (always-exclude people, require
@@ -95,88 +96,17 @@ def query_value_tokens(query_text: str) -> list[str]:
     return out
 
 
-def _fold_expr(col: Column) -> Column:
-    """ASCII-fold column twin (values are ASCII in our corpora; non-ASCII
-    dropped like the reference's encode('ascii','ignore'))."""
-    t = F.regexp_replace(col.cast("string"), r"[^\x00-\x7F]", "")
-    t = F.regexp_replace(t, r"[^A-Za-z0-9]+", " ")
-    return F.lower(F.trim(F.regexp_replace(t, r"\s+", " ")))
-
-
-def metadata_score_expr(
-    fields: dict[str, Column], query_text: str
-) -> Column:
-    """Best per-field sidecar score for one query (scorer :270-340)."""
-    qvt = query_value_tokens(query_text)
-    if not qvt:
-        return F.lit(0.0)
-    requested = requested_metadata_fields(query_text)
-    nq = ascii_search_text(query_text)
-
-    per_field: list[Column] = []
-    for field, col in fields.items():
-        value_text = _fold_expr(col)
-        vt = F.filter(F.split(value_text, " "), lambda t: F.length(t) >= 2)
-        n_vt = F.size(vt)
-        hit_flags = [F.array_contains(vt, tok) for tok in qvt]
-        n_hits = sum((h.cast("int") for h in hit_flags), F.lit(0))
-        exact_hit = (value_text != "") & (F.instr(F.lit(nq), value_text) > 0)
-        field_requested = field in requested
-
-        # length of the single hit (valid only when n_hits == 1)
-        hit_len = F.greatest(
-            *[F.when(h, F.lit(len(tok))).otherwise(F.lit(0)) for tok, h in zip(qvt, hit_flags)]
-        ) if len(qvt) > 1 else F.when(hit_flags[0], F.lit(len(qvt[0]))).otherwise(F.lit(0))
-
-        strong = (
-            ((n_vt > 1) & (n_hits >= F.least(F.lit(2), n_vt)))
-            | (
-                (n_hits == 1)
-                & (
-                    (F.lit(field_requested and bool(requested)) & exact_hit & (hit_len >= 3))
-                    | ((hit_len >= 5) & F.lit(field_requested and bool(requested)))
-                    | ((hit_len >= 5) & exact_hit & F.lit(len(qvt) <= 3))
-                )
-            )
-        )
-        gate = (value_text != "") & (n_vt > 0) & (n_hits > 0) & strong
-        # repo rule: non-exact repo matches must cover all query value tokens
-        if field == "repo" and "repo" in requested:
-            covers_all = F.lit(True)
-            for h in hit_flags:
-                covers_all = covers_all & h
-            gate = gate & (exact_hit | covers_all)
-        # requested-but-other-field rule
-        if requested and not field_requested:
-            gate = gate & (n_hits >= 2)
-
-        value_ratio = n_hits.cast("double") / F.greatest(n_vt, F.lit(1)).cast("double")
-        query_ratio = n_hits.cast("double") / F.lit(float(max(len(qvt), 1)))
-        score = F.least(
-            F.lit(1.0),
-            F.lit(0.15)
-            + 0.45 * value_ratio
-            + 0.20 * query_ratio
-            + F.when(exact_hit, F.lit(0.15)).otherwise(F.lit(0.0))
-            + F.lit(0.20 if (requested and field_requested) else 0.0),
-        )
-        if requested and not field_requested:
-            score = score * 0.6
-        per_field.append(F.when(gate, score).otherwise(F.lit(0.0)))
-
-    return F.greatest(*per_field) if len(per_field) > 1 else per_field[0]
-
-
 def metadata_score_expr_fast(field_names: list[str], query_text: str) -> Column:
-    """Same scorer as `metadata_score_expr`, built as ONE Spark-SQL string.
+    """Best per-field sidecar score for one query (scorer :270-340), built
+    as ONE Spark-SQL string.
 
-    The Column builder issues hundreds of py4j calls per query (~0.65 s of
-    pure driver-side tree construction measured at r10 — more than the
-    channel's whole JVM execution); generating the specialized logic as SQL
-    text and parsing it with a single `F.expr` makes the per-request build
-    cost O(1) py4j calls. `field_names` must be column names resolvable in
-    the frame the expression is applied to. Equivalence with the Column
-    twin is pinned by tests/test_metadata_search.py."""
+    A Column-tree builder issues hundreds of py4j calls per query (~0.65 s
+    of pure driver-side tree construction measured at r10 — more than the
+    channel's whole JVM execution); parsing the specialized SQL text with a
+    single `F.expr` makes the per-request build cost O(1) py4j calls.
+    `field_names` must be column names resolvable in the frame the
+    expression is applied to. Equivalence with the Column-tree twin
+    (tests/metadata_oracle.py) is pinned by tests/test_metadata_search.py."""
     return F.expr(
         metadata_score_sql_spark({f: f"`{f}`" for f in field_names}, query_text)
     )
@@ -186,16 +116,13 @@ def metadata_channel(
     pool: DataFrame,
     query_text: str,
     limit: int,
-    fields: dict[str, Column],
+    fields: list[str],
     *,
     metadata_json_col: str = "metadata",
 ) -> DataFrame:
     """R5 channel: JSON-string prefilter (first 12 ordered value terms,
     :191-199) then precise scoring, slots = min(limit, 10) (:2015-2040).
-
-    When every requested field is a plain column of `pool` (the only shape
-    our callers use), the scorer is built via the one-`F.expr` fast path;
-    arbitrary Column values fall back to the tree builder."""
+    `fields` are the names of `pool`'s scalar metadata columns."""
     terms = query_value_tokens(query_text)[:METADATA_PREFILTER_MAX_TERMS]
     if not terms:
         return pool.limit(0).withColumn("match_score", F.lit(0.0)).withColumn(
@@ -205,16 +132,9 @@ def metadata_channel(
     prefilter = meta_l.contains(terms[0])
     for t in terms[1:]:
         prefilter = prefilter | meta_l.contains(t)
-    cols = set(pool.columns)
-    if all(
-        f in cols and str(v) == str(F.col(f)) for f, v in fields.items()
-    ):
-        scorer = metadata_score_expr_fast(list(fields), query_text)
-    else:
-        scorer = metadata_score_expr(fields, query_text)
     scored = (
         pool.filter(prefilter)
-        .withColumn("match_score", scorer)
+        .withColumn("match_score", metadata_score_expr_fast(fields, query_text))
         .filter(F.col("match_score") > 0)
         .withColumn("match_type", F.lit("metadata"))
     )
@@ -225,10 +145,9 @@ def metadata_channel(
 
 
 #: Single source of truth for the metadata-scorer semantics (r10 verdict
-#: ask #5): every constant the three dialects share — the Column twin
-#: (`metadata_score_expr`), the Spark-SQL fast path, and the DuckDB oracle
-#: — lives HERE, and the two SQL texts are emitted by ONE generator
-#: (:func:`_metadata_score_text`) from it. Weights are kept as decimal
+#: ask #5): every constant the two SQL dialects share — the Spark-SQL
+#: scorer and the DuckDB oracle — lives HERE, and the two SQL texts are
+#: emitted by ONE generator (:func:`_metadata_score_text`) from it. Weights are kept as decimal
 #: STRINGS so each dialect controls its own numeric-literal form (DuckDB
 #: keeps bare decimals, Spark wraps CAST(.. AS DOUBLE)) without the texts
 #: drifting from each other. A semantics change is now one edit.
@@ -347,19 +266,19 @@ def _duck_dialect() -> dict:
 
 
 def metadata_score_sql(fields: dict[str, str], query_text: str) -> str:
-    """DuckDB twin of metadata_score_expr — same specialization, SQL text,
-    emitted from the shared spec/generator above.
+    """DuckDB twin of the Spark-SQL scorer — same specialization, emitted
+    from the shared spec/generator above.
     fields: field name -> SQL expression for the value column."""
     return _metadata_score_text(fields, query_text, _duck_dialect())
 
 
 def _spark_dialect() -> dict:
-    """Spark-SQL primitives for :func:`_metadata_score_text` (fast-path
-    side). Two dialect rules with measured reasons:
+    """Spark-SQL primitives for :func:`_metadata_score_text` (the engine's
+    scorer). Two dialect rules with measured reasons:
 
     - every numeric operand is CAST to DOUBLE — bare decimal literals
       parse as DECIMAL in Spark SQL and would diverge from the all-double
-      Column twin in low-order bits;
+      Column-tree twin in low-order bits;
     - the value fold and its token array are let-bound (`vtx`/`vtoks` via
       single-element transform lambdas): the scorer references the folded
       text ~8x and the token array ~6x, and Catalyst does no CSE across
@@ -384,7 +303,7 @@ def _spark_dialect() -> dict:
         )
 
     def part(col_sql: str, gate: str, score: str) -> str:
-        # _fold_expr twin: strip non-ASCII, non-alnum runs -> single space,
+        # ASCII fold: strip non-ASCII, non-alnum runs -> single space,
         # collapse whitespace, trim, lower. The '\\'s below are consumed by
         # Spark's SQL string-literal unescaping, leaving single-backslash
         # regex metacharacters.
@@ -414,11 +333,10 @@ def _spark_dialect() -> dict:
 
 
 def metadata_score_sql_spark(fields: dict[str, str], query_text: str) -> str:
-    """Spark-SQL twin of `metadata_score_expr` — same specialization, SQL
-    text, for the one-`F.expr` fast path, emitted from the shared
-    spec/generator above (the Column reference twin stays hand-built and
-    is pinned bit-identical by tests). fields: field name -> Spark SQL
-    expression for the value column."""
+    """The metadata scorer as Spark-SQL text, for the one-`F.expr` scorer,
+    emitted from the shared spec/generator above (the Column-tree twin in
+    tests/metadata_oracle.py is pinned bit-identical to it). fields: field
+    name -> Spark SQL expression for the value column."""
     return _metadata_score_text(fields, query_text, _spark_dialect())
 
 

@@ -214,7 +214,7 @@ def recall_many_hybrid(
     limit: int,
     *,
     query_vectors: dict[str, list[float]] | None = None,
-    meta_fields: dict[str, Column] | None = None,
+    meta_fields: list[str] | None = None,
     now: str = "2026-06-01 00:00:00",
     w: Weights = DEFAULT_WEIGHTS,
 ) -> DataFrame:
@@ -275,13 +275,7 @@ def recall_many_hybrid(
         if vecs.get(qid) is not None
     ]
     if qmat and "embedding" in memories.columns:
-        winners = cosine_topk_mapinpandas(
-            pool.filter(F.col("embedding").isNotNull()),
-            qmat,
-            k,
-            item_id="id",
-            item_vec="embedding",
-        )
+        winners = cosine_topk_mapinpandas(pool, qmat, k)
     else:
         winners = spark.createDataFrame([], "query_id string, id long, sim double")
     # Q×k rows feeding three consumers (vector candidates, keyword slot
@@ -342,24 +336,11 @@ def recall_many_hybrid(
 
     # --- metadata sidecar channel (R5), per-query specialized scorer ---
     if meta_fields:
-        from automem_spark.operators.metadata_search import (
-            metadata_score_expr,
-            metadata_score_expr_fast,
-        )
+        from automem_spark.operators.metadata_search import metadata_score_expr_fast
 
-        # one-F.expr scorer per query when the fields are plain columns
-        # (the tree builder costs ~0.65 s of py4j calls PER QUERY — the
-        # dominant driver-side cost of the multi-query plan build)
-        _jcols = set(j.columns)
-        fast = all(
-            k in _jcols and str(v) == str(F.col(k)) for k, v in meta_fields.items()
-        )
         md_expr: Column | None = None
         for qid, text in queries:
-            if fast:
-                e = metadata_score_expr_fast(list(meta_fields), text)
-            else:
-                e = metadata_score_expr(meta_fields, text)
+            e = metadata_score_expr_fast(meta_fields, text)
             md_expr = (
                 F.when(F.col("query_id") == qid, e)
                 if md_expr is None
@@ -654,11 +635,13 @@ def recall_full(
     win over entity expansions (expansions are appended only for unseen
     ids, recall.py:2239-2297).
 
-    Scale shape: the only corpus-wide work is the channel scan (filters
-    pushed to the parquet scan). Everything after operates on bounded sets
-    (seeds ≤ limit, expansions ≤ 25 each, supersession heads ≪ corpus), so
-    every join below broadcasts and the windows are O(limit) — the pipeline
-    adds no corpus-wide shuffle at 100 TB.
+    Work shape: the corpus-wide work is the channel scan (filters pushed to
+    the parquet scan) and the current-state filter's supersession walk over
+    `edges`. Everything else operates on bounded sets (seeds ≤ limit,
+    expansions ≤ 25 each), so every join below broadcasts and the windows
+    are O(limit). Building the plan runs eager jobs: the seed and candidate
+    checkpoints, and the state filter's `mem_info` checkpoint, which runs
+    the supersession walk.
 
     Output: (id, match_type, position, final_score).
     """
@@ -814,10 +797,7 @@ def recall(
             from automem_spark.operators.metadata_search import metadata_channel
 
             channels.append(
-                metadata_channel(
-                    pool, req.query, req.limit,
-                    {f: F.col(f) for f in meta_field_names},
-                )
+                metadata_channel(pool, req.query, req.limit, meta_field_names)
             )
     else:
         channels.append(trending_channel(pool, req.limit))

@@ -1,4 +1,5 @@
-"""Similarity search operators: top-k cosine joins and threshold self-joins.
+"""Similarity search operators: exact cosine top-k, threshold self-joins
+and the IVF approximate top-k.
 
 Reference counterparts:
 - per-query vector top-K ANN (R1, runtime_recall_helpers.py:940-1030)
@@ -6,18 +7,15 @@ Reference counterparts:
   automem/enrichment/runtime_helpers.py:177-254)
 - clustering adjacency — pairwise cosine >= 0.75 (C3, consolidation.py:457-617)
 
-Three physical strategies, one logical semantics:
-1. `cosine_topk_join` — pure DataFrame cross-join + window. Exact; correct
-   at any scale but O(Q×N) shuffle: right for small Q (broadcast the
-   queries side — Catalyst does this automatically under the 64 MB
-   threshold, and we hint it).
-2. `cosine_topk_mapinpandas` — broadcast the query matrix, NumPy matmul per
-   partition, emit per-partition top-k, then global top-k. Same results,
-   ~50× less Python/serialization overhead at scale. This is the 100 TB
-   path for exact search.
-3. `lsh_threshold_join` — BucketedRandomProjectionLSH on L2-normalized
-   vectors (unit vectors: L2² = 2−2cos, so cos >= t ⇔ dist <= sqrt(2−2t)).
-   Approximate; the scale path for self-joins where O(N²) is impossible.
+One production kernel per shape:
+- exact top-k per query: `cosine_topk_mapinpandas` — the query matrix ships
+  to executors once, each Arrow batch is one NumPy matmul, a per-partition
+  heap keeps the shuffle at O(parts × Q × k) rows, then a global top-k;
+- threshold pairs (J14/C3): `cosine_threshold_self_join` — exact, one
+  broadcast nested-loop join over a bounded window;
+- approximate top-k: `ivf_topk` (and `ivf_topk_indexed` over a
+  cell-partitioned copy) — coarse quantizer cells, exact cosine inside the
+  probed cells.
 """
 
 from __future__ import annotations
@@ -31,60 +29,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from automem_spark.functions.vector import (
-    cosine_expr,
-    dot_expr,
-    l2_normalize_expr,
-    norm_expr,
-)
-from automem_spark.operators.topk import partial_top_k_per_group, top_k_per_group
+from automem_spark.functions.vector import cosine_expr, dot_expr, norm_expr
+from automem_spark.operators.topk import top_k_per_group
 from automem_spark.plans.parallelism import ensure_parallelism
-
-
-def cosine_topk_join(
-    items: DataFrame,
-    queries: DataFrame,
-    k: int,
-    *,
-    item_id: str = "id",
-    item_vec: str = "embedding",
-    query_id: str = "query_id",
-    query_vec: str = "query_embedding",
-) -> DataFrame:
-    """Exact top-k per query via broadcast cross-join + two-stage window.
-
-    Output: (query_id, id, sim) with rank <= k per query, ties broken by id.
-    The ranking is the partial top-k (per (query, input-partition) first):
-    a plain Window.partitionBy(query_id) would funnel all N corpus rows of
-    a query through ONE reducer — the corpus-per-reducer shape the recall
-    plan guards forbid; here each reducer sorts at most an input partition
-    and the global stage sees <= parts*k rows per query.
-    """
-    # r14: bind per-row norms on each side before the cross join so the
-    # N×Q stage pays ONE O(d) dot per pair instead of three aggregate
-    # passes (norms are per-row; see cosine_threshold_self_join). Same
-    # arithmetic, bit-identical sim.
-    q = F.broadcast(
-        queries.select(
-            query_id, query_vec, norm_expr(F.col(query_vec)).alias("_nq")
-        )
-    )
-    joined = ensure_parallelism(
-        items.select(item_id, item_vec, norm_expr(F.col(item_vec)).alias("_ni"))
-    ).crossJoin(q)
-    denom = F.col("_ni") * F.col("_nq")
-    joined = joined.withColumn(
-        "sim",
-        F.when(denom == 0.0, F.lit(0.0)).otherwise(
-            dot_expr(F.col(item_vec), F.col(query_vec)) / denom
-        ),
-    )
-    return partial_top_k_per_group(
-        joined.select(query_id, item_id, "sim"),
-        [query_id],
-        [F.desc("sim"), F.asc(item_id)],
-        k,
-    )
 
 
 def cosine_topk_mapinpandas(
@@ -99,7 +46,11 @@ def cosine_topk_mapinpandas(
 
     The query matrix ships to executors once (closure broadcast); each Arrow
     batch computes sims for all queries at once. Partial top-k per batch
-    keeps the shuffle at O(parts × Q × k) rows instead of O(N × Q).
+    keeps the shuffle at O(parts × Q × k) rows instead of O(N × Q). Rows
+    with a NULL embedding are skipped: a vector store has no point for
+    them. Zero-norm vectors (either side) score 0.
+
+    Output: (query_id, id, sim) with rank <= k per query, ties broken by id.
     """
     spark = items.sparkSession
     qids = [qid for qid, _ in query_matrix]
@@ -137,9 +88,8 @@ def cosine_topk_mapinpandas(
                 rows.append((str(qids_l[qi]), int(-neg_id), float(sim)))
         yield pd.DataFrame(rows, columns=["query_id", "id", "sim"])
 
-    partial = ensure_parallelism(items.select(item_id, item_vec)).mapInPandas(
-        compute, schema=out_schema
-    )
+    vectors = items.select(item_id, item_vec).filter(F.col(item_vec).isNotNull())
+    partial = ensure_parallelism(vectors).mapInPandas(compute, schema=out_schema)
     return top_k_per_group(
         partial, ["query_id"], [F.desc("sim"), F.asc("id")], k
     )
@@ -188,47 +138,6 @@ def cosine_threshold_self_join(
         ),
     )
     return pairs.filter(F.col("sim") >= threshold).select("src", "dst", "sim")
-
-
-def lsh_threshold_self_join(
-    items: DataFrame,
-    threshold: float,
-    *,
-    item_id: str = "id",
-    item_vec: str = "embedding",
-    bucket_length: float = 0.5,
-    num_hash_tables: int = 3,
-) -> DataFrame:
-    """Approximate cosine-threshold self-join via Euclidean LSH on
-    L2-normalized vectors — the 100 TB path for J14/C3.
-
-    cos(a,b) >= t on unit vectors ⇔ ||a−b|| <= sqrt(2−2t).
-    Post-filters with exact cosine so output ⊆ exact result (no false
-    positives; recall depends on LSH parameters).
-    """
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector
-
-    normed = items.select(
-        F.col(item_id).alias("nid"),
-        array_to_vector(l2_normalize_expr(F.col(item_vec))).alias("features"),
-    )
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="features",
-        outputCol="hashes",
-        bucketLength=bucket_length,
-        numHashTables=num_hash_tables,
-        seed=42,
-    )
-    model = lsh.fit(normed)
-    dist = float(np.sqrt(max(0.0, 2.0 - 2.0 * threshold)))
-    pairs = model.approxSimilarityJoin(normed, normed, dist, distCol="l2")
-    out = pairs.select(
-        F.col("datasetA.nid").alias("src"),
-        F.col("datasetB.nid").alias("dst"),
-        (1.0 - F.col("l2") * F.col("l2") / 2.0).alias("sim"),
-    ).filter(F.col("src") < F.col("dst"))
-    return out.filter(F.col("sim") >= threshold)
 
 
 def first_n_centroids(
@@ -281,7 +190,7 @@ def kmeans_centroids(
 # aggregate per centroid in a single projection) stops being reasonable:
 # Catalyst analyzes/optimizes an expression tree that grows linearly in
 # n_centroids and codegen compiles it per stage. Realistic IVF uses
-# n_centroids ≈ √N (thousands at 100 TB), where the vectorized argmax is the
+# n_centroids ≈ √N (thousands on a large corpus), where the vectorized argmax is the
 # only sane shape.
 EXPR_ASSIGN_MAX_CENTROIDS = 16
 
@@ -344,8 +253,8 @@ def write_ivf_index(
     """Persist the corpus partitioned by IVF cell so probes become partition
     pruning: a top-k query reads nprobe/n_centroids of the files, and the
     `cell` filter never touches row data (it is resolved from directory
-    names at planning time). This is the layout the 100 TB path assumes —
-    assignment cost is paid once at index build, probes are I/O-pruned."""
+    names at planning time). Assignment cost is paid once at index build,
+    probes are I/O-pruned."""
     assign_cells(items, centroids, item_vec=item_vec).write.partitionBy(
         "cell"
     ).mode("overwrite").parquet(path)
@@ -506,7 +415,7 @@ def ivf_topk(
             "cell", F.coalesce(assign, F.lit(-1))
         ).drop("_ivf_ni", "_ivf_best", *cos_names)
     else:
-        # Realistic centroid counts (√N — thousands at 100 TB): one CASE arm
+        # Realistic centroid counts (√N — thousands on a large corpus): one CASE arm
         # per centroid would blow up the Catalyst expression tree, the same
         # pathology the MinHash signature pass avoids (see dedup.py). The
         # vectorized argmax assigns cells with one matmul per Arrow batch.

@@ -1,11 +1,11 @@
 """Partitioning helpers.
 
-The driver's synthetic tables are single-file/single-row-group parquet, so a
-scan yields ONE input partition regardless of cluster size — and any heavy
+A small parquet table (the test fixtures are single-file/single-row-group)
+scans as ONE input partition regardless of core count — and any heavy
 per-row compute (shingling, hashing, vector math) serializes onto one core.
-At 100 TB the source would naturally have tens of thousands of splits; these
-helpers make small/dense sources behave the same way by inserting one cheap
-round-robin shuffle ahead of compute-intensive fan-out.
+`ensure_parallelism` inserts one cheap round-robin shuffle ahead of such
+compute when the input has fewer partitions than the session's default
+parallelism.
 """
 
 from __future__ import annotations

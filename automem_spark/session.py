@@ -1,8 +1,9 @@
-"""SparkSession factory with scale-oriented defaults.
+"""SparkSession factory: the one session profile for tests, the registry
+and membench.
 
-Local testing runs on local[N]; the same config block is what we would ship
-to a 1000-executor cluster (AQE on, skew-join handling on, sensible shuffle
-partitioning). Keep every knob here so tests and bench share one profile.
+Everything runs on local[N] (N from SPARK_GRAFT_CPUS): AQE on, skew-join
+handling on, shuffle partitions = N. Keep every knob here so the tests and
+the benchmarks share one profile.
 """
 
 from __future__ import annotations
@@ -21,7 +22,7 @@ def get_spark(app_name: str = "automem-spark", shuffle_partitions: int | None = 
         .master(f"local[{cpus}]")
         # AQE: runtime re-planning — coalesce post-shuffle partitions, convert
         # sort-merge to broadcast when a side turns out small, split skewed
-        # partitions. Essential at 100 TB, harmless locally.
+        # partitions.
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -29,8 +30,8 @@ def get_spark(app_name: str = "automem-spark", shuffle_partitions: int | None = 
         # Arrow for every pandas_udf / mapInPandas boundary.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        # Broadcast threshold: dims (region/nation/supplier, query tables) are
-        # tiny even at 100 TB fact scale — let them broadcast aggressively.
+        # Broadcast threshold: dimension and query tables are small — let
+        # them broadcast aggressively.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")

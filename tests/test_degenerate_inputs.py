@@ -44,6 +44,41 @@ def test_recall_on_empty_corpus(spark, empty_mem, empty_edges):
     assert recall_full(empty_mem, empty_edges, req).count() == 0
 
 
+def test_null_tags_row_is_untagged(spark, empty_mem):
+    """A memory whose `tags` is NULL is untagged: an exclude_tags recall
+    keeps it, the scope fallback can fill from it, and delete-by-tag
+    leaves it in place."""
+    import datetime
+
+    from automem_spark.operators.ingest import delete_by_tag
+    from automem_spark.operators.recall import (
+        RecallRequest,
+        recall,
+        recall_with_scope_fallback,
+    )
+
+    ts = datetime.datetime(2026, 5, 1)
+    rows = [
+        (1, "alpha note one", ["a"]),
+        (2, "alpha note two", None),
+        (3, "alpha note three", ["b"]),
+    ]
+    mem = spark.createDataFrame(
+        [
+            (i, c, t, 0.5, 0.9, ts, "Context", False, None, None, None)
+            for i, c, t in rows
+        ],
+        empty_mem.schema,
+    )
+    got = recall(mem, RecallRequest(query="alpha", limit=5, exclude_tags=["a"]))
+    assert sorted(r.id for r in got.collect()) == [2, 3]
+    scoped = recall_with_scope_fallback(
+        mem, RecallRequest(query="alpha", limit=5, tags=["a"])
+    ).collect()
+    assert {(r.id, r.in_scope) for r in scoped} == {(1, True), (2, False), (3, False)}
+    assert sorted(r.id for r in delete_by_tag(mem, ["a"]).collect()) == [2, 3]
+
+
 def test_dedup_family_on_empty(spark, empty_docs):
     from automem_spark.operators.dedup import (
         exact_dedup,
@@ -95,15 +130,21 @@ def test_trainprep_on_empty(spark, empty_docs):
 def test_vector_ops_on_empty(spark):
     from automem_spark.operators.similarity import (
         cosine_threshold_self_join,
-        cosine_topk_join,
+        cosine_topk_mapinpandas,
     )
 
     emb = spark.createDataFrame([], "vec_id bigint, embedding array<double>")
     assert cosine_threshold_self_join(emb, 0.5, item_id="vec_id").count() == 0
-    q = spark.createDataFrame(
-        [(0, [1.0, 0.0])], "query_id bigint, query_embedding array<double>"
+    q = [("0", [1.0, 0.0])]
+    assert cosine_topk_mapinpandas(emb, q, 5, item_id="vec_id").count() == 0
+    # a row without an embedding has no point in the vector space: skipped,
+    # not a crash
+    emb = spark.createDataFrame(
+        [(1, None), (2, [0.0, 1.0]), (3, [1.0, 0.0])],
+        "vec_id bigint, embedding array<double>",
     )
-    assert cosine_topk_join(emb, q, 5, item_id="vec_id").count() == 0
+    got = cosine_topk_mapinpandas(emb, q, 5, item_id="vec_id").collect()
+    assert sorted((r.id, r.sim) for r in got) == [(2, 0.0), (3, 1.0)]
 
 
 def test_identity_synthesis_on_empty(spark, empty_mem, empty_edges):

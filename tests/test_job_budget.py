@@ -1,4 +1,5 @@
-"""Build-time job budgets for the graph walks.
+"""Build-time job budgets for the graph walks, `recall` and
+`graph_neighbors`.
 
 Building a DataFrame should not run Spark jobs; a job launched while the
 plan is built blocks the request before its action starts. Each check
@@ -13,9 +14,11 @@ from pyspark.sql import functions as F
 
 from automem_spark.operators.graph import (
     connected_components,
+    graph_neighbors,
     related_memories_bfs,
     resolve_supersession,
 )
+from automem_spark.operators.recall import RecallRequest, recall
 from automem_spark.operators.similarity import cosine_threshold_self_join
 from automem_spark.sources.graph_fixture import edges_view
 from automem_spark.sources.tables import load_table, memories_view
@@ -60,3 +63,27 @@ def test_graph_walk_build_job_budget(spark, graph):
     assert build_jobs(
         spark, lambda: related_memories_bfs([0, 5, 10], edges, mem, max_depth=1)
     ) <= 2
+
+
+def test_recall_build_job_budget(spark, sf_dir):
+    """Building a hybrid recall (vector, keyword and tag-filtered) runs no
+    job: every channel stays lazy until the action."""
+    emb = load_table(spark, sf_dir, "embeddings")
+    qv = [float(x) for x in emb.filter(F.col("vec_id") == 3).collect()[0].embedding]
+    corpus = memories_view(spark, sf_dir).join(
+        emb.select(F.col("vec_id").alias("id"), "embedding"), "id"
+    )
+    for req in (
+        RecallRequest(query="spark window merge", limit=5),
+        RecallRequest(query="spark window merge", limit=5, tags=["lang:en"]),
+    ):
+        assert build_jobs(spark, lambda: recall(corpus, req, query_vector=qv)) == 0
+
+
+def test_graph_neighbors_build_job_budget(spark, sf_dir, graph):
+    """Building a 1-hop `graph_neighbors` runs 4 jobs on the sf0.001
+    fixture: the BFS frontier collect, the BFS checkpoint (2 jobs) and the
+    centre-vector collect. The similarity kernel adds none."""
+    edges, mem = graph[0], graph[1]
+    emb = load_table(spark, sf_dir, "embeddings")
+    assert build_jobs(spark, lambda: graph_neighbors(5, edges, mem, emb)) <= 4

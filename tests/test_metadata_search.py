@@ -1,12 +1,12 @@
 """Equivalence pins for the R5 metadata sidecar scorer's two Spark builds.
 
-The scorer exists in three lockstep forms: the Column tree builder
-(`metadata_score_expr`, the reference twin), the one-`F.expr` Spark-SQL
-fast path (`metadata_score_expr_fast`, what the channel ships — the tree
-builder costs ~0.65 s of py4j round-trips per query), and the DuckDB
-oracle text (`metadata_score_sql`, exercised by the driver gate). These
-tests pin the two Spark forms bit-identical so the fast path cannot drift
-from the form the oracle was validated against.
+The scorer exists in three lockstep forms: the one-`F.expr` Spark-SQL
+scorer (`metadata_score_expr_fast`, the only one the engine ships), the
+Column tree builder (`metadata_score_expr` in tests/metadata_oracle.py,
+the reference twin), and the DuckDB oracle text (`metadata_score_sql`,
+exercised by scripts/check_correctness.py). These tests pin the two Spark forms
+bit-identical so the shipped scorer cannot drift from the form the oracle
+was validated against.
 
 Reference: automem/search/runtime_recall_helpers.py:270-340 (scorer),
 :245-267 (strong-evidence gates), :727-868 (channel).
@@ -15,9 +15,10 @@ Reference: automem/search/runtime_recall_helpers.py:270-340 (scorer),
 import pytest
 from pyspark.sql import functions as F
 
+from metadata_oracle import metadata_score_expr
+
 from automem_spark.operators.metadata_search import (
     metadata_channel,
-    metadata_score_expr,
     metadata_score_expr_fast,
 )
 from automem_spark.operators.recall import RecallRequest, base_filter
@@ -109,7 +110,7 @@ def test_channel_uses_fast_path_and_matches_tree(spark, sf_dir):
     pool = base_filter(mem, RecallRequest())
     fields = {f: F.col(f) for f in FIELDS}
     query = "find memories from project alpha with duckdb"
-    fast = metadata_channel(pool, query, 10, fields)
+    fast = metadata_channel(pool, query, 10, FIELDS)
     tree = (
         pool.filter(F.lower(F.coalesce(F.col("metadata"), F.lit(""))).contains("alpha")
                     | F.lower(F.coalesce(F.col("metadata"), F.lit(""))).contains("duckdb"))

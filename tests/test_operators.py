@@ -11,12 +11,17 @@ from automem_spark.operators.dedup import (
     fingerprint_dedup,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
-    simhash64_expr,
 )
 from automem_spark.operators.similarity import (
-    cosine_topk_join,
     cosine_topk_mapinpandas,
     cosine_threshold_self_join,
+)
+from dedup_oracle import (
+    exploded_shingles,
+    minhash_banded_columns,
+    minhash_banded_sql,
+    minhash_pairs_oracle,
+    simhash64_expr,
 )
 from automem_spark.operators.textquality import text_profile
 from automem_spark.operators.recall import RecallRequest, recall
@@ -100,21 +105,24 @@ def test_simhash_near_dup_property(spark):
 
 
 def test_cosine_topk_join_vs_mapinpandas(spark, sf_dir):
+    """The exact top-k kernel equals a driver-side NumPy top-k: same ids in
+    (-sim, id) order per query, sims within 1e-12."""
+    import numpy as np
+
     emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.limit(3).select(
-        F.col("vec_id").cast("string").alias("query_id"),
-        F.col("embedding").alias("query_embedding"),
-    )
-    a = cosine_topk_join(emb, queries, 5, item_id="vec_id").collect()
-    qmat = [(r.query_id, list(r.query_embedding)) for r in queries.collect()]
-    b = cosine_topk_mapinpandas(emb, qmat, 5, item_id="vec_id", item_vec="embedding").collect()
-    a_set = {(r.query_id, r.vec_id) for r in a}
-    b_set = {(r.query_id, r.id) for r in b}
-    assert a_set == b_set
-    # self should be top-1 with sim ~1
-    for qid, _ in qmat:
-        top = sorted([r for r in a if r.query_id == qid], key=lambda r: -r.sim)[0]
-        assert str(top.vec_id) == qid and abs(top.sim - 1.0) < 1e-9
+    rows = emb.select("vec_id", "embedding").collect()
+    ids = np.array([r.vec_id for r in rows])
+    mat = np.array([list(r.embedding) for r in rows], dtype=np.float64)
+    qmat = [(str(ids[i]), list(mat[i])) for i in range(3)]
+    got = cosine_topk_mapinpandas(emb, qmat, 5, item_id="vec_id").collect()
+    for qid, qv in qmat:
+        sims = (mat @ np.array(qv)) / np.linalg.norm(mat, axis=1) / np.linalg.norm(qv)
+        want = sorted(zip(-sims, ids))[:5]
+        mine = sorted((-r.sim, r.id) for r in got if r.query_id == qid)
+        assert [i for _, i in mine] == [int(i) for _, i in want]
+        assert all(abs(a - b) < 1e-12 for (a, _), (b, _) in zip(mine, want))
+        # self is top-1 with sim ~1
+        assert str(mine[0][1]) == qid and abs(mine[0][0] + 1.0) < 1e-9
 
 
 def test_cosine_threshold_self_join_symmetric(spark, sf_dir):
@@ -191,7 +199,7 @@ def test_simhash_pairs_banded_equals_bruteforce(spark, sf_dir):
     max_hamming <= bands-1 (4 bands, hamming 3)."""
     from pyspark.sql import functions as F
 
-    from automem_spark.operators.dedup import simhash64_expr, simhash_pairs
+    from automem_spark.operators.dedup import simhash_pairs
     from automem_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 150)
@@ -262,7 +270,7 @@ def test_simhash_signatures_match_expression_form(spark, sf_dir):
     the per-row expression definition (including empty documents -> 0)."""
     from pyspark.sql import functions as F
 
-    from automem_spark.operators.dedup import simhash64_expr, simhash64_signatures
+    from automem_spark.operators.dedup import simhash64_signatures
     from automem_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 120)
@@ -279,19 +287,10 @@ def test_simhash_signatures_match_expression_form(spark, sf_dir):
 
 
 def test_minhash_banded_sql_matches_columns(spark, sf_dir):
-    # the SQL-text signature+banding (r12 build-tax fix) must be
-    # row-identical to the Column twin it replaced
-    from automem_spark.operators.dedup import (
-        minhash_banded_columns,
-        minhash_banded_sql,
-        shingles_expr,
-    )
-
+    # the two forms of the test-side MinHash banding oracle (SQL text and
+    # Column tree) must be row-identical
     docs = load_table(spark, sf_dir, "documents").limit(200)
-    exploded = docs.select(
-        F.col("doc_id").alias("id"),
-        F.explode(shingles_expr(F.col("text"), 3)).alias("s"),
-    )
+    exploded = exploded_shingles(docs)
     a = spark.sql(minhash_banded_sql(64, 32), exploded=exploded)
     b = minhash_banded_columns(exploded, 64, 32)
     assert a.schema == b.schema
@@ -300,15 +299,11 @@ def test_minhash_banded_sql_matches_columns(spark, sf_dir):
 
 def test_minhash_banded_map_matches_sql(spark, sf_dir):
     """The r14 Arrow signature kernel (minhash_banded_map) must be
-    bit-identical to the SQL-text oracle anchor — (id, band, bucket) row
+    bit-identical to the SQL-text oracle — (id, band, bucket) row
     sets equal on the real corpus PLUS the degenerate shapes the tokenizer
     parity depends on (NULL, empty, punctuation-only, sub-n-gram, unicode,
     duplicate-shingle and >32-byte-shingle docs)."""
-    from automem_spark.operators.dedup import (
-        minhash_banded_map,
-        minhash_banded_sql,
-        shingles_expr,
-    )
+    from automem_spark.operators.dedup import minhash_banded_map
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     extra = spark.createDataFrame(
@@ -327,11 +322,7 @@ def test_minhash_banded_map_matches_sql(spark, sf_dir):
     )
     d = docs.unionByName(extra)
     kernel = minhash_banded_map(d, num_hashes=64, bands=16)
-    exploded = d.select(
-        F.col("doc_id").alias("id"),
-        F.explode(shingles_expr(F.col("text"), 3)).alias("s"),
-    )
-    sql = spark.sql(minhash_banded_sql(64, 16), exploded=exploded)
+    sql = spark.sql(minhash_banded_sql(64, 16), exploded=exploded_shingles(d))
     # names+types identical; nullability differs by construction
     # (mapInPandas output fields are always nullable)
     assert [(f.name, f.dataType) for f in kernel.schema.fields] == [
@@ -345,9 +336,12 @@ def test_minhash_banded_map_matches_sql(spark, sf_dir):
 
 
 def test_minhash_pairs_identical_across_impls(spark, sf_dir):
-    """End-to-end pin: the default kernel path and the SQL oracle path of
-    minhash_lsh_pairs produce the same verified (src, dst, jaccard) set —
-    also at a non-default (num_hashes, bands, n) shape."""
+    """End-to-end pin: minhash_lsh_pairs (Arrow signature kernel) produces
+    the same verified (src, dst, jaccard) set as the test-side SQL-oracle
+    pipeline — SQL banding, the same bucket pairing, exact Jaccard from
+    ngram_jaccard_pairs — also at a non-default (num_hashes, bands, n)
+    shape. Every pair is therefore an exact ngram_jaccard_pairs pair with
+    an equal Jaccard."""
     docs = load_table(spark, sf_dir, "documents")
     for kw in (dict(), dict(n=2, num_hashes=32, bands=8)):
         a = {
@@ -356,9 +350,7 @@ def test_minhash_pairs_identical_across_impls(spark, sf_dir):
         }
         b = {
             (r.src, r.dst, r.jaccard)
-            for r in minhash_lsh_pairs(
-                docs, 0.35, signature_impl="sql", **kw
-            ).collect()
+            for r in minhash_pairs_oracle(docs, 0.35, **kw).collect()
         }
         assert a == b
         assert a  # fixture yields near-dup pairs
@@ -501,14 +493,15 @@ def test_quality_score_single_pass_matches_legacy_two_pass(spark, sf_dir):
 
 
 def test_cosine_pair_helpers_norm_precompute_bit_identical(spark, sf_dir):
-    """r14: the pair helpers bind per-row norms before their N²/N×Q joins
+    """r14: the threshold self-join binds per-row norms before its N² join
     (2 of 3 O(d) aggregate passes per pair were redundant). denom = na*nb
     is the identical product, so sims must be BIT-identical to the inline
-    cosine_expr forms — including the zero-norm guard rows."""
+    cosine_expr form — including the zero-norm guard rows. The top-k
+    kernel (NumPy matmul) must return the inline-cosine reference's ids,
+    with sims within 1e-12, zero-norm rows included."""
     from automem_spark.functions.vector import cosine_expr
     from automem_spark.operators.similarity import (
         cosine_threshold_self_join,
-        cosine_topk_join,
         ensure_parallelism,
     )
     from automem_spark.operators.topk import partial_top_k_per_group
@@ -535,14 +528,14 @@ def test_cosine_pair_helpers_norm_precompute_bit_identical(spark, sf_dir):
     new = cosine_threshold_self_join(emb, 0.25, item_id="vec_id")
     assert new.exceptAll(ref).count() == 0 and ref.exceptAll(new).count() == 0
 
-    # topk join vs inline-cosine reference (zero-norm rows as queries too)
+    # top-k kernel vs inline-cosine reference (zero-norm rows as queries too)
     queries = emb.filter((F.col("vec_id") < 4) | (F.col("vec_id") >= 900001)).select(
         F.col("vec_id").cast("string").alias("query_id"),
         F.col("embedding").alias("query_embedding"),
     )
     joined = (
         ensure_parallelism(emb.select("vec_id", "embedding"))
-        .crossJoin(F.broadcast(queries.select("query_id", "query_embedding")))
+        .crossJoin(F.broadcast(queries))
         .withColumn("sim", cosine_expr(F.col("embedding"), F.col("query_embedding")))
     )
     ref_k = partial_top_k_per_group(
@@ -551,8 +544,13 @@ def test_cosine_pair_helpers_norm_precompute_bit_identical(spark, sf_dir):
         [F.desc("sim"), F.asc("vec_id")],
         5,
     )
-    new_k = cosine_topk_join(emb, queries, 5, item_id="vec_id")
-    assert new_k.exceptAll(ref_k).count() == 0 and ref_k.exceptAll(new_k).count() == 0
+    qmat = [(r.query_id, list(r.query_embedding)) for r in queries.collect()]
+    new_k = cosine_topk_mapinpandas(emb, qmat, 5, item_id="vec_id")
+    ref = sorted((r.query_id, r.vec_id, r.sim) for r in ref_k.collect())
+    new = sorted((r.query_id, r.id, r.sim) for r in new_k.collect())
+    assert len(ref) == 6 * 5
+    assert [r[:2] for r in new] == [r[:2] for r in ref]
+    assert all(abs(a[2] - b[2]) < 1e-12 for a, b in zip(new, ref))
 
 
 def test_shingles_expr_lambda_binding_identical(spark, sf_dir):

@@ -75,23 +75,14 @@ _doc_wide = st.text(alphabet="aB1_ .,!é中\t\n", min_size=0, max_size=48)
           suppress_health_check=list(HealthCheck))
 def test_minhash_banded_map_property_identical_to_sql(spark, texts):
     """The Arrow signature kernel is bit-identical to the SQL-text oracle
-    anchor on adversarial generated corpora — the property pin behind the
-    r14 signature_impl default."""
-    from pyspark.sql import functions as F
+    (tests/dedup_oracle.py) on adversarial generated corpora."""
+    from dedup_oracle import exploded_shingles, minhash_banded_sql
 
-    from automem_spark.operators.dedup import (
-        minhash_banded_map,
-        minhash_banded_sql,
-        shingles_expr,
-    )
+    from automem_spark.operators.dedup import minhash_banded_map
 
     df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
     kernel = minhash_banded_map(df, num_hashes=16, bands=4)
-    exploded = df.select(
-        F.col("doc_id").alias("id"),
-        F.explode(shingles_expr(F.col("text"), 3)).alias("s"),
-    )
-    sql = spark.sql(minhash_banded_sql(16, 4), exploded=exploded)
+    sql = spark.sql(minhash_banded_sql(16, 4), exploded=exploded_shingles(df))
     assert sorted(map(tuple, kernel.collect())) == sorted(map(tuple, sql.collect()))
 
 

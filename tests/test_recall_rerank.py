@@ -109,7 +109,7 @@ def test_recall_many_hybrid_equals_n_single_recalls(spark, sf_dir):
                 entry.MULTI_HYBRID_QUERIES,
                 entry.MULTI_HYBRID_LIMIT,
                 query_vectors=vecs,
-                meta_fields={f: F.col(f) for f in entry._META_FIELDS},
+                meta_fields=entry._META_FIELDS,
                 now=entry.NOW,
                 w=w,
             ).collect()

@@ -1,31 +1,14 @@
-"""Vector-path tests: LSH vs exact, placeholder-embedding recall end-to-end
-(the BASELINE.md quality anchor: deterministic embeddings => reproducible
-rankings verifiable against a pure-Python reimplementation)."""
+"""Vector-path tests: placeholder-embedding recall end-to-end (the
+BASELINE.md quality anchor: deterministic embeddings => reproducible
+rankings verifiable against a pure-Python reimplementation) and the IVF
+approximate top-k against the exact kernel."""
 
 import numpy as np
 from pyspark.sql import functions as F
 
 from automem_spark.functions.vector import placeholder_embedding, placeholder_embedding_udf
 from automem_spark.operators.recall import RecallRequest, recall
-from automem_spark.operators.similarity import (
-    cosine_threshold_self_join,
-    lsh_threshold_self_join,
-)
-from automem_spark.sources.tables import load_table, memories_view
-
-
-def test_lsh_subset_of_exact_with_decent_recall(spark, sf_dir):
-    emb = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 200)
-    exact = {(r.src, r.dst) for r in cosine_threshold_self_join(emb, 0.3, item_id="vec_id").collect()}
-    lsh = {
-        (r.src, r.dst)
-        for r in lsh_threshold_self_join(
-            emb, 0.3, item_id="vec_id", bucket_length=1.0, num_hash_tables=6
-        ).collect()
-    }
-    assert lsh <= exact
-    if exact:
-        assert len(lsh) / len(exact) >= 0.6  # tunable recall, no false positives
+from automem_spark.sources.tables import memories_view
 
 
 def test_placeholder_vector_recall_end_to_end(spark, sf_dir):
@@ -72,7 +55,7 @@ def test_placeholder_vector_recall_end_to_end(spark, sf_dir):
 def test_ivf_topk_finds_query_vector_and_overlaps_exact(spark, sf_dir):
     from pyspark.sql import functions as F
 
-    from automem_spark.operators.similarity import cosine_topk_join, ivf_topk
+    from automem_spark.operators.similarity import cosine_topk_mapinpandas, ivf_topk
     from automem_spark.sources.tables import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -83,9 +66,8 @@ def test_ivf_topk_finds_query_vector_and_overlaps_exact(spark, sf_dir):
     assert approx[0].id == 7
     assert abs(approx[0].sim - 1.0) < 1e-9
 
-    queries = spark.createDataFrame([("q", qv)], "query_id string, query_embedding array<double>")
-    exact = cosine_topk_join(emb, queries, 10, item_id="vec_id").collect()
-    overlap = {r.id for r in approx} & {r.vec_id for r in exact}
+    exact = cosine_topk_mapinpandas(emb, [("q", qv)], 10, item_id="vec_id").collect()
+    overlap = {r.id for r in approx} & {r.id for r in exact}
     # nprobe=2 of 8 cells: partial recall is expected, vacuous results are not
     assert len(overlap) >= 3
 
@@ -102,7 +84,7 @@ def test_ivf_kmeans_recall_on_clustered_corpus(spark):
     from pyspark.sql import functions as F
 
     from automem_spark.operators.similarity import (
-        cosine_topk_join,
+        cosine_topk_mapinpandas,
         ivf_topk,
         kmeans_centroids,
     )
@@ -121,10 +103,10 @@ def test_ivf_kmeans_recall_on_clustered_corpus(spark):
     recalls = []
     for qid in (3, 100, 777):
         qv = rows[qid][1]
-        queries = spark.createDataFrame(
-            [("q", qv)], "query_id string, query_embedding array<double>"
-        )
-        exact = {r.vec_id for r in cosine_topk_join(emb, queries, 10, item_id="vec_id").collect()}
+        exact = {
+            r.id
+            for r in cosine_topk_mapinpandas(emb, [("q", qv)], 10, item_id="vec_id").collect()
+        }
         approx = {r.id for r in ivf_topk(emb, qv, 10, nprobe=2, centroids=cents).collect()}
         recalls.append(len(exact & approx) / 10)
     assert min(recalls) >= 0.9, recalls
