@@ -1485,19 +1485,6 @@ def q_startup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scan("lang_en", "lang:en").unionByName(scan("src1", "source:src1"))
 
 
-def q_vector_topk_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """R1 top-k with the kernel's own output column (`id`): NumPy matmul
-    per partition via mapInPandas + partial top-k — the same kernel and
-    rows as vector_topk."""
-    emb = _t(spark, sf_dir, "embeddings")
-    qvec = [
-        (("q0"), [float(x) for x in r.embedding])
-        for r in emb.filter(F.col("vec_id") == 0).collect()
-    ]
-    out = cosine_topk_mapinpandas(emb, qvec, 10, item_id="vec_id", item_vec="embedding")
-    return out.select("id", F.round("sim", 5).alias("sim"))
-
-
 from automem_spark.operators.metadata_search import (
     metadata_channel,
     metadata_score_sql,
@@ -2758,7 +2745,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "forget_classify": q_forget_classify,
         "semantic_decontaminate": q_semantic_decontaminate,
         "vector_topk": q_vector_topk,
-        "vector_topk_scale": q_vector_topk_scale,
         "vector_pairs": q_vector_pairs,
         "user_sessions": q_user_sessions,
         "preceded_by_events": q_preceded_by_events,
@@ -5306,15 +5292,6 @@ def oracle_sql() -> dict[str, str]:
             UNION ALL
             SELECT 'src1', count(*), round(max(importance), 6), max(importance >= 0.9)
             FROM ({_POOL}) WHERE list_contains([lower(t) for t in tags], 'source:src1')
-        """,
-        "vector_topk_scale": f"""
-            WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0)
-            SELECT id, round(sim, 5) AS sim FROM (
-                SELECT e.vec_id AS id, {_COS.format(a='e.embedding', b='q.qv')} AS sim
-                FROM embeddings e, q
-            )
-            ORDER BY sim DESC, id ASC
-            LIMIT 10
         """,
         "scope_fallback": _scope_fallback_oracle(),
         "priority_injection": _priority_injection_oracle(),

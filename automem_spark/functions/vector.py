@@ -15,6 +15,7 @@ uniform floats. Deterministic => vector rankings reproducible across engines.
 from __future__ import annotations
 
 import hashlib
+import math
 import random
 from collections.abc import Iterator
 
@@ -43,6 +44,26 @@ def cosine_expr(a: Column, b: Column) -> Column:
     (consolidation.py:104-118)."""
     denom = norm_expr(a) * norm_expr(b)
     return F.when(denom == 0.0, F.lit(0.0)).otherwise(dot_expr(a, b) / denom)
+
+
+def dot_sql(a: str, b: str) -> str:
+    """`dot_expr` as Spark-SQL text over two ARRAY expressions: the same
+    element products summed in the same order, so the result is the same
+    double."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
+        " CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
+    )
+
+
+def vector_literal_sql(vec: list[float]) -> str:
+    """A driver-side vector as a Spark-SQL ARRAY<DOUBLE> literal; each
+    element parses back to exactly the same double (shortest round-trip
+    repr with the `D` suffix)."""
+    return "array(" + ", ".join(
+        f"{x!r}D" if math.isfinite(x) else f"CAST('{x}' AS DOUBLE)"
+        for x in map(float, vec)
+    ) + ")"
 
 
 def placeholder_embedding(content: str, dim: int = 64) -> list[float]:

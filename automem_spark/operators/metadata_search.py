@@ -112,6 +112,25 @@ def metadata_score_expr_fast(field_names: list[str], query_text: str) -> Column:
     )
 
 
+def metadata_match_sql(
+    fields: list[str], query_text: str, metadata_json_col: str = "metadata"
+) -> str | None:
+    """The R5 channel's per-row score as Spark-SQL text: the JSON-string
+    prefilter (the first 12 ordered value terms, :191-199) gates the precise
+    scorer, and rows it rejects score 0. None when the query has no value
+    terms, so the channel matches nothing. `fields` are column names."""
+    terms = query_value_tokens(query_text)[:METADATA_PREFILTER_MAX_TERMS]
+    if not terms:
+        return None
+    meta_l = f"lower(coalesce(`{metadata_json_col}`, ''))"
+    prefilter = " OR ".join(
+        f"contains({meta_l}, '{assert_sql_literal_safe(t, 'query value token')}')"
+        for t in terms
+    )
+    score = metadata_score_sql_spark({f: f"`{f}`" for f in fields}, query_text)
+    return f"CASE WHEN {prefilter} THEN {score} ELSE CAST(0.0 AS DOUBLE) END"
+
+
 def metadata_channel(
     pool: DataFrame,
     query_text: str,
@@ -120,21 +139,16 @@ def metadata_channel(
     *,
     metadata_json_col: str = "metadata",
 ) -> DataFrame:
-    """R5 channel: JSON-string prefilter (first 12 ordered value terms,
-    :191-199) then precise scoring, slots = min(limit, 10) (:2015-2040).
+    """R5 channel: JSON-string prefilter then precise scoring
+    (`metadata_match_sql`), slots = min(limit, 10) (:2015-2040).
     `fields` are the names of `pool`'s scalar metadata columns."""
-    terms = query_value_tokens(query_text)[:METADATA_PREFILTER_MAX_TERMS]
-    if not terms:
+    match = metadata_match_sql(fields, query_text, metadata_json_col)
+    if match is None:
         return pool.limit(0).withColumn("match_score", F.lit(0.0)).withColumn(
             "match_type", F.lit("metadata")
         )
-    meta_l = F.lower(F.coalesce(F.col(metadata_json_col), F.lit("")))
-    prefilter = meta_l.contains(terms[0])
-    for t in terms[1:]:
-        prefilter = prefilter | meta_l.contains(t)
     scored = (
-        pool.filter(prefilter)
-        .withColumn("match_score", metadata_score_expr_fast(fields, query_text))
+        pool.withColumn("match_score", F.expr(match))
         .filter(F.col("match_score") > 0)
         .withColumn("match_type", F.lit("metadata"))
     )

@@ -5,18 +5,23 @@ Reference lifecycle (automem/api/recall.py:1703-2611, SURVEY.md §3.1):
 multi-channel candidate retrieval (vector ANN + keyword CONTAINS + metadata
 sidecar + tag-only) → hybrid linear re-score → filters → dedup → sort → top-k.
 
-Spark design: each channel is a DataFrame producing
-(id, match_type, match_score, <memory cols>); channels union, dedup keeps the
+Spark design: `recall()` scans `base_filter`'s pool once. One projection
+scores every row for every channel (cosine, keyword CASE sum, metadata
+scorer) and drops the embedding; each channel keeps its top rows per input
+partition, the survivors are ranked globally, and each memory a channel
+returns becomes one (match_type, match_score) row. Dedup keeps the
 highest-priority channel per id (vector > keyword > metadata > tag — the
-reference's seen-id ordering, recall.py:1956-2062), then one score expression
-re-ranks. Everything is JVM column expressions; the only Python is per-query
-keyword extraction on the driver.
+reference's seen-id ordering, recall.py:1956-2062), then one score
+expression re-ranks. The program is Spark-SQL text parsed by a few
+`selectExpr`s; the only Python is per-query keyword extraction on the
+driver.
 
-Scale notes: nothing is cached — each channel is its own subtree over
-`base_filter`'s pool, so a recall with a query vector evaluates the vector
-channel three times (as a channel, in the keyword channel's anti-join, and
-in the remaining-slot count). Filters are pushed to the parquet scan, and
-the final sort is a top-k (TakeOrderedAndProject), never a full sort.
+Scale notes: nothing is cached. A request reads its pool once, shuffles it
+once by input partition and ranks at most parts × (k' + limit + 10) rows
+globally; filters are pushed to the parquet scan, and the final sort is a
+top-k (TakeOrderedAndProject), never a full sort. The channel-union form
+(one subtree per channel) is kept as a test oracle in
+tests/recall_oracle.py.
 """
 
 from __future__ import annotations
@@ -160,51 +165,6 @@ def trending_channel(pool: DataFrame, limit: int) -> DataFrame:
         .limit(limit)
         .withColumn("match_score", F.col("importance").cast("double"))
         .withColumn("match_type", F.lit("trending"))
-    )
-
-
-def vector_channel(
-    pool: DataFrame,
-    query_vector: list[float] | None,
-    limit: int,
-    embedding_col: str = "embedding",
-) -> DataFrame:
-    """Vector top-K (R1) with over-fetch for re-ranking (R2): fetch
-    max(limit, min(limit × 4, 200)) — the outer max matches the reference's
-    clamp (recall.py:1967-1971) so requests with limit > 200 still fetch at
-    least `limit` candidates. Cosine in double precision.
-
-    Local/correctness path: exact brute-force cosine + top-k. The scale path
-    for many queries at once is operators/similarity.py (mapInPandas matmul
-    or LSH)."""
-    if query_vector is None:
-        return None  # type: ignore[return-value]
-    k = max(limit, min(limit * RECALL_VECTOR_OVERFETCH, RECALL_OVERFETCH_CAP))
-    qv = F.array(*[F.lit(float(x)) for x in query_vector])
-    # r14: bind the two norms as DataFrame-level aliases. Inline,
-    # cosine_expr's denominator appears in both the zero-guard and the
-    # divisor, and Catalyst cannot CSE across HOF lambdas — FIVE O(d)
-    # aggregate passes per pool row (2×norm(emb), 2×norm(qv), dot). Bound
-    # norms are multi-referenced non-cheap aliases, so CollapseProject
-    # keeps them: 3 passes per row. denom = ne*nq is the identical
-    # product in the identical order — match_score is bit-identical
-    # (recall-family oracle rows + golden rankings pin it).
-    from automem_spark.functions.vector import dot_expr, norm_expr
-
-    denom = F.col("_vec_ne") * F.col("_vec_nq")
-    return (
-        pool.withColumn("_vec_ne", norm_expr(F.col(embedding_col)))
-        .withColumn("_vec_nq", norm_expr(qv))
-        .withColumn(
-            "match_score",
-            F.when(denom == 0.0, F.lit(0.0)).otherwise(
-                dot_expr(F.col(embedding_col), qv) / denom
-            ),
-        )
-        .drop("_vec_ne", "_vec_nq")
-        .orderBy(F.desc("match_score"), F.asc("id"))
-        .limit(k)
-        .withColumn("match_type", F.lit("vector"))
     )
 
 
@@ -738,6 +698,30 @@ def recall_full(
     return out.select("id", "match_type", "position", "final_score")
 
 
+@dataclass(frozen=True)
+class _Channel:
+    """One channel of the single-pass recall, as SQL text over the scored
+    pool: `score` is its match_score, `order` the ranking, `eligible` the
+    rows it may return, `keep` how many rows per input partition can still
+    reach its cut, and `slots` the cut itself when it is not `keep`
+    (evaluated over the survivors)."""
+
+    match_type: str
+    score: str
+    order: str
+    eligible: str
+    keep: int
+    slots: str = ""
+
+    def ranking(self, partition: str = "") -> str:
+        # eligible rows first, so a rank <= slots is a rank among them
+        first = "" if self.eligible == "TRUE" else f"({self.eligible}) DESC, "
+        return f"row_number() OVER ({partition}ORDER BY {first}{self.order})"
+
+
+_BY_IMPORTANCE = "`importance` DESC, `timestamp` DESC, `id` ASC"
+
+
 def recall(
     memories: DataFrame,
     req: RecallRequest,
@@ -747,64 +731,132 @@ def recall(
 ) -> DataFrame:
     """End-to-end single-query recall (SURVEY.md §3.1 steps 3b-3g + 4).
 
-    Returns (id, match_type, match_score, final_score, <memory cols>) sorted
-    by the deterministic tiebreak W1: final_score DESC, match_score DESC,
-    importance DESC, timestamp DESC, id ASC; LIMIT req.limit.
+    Returns (<memory cols except embedding>, match_score, match_type,
+    final_score) sorted by the deterministic tiebreak W1: final_score DESC,
+    match_score DESC, importance DESC, timestamp DESC, id ASC (or the
+    request's time sort); LIMIT req.limit. One row per memory: a memory
+    several channels return keeps its highest-priority channel.
+
+    Channels (recall.py:1939-2040):
+    - vector: cosine top-k', k' = max(limit, min(4·limit, 200));
+    - keyword: the R3 CASE sum, top `limit` rows with a score > 0; with an
+      empty, '*' or keyword-less query the trending order instead (an
+      empty or '*' query also skips the metadata channel). With a query
+      vector it fills only max(0, limit - |vector rows|) slots, from rows
+      whose id is not a vector id;
+    - metadata: the R5 sidecar scorer, top min(limit, 10) rows > 0.
     """
+    from automem_spark.functions.vector import dot_sql, vector_literal_sql
+    from automem_spark.operators.metadata_search import metadata_match_sql
+
     req = replace(req, sort=effective_sort(req, has_vector=query_vector is not None))
     pool = base_filter(memories, req)
-    tokens = extract_keywords(req.query.strip().lower())
-
-    channels: list[DataFrame] = []
-    vec: DataFrame | None = None
-    if query_vector is not None and "embedding" in memories.columns:
-        vec = vector_channel(pool, query_vector, req.limit)
-        channels.append(vec)
+    limit = req.limit
     normalized = req.query.strip().lower()
-    if normalized and normalized != "*":
-        meta_field_names = [
-            f for f in ("source", "repo", "project", "tool", "provider", "model")
-            if f in pool.columns
+    tokens = extract_keywords(normalized)
+    phrase = normalized if len(normalized) >= 3 else ""
+    searched = normalized not in ("", "*")
+    has_vector = query_vector is not None and "embedding" in pool.columns
+    k = max(limit, min(limit * RECALL_VECTOR_OVERFETCH, RECALL_OVERFETCH_CAP))
+    out_cols = [f"`{c}`" for c in pool.columns if c != "embedding"]
+
+    binds = ["spark_partition_id() AS _pid"]
+    scores: dict[str, str] = {}  # per-row channel scores, one scan
+    channels: list[_Channel] = []
+    if has_vector:
+        # Bound norms: Catalyst does not CSE across HOF lambdas, so inline
+        # norms would cost two more O(d) passes per row. denom = ne * nq is
+        # the product the oracle twin computes, so match_score is
+        # bit-identical (tests/test_recall_oracle.py, golden rankings).
+        qv = vector_literal_sql(query_vector)
+        binds += [
+            f"sqrt({dot_sql('`embedding`', '`embedding`')}) AS _vec_ne",
+            f"sqrt({dot_sql(qv, qv)}) AS _vec_nq",
         ]
-        if vec is None:
-            channels.append(keyword_channel(pool, req.query, req.limit))
-        else:
-            # Keyword channel fills only the slots vector results left open:
-            # remaining = max(0, limit - |vector results|), with vector ids
-            # excluded before the cut (recall.py:1999-2013). With the 4×
-            # overfetch the vector channel usually fills the limit and the
-            # keyword channel contributes nothing — matching the reference.
-            kw_pool = pool.join(vec.select("id"), "id", "left_anti")
-            kw = keyword_channel(kw_pool, req.query, req.limit)
-            n_vec = vec.select(F.count("*").alias("_n_vec"))
-            w_kw = Window.orderBy(
-                F.desc("match_score"), F.desc("importance"),
-                F.desc("timestamp"), F.asc("id"),
-            )
-            kw = (
-                kw.withColumn("_kw_rank", F.row_number().over(w_kw))
-                .crossJoin(F.broadcast(n_vec))
-                .filter(
-                    F.col("_kw_rank")
-                    <= F.greatest(F.lit(req.limit) - F.col("_n_vec"), F.lit(0))
-                )
-                .drop("_kw_rank", "_n_vec")
-            )
-            channels.append(kw)
-        # metadata sidecar (R5) when the corpus carries whitelisted scalar
-        # metadata fields (recall.py:2015-2040)
-        if meta_field_names and "metadata" in pool.columns:
-            from automem_spark.operators.metadata_search import metadata_channel
-
-            channels.append(
-                metadata_channel(pool, req.query, req.limit, meta_field_names)
-            )
+        scores["_s_vector"] = (
+            "CASE WHEN _vec_ne * _vec_nq = CAST(0.0 AS DOUBLE) THEN CAST(0.0 AS DOUBLE)"
+            f" ELSE {dot_sql('`embedding`', qv)} / (_vec_ne * _vec_nq) END"
+        )
+        channels.append(
+            _Channel("vector", "_s_vector", "_s_vector DESC, `id` ASC", "TRUE", k)
+        )
+    if searched and (tokens or phrase):
+        max_raw = 3 * len(tokens) + (3 if phrase else 0)
+        scores["_s_keyword"] = _keyword_raw_score_sql(tokens, phrase)
+        text = _Channel(
+            "keyword",
+            f"least(CAST(1.0 AS DOUBLE), _s_keyword / {float(max_raw)!r}D)",
+            "_s_keyword DESC, " + _BY_IMPORTANCE,
+            "_s_keyword > 0",
+            limit,
+        )
     else:
-        channels.append(trending_channel(pool, req.limit))
+        text = _Channel(
+            "trending", "CAST(`importance` AS DOUBLE)", _BY_IMPORTANCE, "TRUE", limit
+        )
+    if searched and has_vector:
+        # The vector channel returns min(k', |pool|) >= min(limit, |pool|)
+        # rows, so keyword slots open only when the whole pool is under
+        # `limit` rows. Then every pool row is a vector row, and only rows
+        # with a NULL id pass the reference's id anti-join. The survivors
+        # hold every vector row, so least(k', |survivors|) = |vector rows|.
+        text = replace(
+            text,
+            eligible=f"`id` IS NULL AND {text.eligible}",
+            slots=f"greatest({limit} - least({k}, count(1) OVER ()), 0)",
+        )
+    channels.append(text)
+    meta_fields = [
+        f for f in ("source", "repo", "project", "tool", "provider", "model")
+        if f in pool.columns
+    ]
+    meta = (
+        metadata_match_sql(meta_fields, req.query)
+        if searched and meta_fields and "metadata" in pool.columns
+        else None
+    )
+    if meta is not None:
+        scores["_s_metadata"] = meta
+        channels.append(
+            _Channel(
+                "metadata", "_s_metadata", "_s_metadata DESC, " + _BY_IMPORTANCE,
+                "_s_metadata > 0", min(limit, 10),
+            )
+        )
 
-    candidates = channels[0]
-    for ch in channels[1:]:
-        candidates = candidates.unionByName(ch)
+    # 1. One scan scores every channel; the embedding is dropped here.
+    scanned = pool.selectExpr("*", *binds).selectExpr(
+        *out_cols, "_pid", *(f"{sql} AS {name}" for name, sql in scores.items())
+    )
+    # 2. Keep each channel's top rows per input partition (the _pid/_prerank
+    # two-stage top-k of operators/topk.py), then rank the survivors.
+    survivors = scanned.selectExpr(
+        "*",
+        *(
+            f"{c.ranking('PARTITION BY _pid ')} AS _prerank_{c.match_type}"
+            for c in channels
+        ),
+    ).filter(
+        " OR ".join(
+            f"(({c.eligible}) AND _prerank_{c.match_type} <= {c.keep})" for c in channels
+        )
+    )
+    ranked = survivors.selectExpr(
+        *out_cols,
+        *scores,
+        *(f"{c.ranking()} AS _rank_{c.match_type}" for c in channels),
+        *(f"{c.slots or c.keep} AS _slots_{c.match_type}" for c in channels),
+    )
+    # 3. One row per (memory, channel that returns it).
+    matches = ", ".join(
+        f"CASE WHEN ({c.eligible}) AND _rank_{c.match_type} <= _slots_{c.match_type}"
+        f" THEN named_struct('match_score', {c.score}, 'match_type', '{c.match_type}')"
+        " END"
+        for c in channels
+    )
+    candidates = ranked.selectExpr(
+        *out_cols, f"inline(filter(array({matches}), m -> m IS NOT NULL))"
+    )
 
     scored = candidates.withColumn(
         "final_score",
@@ -826,4 +878,4 @@ def recall(
             F.desc("timestamp"),
             F.asc("id"),
         ]
-    return deduped.orderBy(*ordering).limit(req.limit)
+    return deduped.orderBy(*ordering).limit(limit)

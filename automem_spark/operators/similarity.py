@@ -423,7 +423,7 @@ def ivf_topk(
 
     qv = F.array(*[F.lit(float(x)) for x in query_vector])
     # same binding for the probe-side score: 3 O(d) passes per probed row
-    # instead of 5 (see vector_channel in recall.py)
+    # instead of 5 (recall()'s cosine binds its norms the same way)
     _sdenom = F.col("_ivf_sni") * F.col("_ivf_snq")
     # r15: probe pruning as a BROADCAST SEMI JOIN against the (tiny)
     # probed-cell set instead of `filter(cell.isin(probed))`. The isin

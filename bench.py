@@ -87,7 +87,6 @@ HEADLINE = [
     "dedup_exact",
     "minhash_lsh",
     "vector_topk",
-    "vector_topk_scale",
     "vector_pairs",
     "text_stats",
     "classify",

@@ -26,7 +26,7 @@ AUDIT = [
     "hybrid_recall", "multi_recall", "decay_relevance", "forget_classify",
     "relations_fetch", "supersession_heads", "connected_components",
     "dedup_exact", "minhash_lsh", "simhash_pairs", "vector_topk",
-    "vector_topk_scale", "vector_pairs", "text_stats", "classify",
+    "vector_pairs", "text_stats", "classify",
     "ann_ivf", "ann_ivf_indexed", "identity_synthesis", "event_log",
     "result_hydration", "tag_prefix_scan", "time_browse", "dedup_pipeline",
     "training_selection", "corpus_profile", "gated_recall",

@@ -1,5 +1,5 @@
-"""Build-time job budgets for the graph walks, `recall` and
-`graph_neighbors`.
+"""Job budgets for the graph walks, `recall` and `graph_neighbors`: the
+jobs launched while each builds, and for `recall` also while it runs.
 
 Building a DataFrame should not run Spark jobs; a job launched while the
 plan is built blocks the request before its action starts. Each check
@@ -27,7 +27,8 @@ _groups = itertools.count()
 
 
 def build_jobs(spark, build) -> int:
-    """Number of Spark jobs launched while `build()` runs."""
+    """Number of Spark jobs launched while `build()` runs (a plan build, or
+    an action)."""
     sc = spark.sparkContext
     group = f"job-budget-{next(_groups)}"
     sc.setJobGroup(group, "build")
@@ -78,6 +79,19 @@ def test_recall_build_job_budget(spark, sf_dir):
         RecallRequest(query="spark window merge", limit=5, tags=["lang:en"]),
     ):
         assert build_jobs(spark, lambda: recall(corpus, req, query_vector=qv)) == 0
+
+
+def test_recall_exec_job_budget(spark, recall_corpus):
+    """Executing a hybrid recall over a file-backed corpus takes at most 3
+    jobs: the two shuffles (per-partition pre-rank, global rank) and the
+    result."""
+    corpus, qv = recall_corpus
+    for req in (
+        RecallRequest(query="spark window merge", limit=5),
+        RecallRequest(query="spark window merge", limit=5, tags=["lang:en"]),
+    ):
+        out = recall(corpus, req, query_vector=qv)
+        assert build_jobs(spark, out.collect) <= 3
 
 
 def test_graph_neighbors_build_job_budget(spark, sf_dir, graph):

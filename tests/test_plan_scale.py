@@ -27,7 +27,7 @@ import pytest
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from automem_spark.operators.recall import RecallRequest, recall_full
+from automem_spark.operators.recall import RecallRequest, recall, recall_full
 from automem_spark.operators.state import current_state_filter
 from automem_spark.plans.checkpoint import DISABLE_ENV
 from automem_spark.sources.graph_fixture import edges_view
@@ -184,6 +184,29 @@ def test_recall_full_no_corpus_window(spark, sf_dir):
     req = RecallRequest(query="database performance tuning", limit=20)
     out = recall_full(mem, edges, req, priority_tags=["lang:en"])
     assert_no_corpus_window(out)
+
+
+RECALL_REQUESTS = (
+    RecallRequest(query="spark window merge", limit=5),
+    RecallRequest(query="spark window merge", limit=5, tags=["lang:en"]),
+)
+
+
+def test_recall_no_corpus_window(recall_corpus):
+    """recall() ranks the corpus only per input partition (`_pid`); its
+    global windows and the dedup window see the pre-ranked survivors."""
+    corpus, qv = recall_corpus
+    for req in RECALL_REQUESTS:
+        assert_no_corpus_window(recall(corpus, req, query_vector=qv))
+
+
+def test_recall_scans_corpus_once(recall_corpus):
+    """One hybrid recall (vector, keyword and metadata channels) reads its
+    corpus once: one FileScan in the physical plan."""
+    corpus, qv = recall_corpus
+    for req in RECALL_REQUESTS:
+        plan = _physical_plan(recall(corpus, req, query_vector=qv))
+        assert plan.count("FileScan") == 1, plan
 
 
 def test_enrich_pipeline_plan_has_no_unbounded_join_shapes(spark):

