@@ -24,6 +24,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType
 
+from automem_spark.plans.literal import double_sql
+
 
 def dot_expr(a: Column, b: Column) -> Column:
     """Σ a[i]*b[i] in double precision (matches DuckDB list_dot_product on
@@ -58,12 +60,38 @@ def dot_sql(a: str, b: str) -> str:
 
 def vector_literal_sql(vec: list[float]) -> str:
     """A driver-side vector as a Spark-SQL ARRAY<DOUBLE> literal; each
-    element parses back to exactly the same double (shortest round-trip
-    repr with the `D` suffix)."""
-    return "array(" + ", ".join(
-        f"{x!r}D" if math.isfinite(x) else f"CAST('{x}' AS DOUBLE)"
-        for x in map(float, vec)
-    ) + ")"
+    element parses back to exactly the same double."""
+    return "array(" + ", ".join(map(double_sql, vec)) + ")"
+
+
+def query_norm(vec: list[float]) -> float:
+    """sqrt(Σ q_i·q_i) on the driver, summed in element order: the same
+    double `norm_expr` and `dot_sql` compute per row over the literal."""
+    acc = 0.0
+    for x in map(float, vec):
+        acc += x * x
+    return math.sqrt(acc)
+
+
+def cosine_to_query_sql(vec: str, query_vector: list[float]) -> tuple[str, str]:
+    """Cosine of the ARRAY expression `vec` against a driver-side query
+    vector, as Spark-SQL text: (bind, score).
+
+    `bind` names the row norm `_vec_ne`; select it one projection below
+    `score`, which reads it twice (Catalyst does not CSE across
+    higher-order-function lambdas, so an inline norm costs another O(d)
+    pass per row). The query norm is computed once on the driver and bound
+    as a literal (`query_norm`): denom = ne * nq is the same product of the
+    same doubles as with a per-row query norm, so the score is unchanged;
+    0.0 when either norm is 0."""
+    qv = vector_literal_sql(query_vector)
+    nq = double_sql(query_norm(query_vector))
+    bind = f"sqrt({dot_sql(vec, vec)}) AS _vec_ne"
+    score = (
+        f"CASE WHEN _vec_ne * {nq} = CAST(0.0 AS DOUBLE) THEN CAST(0.0 AS DOUBLE)"
+        f" ELSE {dot_sql(vec, qv)} / (_vec_ne * {nq}) END"
+    )
+    return bind, score
 
 
 def placeholder_embedding(content: str, dim: int = 64) -> list[float]:

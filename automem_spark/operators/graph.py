@@ -18,19 +18,28 @@ chase and a min-label union-find. The BFS keeps its frontier on the driver
 as a set of ids and runs one literal-id filter on `edges` per depth. None of
 them launches a job while the plan is built, except the BFS's one collect
 per depth.
+
+The request-path operators (J2 expansion, J6 BFS, J7 neighbours) work on
+sets bounded by the request: each such set goes to the driver once and
+comes back as a literal frame (`plans/literal.py`). They run no
+checkpoint and no Python worker.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, IntegerType, LongType, StructField, StructType
 
 from automem_spark.functions.detmath import us_mean
 from automem_spark.operators.topk import top_k_per_group
 from automem_spark.plans.checkpoint import maybe_checkpoint
+from automem_spark.plans.literal import literal_frame, spark_key, spark_sorted
 
-# State-suppressing relations (recall.py:82).
+# State-suppressing relations (recall.py:82), followed at most this far
+# (recall.py:452-593).
 SUPERSESSION_TYPES = ("INVALIDATED_BY", "EVOLVED_INTO")
+SUPERSESSION_MAX_HOPS = 5
 
 # Legacy DISCOVERED aliases (config.py:244-248, :420-469).
 LEGACY_DISCOVERED = {
@@ -124,67 +133,106 @@ def expand_relations(
     """J2: 1-hop undirected expansion from seed results (recall.py:1498-1700).
 
     relation_score = strength + 0.25 * seed_score; targets must pass the
-    excluded-type/archived filters and the strength/importance thresholds;
-    per-seed cap then a global cap, both by relation_score."""
-    s = seeds.select(
-        F.col(seed_id).alias("seed_id"), F.col(seed_score).alias("seed_score")
+    excluded-type/archived filters and the strength/importance thresholds
+    and must not be seeds themselves; per-seed cap then a global cap, both
+    by relation_score.
+
+    The seed set is bounded, so it goes to the driver once. The edges
+    incident to a seed come back through one literal-id filter (it pushes
+    into the `edges` scan), the targets' importance, archived and type
+    through one literal-id read of `memories`, and the caps run on the
+    driver. Building the result runs those collects; it is a literal frame.
+
+    Output: (seed_id, dst, rel_type, strength, relation_score)."""
+    spark = edges.sparkSession
+    schema = StructType(
+        [
+            StructField("seed_id", seeds.schema[seed_id].dataType),
+            StructField("dst", edges.schema["dst"].dataType),
+            StructField("rel_type", edges.schema["rel_type"].dataType),
+            StructField("strength", DoubleType()),
+            StructField("relation_score", DoubleType()),
+        ]
     )
-    und = edges.select(
-        "src", "dst", "rel_type", edge_strength_expr().alias("strength")
-    ).unionByName(
-        edges.select(
-            F.col("dst").alias("src"),
-            F.col("src").alias("dst"),
-            "rel_type",
-            edge_strength_expr().alias("strength"),
+    s_rows = seeds.select(seed_id, seed_score).collect()
+    seed_ids = {s for s, _ in s_rows if s is not None}
+    if not seed_ids:
+        return literal_frame(spark, [], schema)
+    ids = sorted(seed_ids)
+    hits = (
+        edges.filter(F.col("src").isin(ids) | F.col("dst").isin(ids))
+        .select("src", "dst", "rel_type", edge_strength_expr().alias("strength"))
+        .collect()
+    )
+    floor = spark_key(min_strength)
+    hops: dict = {}  # seed id -> [(target, rel_type, strength)]
+    for src, dst, rel_type, strength in hits:
+        if spark_key(strength) < floor:
+            continue
+        for a, b in ((src, dst), (dst, src)):
+            if a in seed_ids and b is not None and b not in seed_ids:
+                hops.setdefault(a, []).append((b, rel_type, strength))
+    targets: dict = {}
+    if hops:
+        dst_ids = sorted({b for h in hops.values() for b, _, _ in h})
+        for t in (
+            memories.filter(F.col("id").isin(dst_ids))
+            .select("id", "importance", "archived", "type")
+            .collect()
+        ):
+            targets.setdefault(t.id, []).append(t)
+
+    def eligible(t) -> bool:
+        return (
+            not t.archived
+            and t.type is not None
+            and t.type != "MetaPattern"
+            and t.importance is not None
+            and spark_key(t.importance) >= spark_key(min_importance)
         )
-    )
-    hops = s.join(und, s.seed_id == und.src).filter(F.col("strength") >= min_strength)
-    # The hop-target set is bounded (edges incident to <= |seeds| nodes), the
-    # memories side is the corpus: semi-bound the corpus scan by the target
-    # ids and broadcast only the bounded projection back — never the corpus
-    # itself (local-mode AQE would happily broadcast the whole id column).
-    dst_ids = hops.select("dst").distinct()
-    tgt = memories.select(
-        F.col("id").alias("dst"),
-        F.col("importance").alias("_imp"),
-        F.col("archived").alias("_arch"),
-        F.col("type").alias("_type"),
-    ).join(F.broadcast(dst_ids), "dst", "left_semi")
-    hops = (
-        hops.join(F.broadcast(tgt), "dst")
-        .filter(F.coalesce(F.col("_arch"), F.lit(False)) == False)  # noqa: E712
-        .filter(F.col("_type") != "MetaPattern")
-        .filter(F.col("_imp") >= min_importance)
-        .filter(F.col("dst") != F.col("seed_id"))
-    )
-    # exclude targets that are themselves seeds (reference dedups vs seen ids)
-    hops = hops.join(
-        s.select(F.col("seed_id").alias("dst")), "dst", "left_anti"
-    )
-    scored = hops.withColumn(
-        "relation_score", F.col("strength") + 0.25 * F.col("seed_score")
-    )
-    per = top_k_per_group(
-        scored.select("seed_id", "dst", "rel_type", "strength", "relation_score"),
-        ["seed_id"],
-        [F.desc("relation_score"), F.asc("dst"), F.asc("rel_type")],
-        per_seed,
-    )
-    return (
-        per.orderBy(F.desc("relation_score"), F.asc("seed_id"), F.asc("dst"), F.asc("rel_type"))
-        .limit(total)
-    )
+
+    scored = [
+        (s, b, rel_type, strength, None if score is None else strength + 0.25 * score)
+        for s, score in s_rows
+        for b, rel_type, strength in hops.get(s, ())
+        for t in targets.get(b, ())
+        if eligible(t)
+    ]
+    per: dict = {}
+    for row in spark_sorted(scored, [(4, True), (1, False), (2, False)]):
+        per.setdefault(row[0], []).append(row)
+    capped = [row for rows in per.values() for row in rows[:per_seed]]
+    out = spark_sorted(capped, [(4, True), (0, False), (1, False), (2, False)])
+    return literal_frame(spark, out[:total], schema)
+
+
+def chase_heads(step: dict, starts, max_hops: int) -> list[tuple]:
+    """Follow cur -> nxt pointers from each start up to max_hops, stopping
+    at a missing (or NaN) pointer or a node the walk already visited.
+    Returns (start, head, hops) for every start that moved. The one walk
+    rule of J4: `resolve_supersession` runs it in one task, the
+    current-state filter on the driver."""
+    out = []
+    for start in starts:
+        head, hops, seen = start, 0, {start}
+        for _ in range(max_hops):
+            nxt_id = step.get(head)
+            if nxt_id is None or nxt_id != nxt_id or nxt_id in seen:
+                break
+            head = nxt_id
+            hops += 1
+            seen.add(nxt_id)
+        if hops > 0:
+            out.append((start, head, hops))
+    return out
 
 
 def _supersession_local_walk(nxt: DataFrame, max_hops: int) -> DataFrame:
-    """Follow cur -> nxt pointers up to max_hops in one task, with a
-    visited-set cycle guard. coalesce(1) narrows the frame behind the
-    newest-edge window's shuffle, so the scan and the window's map side stay
-    parallel; the iterator is drained fully before walking so the map sees
-    every edge."""
-    from pyspark.sql.types import IntegerType, StructField, StructType
-
+    """Follow cur -> nxt pointers up to max_hops in one task
+    (`chase_heads`). coalesce(1) narrows the frame behind the newest-edge
+    window's shuffle, so the scan and the window's map side stay parallel;
+    the iterator is drained fully before walking so the map sees every
+    edge."""
     ctype = nxt.schema["cur"].dataType
     out_schema = StructType(
         [
@@ -200,21 +248,9 @@ def _supersession_local_walk(nxt: DataFrame, max_hops: int) -> DataFrame:
         step: dict = {}
         for pdf in batches:
             step.update(zip(pdf["cur"], pdf["nxt"]))
-        starts, heads, hops_out = [], [], []
-        for start in step:
-            head, hops, seen = start, 0, {start}
-            for _ in range(max_hops):
-                nxt_id = step.get(head)
-                if nxt_id is None or pd.isna(nxt_id) or nxt_id in seen:
-                    break
-                head = nxt_id
-                hops += 1
-                seen.add(nxt_id)
-            if hops > 0:
-                starts.append(start)
-                heads.append(head)
-                hops_out.append(hops)
-        yield pd.DataFrame({"start": starts, "head": heads, "hops": hops_out})
+        yield pd.DataFrame(
+            chase_heads(step, step, max_hops), columns=["start", "head", "hops"]
+        )
 
     return nxt.coalesce(1).mapInPandas(walk, schema=out_schema)
 
@@ -222,7 +258,7 @@ def _supersession_local_walk(nxt: DataFrame, max_hops: int) -> DataFrame:
 def resolve_supersession(
     edges: DataFrame,
     *,
-    max_hops: int = 5,
+    max_hops: int = SUPERSESSION_MAX_HOPS,
     node_state: DataFrame | None = None,
 ) -> DataFrame:
     """J4: walk INVALIDATED_BY/EVOLVED_INTO chains to their head, ≤max_hops,
@@ -277,7 +313,8 @@ def related_memories_bfs(
     The frontier is bounded by the walk, not the corpus, so it stays on the
     driver as a set of ids: each depth is one literal-id filter on `edges`
     (it pushes into the scan) and one collect, and the walk stops as soon
-    as the frontier is empty.
+    as the frontier is empty. The reached ids come back as a literal frame
+    and read their importance through a literal-id filter on `memories`.
 
     Output: (id, depth, importance rounded)."""
     e = edges
@@ -302,10 +339,15 @@ def related_memories_bfs(
         }
         depth_of.update(dict.fromkeys(nxt, depth))
         frontier = nxt
-    out = edges.sparkSession.createDataFrame(
-        [(i, d) for i, d in depth_of.items() if d > 0], "id bigint, depth int"
+    reached = [(i, d) for i, d in depth_of.items() if d > 0]
+    out = literal_frame(
+        edges.sparkSession,
+        reached,
+        StructType([StructField("id", LongType()), StructField("depth", IntegerType())]),
     )
-    mem = memories.select("id", "importance", F.col("timestamp").cast("double").alias("_ts"))
+    mem = memories.filter(F.col("id").isin([i for i, _ in reached])).select(
+        "id", "importance", F.col("timestamp").cast("double").alias("_ts")
+    )
     return (
         out.join(mem, "id")
         .orderBy(F.desc("importance"), F.desc("_ts"), F.asc("id"))
@@ -321,8 +363,6 @@ def _cc_local_labels(und: DataFrame) -> DataFrame:
     that partition before emitting, so the union-find sees the whole edge
     set. Returns (id, component) for ENDPOINT nodes only — the caller fills
     in the singletons with a broadcast left join."""
-    from pyspark.sql.types import StructField, StructType
-
     atype = und.schema["a"].dataType
     out_schema = StructType(
         [StructField("id", atype), StructField("component", atype)]
@@ -509,6 +549,12 @@ def graph_neighbors(
     node already seen via the graph — the reference filters seen hits
     without refilling, so fewer than `semantic_limit` rows can remain.
 
+    Both working sets are bounded, so they go through the driver: the BFS
+    (`related_memories_bfs`), then the centre vector and its top-(k+1),
+    scored by recall()'s SQL cosine (`cosine_to_query_sql`, sim DESC, id
+    ASC) and returned as a literal frame. Building the plan runs one
+    collect per BFS depth plus two; no Python worker starts.
+
     Output: (id, source 'graph'|'semantic', depth [-1 for semantic],
     sim [-1.0 for graph], importance). Sentinels instead of NULLs keep the
     cross-engine hash well-defined.
@@ -516,7 +562,6 @@ def graph_neighbors(
     bfs = related_memories_bfs(
         [center_id], edges, memories, max_depth=depth, limit=graph_limit
     )
-    bfs = maybe_checkpoint(bfs)
     graph_part = bfs.select(
         "id",
         F.lit("graph").alias("source"),
@@ -526,19 +571,29 @@ def graph_neighbors(
     )
     if embeddings is None:
         return graph_part
-    center = embeddings.filter(F.col("vec_id") == center_id).collect()
+    center = embeddings.filter(F.col("vec_id") == center_id).select("embedding").collect()
     if not center:
         return graph_part
-    from automem_spark.operators.similarity import cosine_topk_mapinpandas
+    from automem_spark.functions.vector import cosine_to_query_sql
 
-    qv = [float(x) for x in center[0]["embedding"]]
-    top = cosine_topk_mapinpandas(
-        embeddings, [("c", qv)], semantic_limit + 1, item_id="vec_id"
+    bind, score = cosine_to_query_sql("`embedding`", [float(x) for x in center[0][0]])
+    top = (
+        embeddings.filter(F.col("embedding").isNotNull())
+        .selectExpr("vec_id AS id", "`embedding`", bind)
+        .selectExpr("id", f"{score} AS sim")
+        .orderBy(F.desc("sim"), F.asc("id"))
+        .limit(semantic_limit + 1)
+        .collect()
     )
-    sem = (
-        top.filter(F.col("id") != center_id)
-        .join(bfs.select("id"), "id", "left_anti")
-        .join(memories.select("id", "importance"), "id")
+    hits = [(i, sim) for i, sim in top if i is not None and i != center_id]
+    sem = literal_frame(
+        edges.sparkSession,
+        hits,
+        StructType([StructField("id", LongType()), StructField("sim", DoubleType())]),
+    )
+    sem = sem.join(bfs.select("id"), "id", "left_anti").join(
+        memories.filter(F.col("id").isin([i for i, _ in hits])).select("id", "importance"),
+        "id",
     )
     sem_part = sem.select(
         "id",

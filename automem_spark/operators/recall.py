@@ -40,6 +40,7 @@ from automem_spark.functions.scoring import (
 from automem_spark.functions.tags import exclude_tags_expr, tag_filter_expr
 from automem_spark.functions.text import extract_keywords, fingerprint_fold_sql_spark
 from automem_spark.plans.checkpoint import maybe_checkpoint
+from automem_spark.plans.literal import collect_rows, literal_frame, sql_str
 
 # Channel precedence for cross-channel dedup (vector beats keyword beats
 # metadata beats tag/trending — recall.py:1956-2062).
@@ -109,11 +110,6 @@ def base_filter(
     return out
 
 
-def _sql_str(s: str) -> str:
-    """Spark-SQL single-quoted string literal (backslash escaping)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
 def _keyword_raw_score_sql(keywords: list[str], phrase: str) -> str:
     """The R3 per-keyword CASE sum as SQL text — one F.expr instead of
     ~0.25s of py4j tree calls per query (emitted from the shared scorer
@@ -122,7 +118,7 @@ def _keyword_raw_score_sql(keywords: list[str], phrase: str) -> str:
     tests/test_hybrid_score_fast.py."""
     from automem_spark.functions.scorespec import keyword_raw_score_sql_spark
 
-    return keyword_raw_score_sql_spark(keywords, phrase, _sql_str)
+    return keyword_raw_score_sql_spark(keywords, phrase, sql_str)
 
 
 def keyword_channel(pool: DataFrame, query: str, limit: int) -> DataFrame:
@@ -596,12 +592,13 @@ def recall_full(
     ids, recall.py:2239-2297).
 
     Work shape: the corpus-wide work is the channel scan (filters pushed to
-    the parquet scan) and the current-state filter's supersession walk over
-    `edges`. Everything else operates on bounded sets (seeds ≤ limit,
-    expansions ≤ 25 each), so every join below broadcasts and the windows
-    are O(limit). Building the plan runs eager jobs: the seed and candidate
-    checkpoints, and the state filter's `mem_info` checkpoint, which runs
-    the supersession walk.
+    the parquet scan) and the entity expansion's tag scan. Everything else
+    operates on bounded sets (seeds ≤ limit, expansions ≤ 25 each), and
+    each such set goes to the driver once: the seeds and the candidates are
+    collected and come back as literal frames (`plans/literal.py`); the
+    relation expansion and the current-state filter read `edges` and
+    `memories` through literal-id filters pushed into the scan. Building
+    the plan runs those collects; no checkpoint and no Python worker.
 
     Output: (id, match_type, position, final_score).
     """
@@ -610,6 +607,7 @@ def recall_full(
     from automem_spark.operators.graph import expand_relations
     from automem_spark.operators.state import current_state_filter
 
+    spark = memories.sparkSession
     pool = base_filter(memories, req)
     tokens = extract_keywords(req.query.strip().lower())
 
@@ -629,9 +627,12 @@ def recall_full(
     )
     # R7 (id-unique already; fingerprint guard). The seed set is bounded and
     # fans out to three consumers (relation expansion, entity expansion, the
-    # SO3 union) — materialize once instead of recomputing the channel scan
+    # SO3 union) — collect it once instead of recomputing the channel scan
     # per branch.
-    seeds = maybe_checkpoint(dedup_results(seeds))
+    seeds = dedup_results(seeds).select(
+        "id", "match_type", "match_score", "final_score", "tags"
+    )
+    seeds = literal_frame(spark, collect_rows(seeds), seeds.schema)
 
     # 5: J2 relation expansion + J3 entity expansion, appended for unseen ids
     rel = expand_relations(seeds, edges, memories).select(
@@ -656,13 +657,13 @@ def recall_full(
         F.desc("_prio"), F.desc("final_score"), F.asc("match_type")
     )
     # bounded (≤ limit + 2×25); fans out to the state filter (candidate ids,
-    # annotation, seen-set) and the match_score rehydration — materialize once
+    # annotation, seen-set) and the match_score rehydration — collect once
     cand = (
         cand.withColumn("_rn", F.row_number().over(w_id))
         .filter(F.col("_rn") == 1)
         .drop("_rn", "_prio")
     )
-    cand = maybe_checkpoint(cand)
+    cand = literal_frame(spark, collect_rows(cand), cand.schema)
 
     # 6: J5 bitemporal filter + supersession replacement injection.
     # keep_order_cols carries importance/timestamp out of the filter's own
@@ -746,7 +747,7 @@ def recall(
       whose id is not a vector id;
     - metadata: the R5 sidecar scorer, top min(limit, 10) rows > 0.
     """
-    from automem_spark.functions.vector import dot_sql, vector_literal_sql
+    from automem_spark.functions.vector import cosine_to_query_sql
     from automem_spark.operators.metadata_search import metadata_match_sql
 
     req = replace(req, sort=effective_sort(req, has_vector=query_vector is not None))
@@ -764,19 +765,10 @@ def recall(
     scores: dict[str, str] = {}  # per-row channel scores, one scan
     channels: list[_Channel] = []
     if has_vector:
-        # Bound norms: Catalyst does not CSE across HOF lambdas, so inline
-        # norms would cost two more O(d) passes per row. denom = ne * nq is
-        # the product the oracle twin computes, so match_score is
-        # bit-identical (tests/test_recall_oracle.py, golden rankings).
-        qv = vector_literal_sql(query_vector)
-        binds += [
-            f"sqrt({dot_sql('`embedding`', '`embedding`')}) AS _vec_ne",
-            f"sqrt({dot_sql(qv, qv)}) AS _vec_nq",
-        ]
-        scores["_s_vector"] = (
-            "CASE WHEN _vec_ne * _vec_nq = CAST(0.0 AS DOUBLE) THEN CAST(0.0 AS DOUBLE)"
-            f" ELSE {dot_sql('`embedding`', qv)} / (_vec_ne * _vec_nq) END"
-        )
+        # The oracle twin computes the same ne * nq product, so match_score
+        # is bit-identical (tests/test_recall_oracle.py, golden rankings).
+        bind, scores["_s_vector"] = cosine_to_query_sql("`embedding`", query_vector)
+        binds.append(bind)
         channels.append(
             _Channel("vector", "_s_vector", "_s_vector DESC, `id` ASC", "TRUE", k)
         )

@@ -29,7 +29,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from automem_spark.functions.vector import cosine_expr, dot_expr, norm_expr
+from automem_spark.functions.vector import cosine_expr, dot_expr, norm_expr, query_norm
 from automem_spark.operators.topk import top_k_per_group
 from automem_spark.plans.parallelism import ensure_parallelism
 
@@ -422,8 +422,9 @@ def ivf_topk(
         assigned = assign_cells(items, centroids, item_vec=item_vec)
 
     qv = F.array(*[F.lit(float(x)) for x in query_vector])
-    # same binding for the probe-side score: 3 O(d) passes per probed row
-    # instead of 5 (recall()'s cosine binds its norms the same way)
+    # same binding for the probe-side score: 2 O(d) passes per probed row
+    # instead of 5 (recall()'s cosine binds its norms the same way); the
+    # query norm is one driver-side double (functions/vector.py::query_norm)
     _sdenom = F.col("_ivf_sni") * F.col("_ivf_snq")
     # r15: probe pruning as a BROADCAST SEMI JOIN against the (tiny)
     # probed-cell set instead of `filter(cell.isin(probed))`. The isin
@@ -449,7 +450,7 @@ def ivf_topk(
     return (
         assigned.join(F.broadcast(probed_df), "cell", "left_semi")
         .withColumn("_ivf_sni", norm_expr(F.col(item_vec)))
-        .withColumn("_ivf_snq", norm_expr(qv))
+        .withColumn("_ivf_snq", F.lit(query_norm(query_vector)))
         .withColumn(
             "sim",
             F.when(_sdenom == 0.0, F.lit(0.0)).otherwise(

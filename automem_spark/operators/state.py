@@ -9,18 +9,19 @@ Reference counterparts (SURVEY.md §2.2 F8, §2.4 J4/J5):
   deduped against ids already in the result set, and required to be active)
 
 Scale notes: `results` is a bounded candidate set (<= limit + expansions),
-so every corpus touch below is keyed off it — the candidate id set is
-broadcast INTO the memories scan (left-semi), and only the resulting
-bounded projections are broadcast back into the result-side joins. No
-corpus-derived frame is ever broadcast, and no shuffle lands on the corpus.
+so it goes to the driver once and every corpus touch below is a
+literal-id filter keyed off it, pushed into the `memories` or `edges`
+scan: no corpus-derived frame is broadcast or shuffled, and the result
+comes back as a literal frame (`plans/literal.py`).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
-from automem_spark.plans.checkpoint import maybe_checkpoint
+from automem_spark.plans.literal import collect_rows, literal_frame, spark_sorted
 
 
 def state_reason_expr(
@@ -60,105 +61,111 @@ def current_state_filter(
     replacement — it is not marked superseded (it may still be suppressed by
     its own state reason, with nothing injected).
 
+    The walk starts from the result ids on the driver. Each hop is one
+    literal-id filter on the supersession `edges`, collected, and one
+    literal-id read of the targets' state (the first read also carries the
+    candidates' state, importance and timestamp); it stops on an empty
+    frontier or after `SUPERSESSION_MAX_HOPS` hops and follows
+    `graph.chase_heads`. Annotation, suppression, injection and ranking run
+    on the driver in Spark's order.
+
     results: (id, match_type, match_score, final_score, ...)
     memories: must carry (id, archived, t_valid, t_invalid, importance, timestamp)
     edges: graph edges with (src, dst, rel_type, updated_at_epoch)
 
-    Output: (id, match_type, state_replaces, final_score, position).
+    Output: (id, match_type, state_replaces, final_score, position), a
+    literal frame in position order.
     """
-    from automem_spark.operators.graph import resolve_supersession
+    from automem_spark.operators.graph import (
+        SUPERSESSION_MAX_HOPS,
+        SUPERSESSION_TYPES,
+        chase_heads,
+    )
 
-    now_col = F.lit(now).cast("timestamp")
-    # Corpus-wide (id, state_reason) stays un-broadcast: it feeds the
-    # supersession walk's per-hop activity gate, which must see every node
-    # on a chain (heads can lie outside the candidate set).
+    spark = results.sparkSession
+    res = results.select("id", "match_type", score_col)
+    rows = collect_rows(res)
     state = memories.select(
         "id",
         state_reason_expr(
-            F.col("archived"), F.col("t_valid"), F.col("t_invalid"), now_col
+            F.col("archived"), F.col("t_valid"), F.col("t_invalid"),
+            F.lit(now).cast("timestamp"),
         ).alias("state_reason"),
+        F.col("importance").alias("_imp"),
+        F.col("timestamp").alias("_ts"),
     )
+    info: dict = {}  # id -> [(id, state_reason, _imp, _ts)], one per memory row
+    read_ids: set = set()
 
-    cand_ids = results.select("id").distinct()
+    def read(ids: set) -> None:
+        ids = ids - read_ids
+        if ids:
+            read_ids.update(ids)
+            for m in collect_rows(state.filter(F.col("id").isin(sorted(ids)))):
+                info.setdefault(m[0], []).append(m)
 
-    # per-hop activity gating means every returned head is active by
-    # construction — no post-hoc head filter needed
-    heads = resolve_supersession(edges, node_state=state)
-    heads_cand = (
-        heads.select(F.col("start").alias("id"), F.col("head"))
-        .join(F.broadcast(cand_ids), "id", "left_semi")
-    )
-
-    # every memory row we will ever need: the candidates themselves plus
-    # their (bounded) replacement heads — semi-join pushes the broadcast
-    # candidate set into the corpus scan, so only bounded rows come back
-    needed_ids = cand_ids.unionByName(
-        heads_cand.select(F.col("head").alias("id"))
-    ).distinct()
-    mem_info = (
-        memories.select(
-            "id",
-            state_reason_expr(
-                F.col("archived"), F.col("t_valid"), F.col("t_invalid"), now_col
-            ).alias("state_reason"),
-            F.col("importance").alias("_imp"),
-            F.col("timestamp").alias("_ts"),
+    cand = {r[0] for r in rows if r[0] is not None}
+    sup = edges.filter(F.col("rel_type").isin(*SUPERSESSION_TYPES))
+    step: dict = {}
+    frontier, walked = cand, set()
+    for _ in range(SUPERSESSION_MAX_HOPS):
+        if not frontier:
+            break
+        hits = (
+            sup.filter(F.col("src").isin(sorted(frontier)))
+            .select("src", "dst", "updated_at_epoch")
+            .collect()
         )
-        .join(F.broadcast(needed_ids), "id", "left_semi")
-    )
-    mem_info = maybe_checkpoint(mem_info)
+        walked |= frontier
+        read(cand | {d for _, d, _ in hits if d is not None})
+        # newest edge per source whose target is active
+        for src, dst, _ in spark_sorted(hits, [(2, False), (1, False)]):
+            if any(m[1] is None for m in info.get(dst, ())):
+                step[src] = dst
+        frontier = {step[s] for s in frontier if s in step} - walked
+    heads = {s: head for s, head, _ in chase_heads(step, cand, SUPERSESSION_MAX_HOPS)}
 
-    annotated = (
-        results.join(F.broadcast(mem_info.select("id", "state_reason")), "id", "left")
-        .join(F.broadcast(heads_cand), "id", "left")
-        .withColumn(
-            "_reason",
-            F.coalesce(
-                F.col("state_reason"),
-                F.when(F.col("head").isNotNull(), F.lit("superseded")),
-            ),
-        )
-    )
-
-    kept = annotated.filter(F.col("_reason").isNull()).select(
-        "id",
-        "match_type",
-        F.lit(None).cast(annotated.schema["id"].dataType).alias("state_replaces"),
-        F.col(score_col),
-    )
-
-    seen = results.select(F.col("id").alias("head"))
-    injected = (
-        annotated.filter(F.col("_reason").isNotNull() & F.col("head").isNotNull())
-        .join(F.broadcast(seen), "head", "left_anti")
-        .select(
-            F.col("head").alias("id"),
-            F.lit("state_replacement").alias("match_type"),
-            F.col("id").alias("state_replaces"),
-            F.col(score_col),
-        )
-    )
+    seen = {r[0] for r in rows}
+    kept, injected = [], []
+    for rid, match_type, score in rows:
+        head = heads.get(rid)
+        for m in info.get(rid) or [None]:
+            reason = m[1] if m is not None else None
+            if reason is None and head is None:
+                kept.append((rid, match_type, None, score))
+            elif head is not None and head not in seen:
+                injected.append((head, "state_replacement", rid, score))
     # a head may replace several suppressed rows: keep the highest carried
     # score (first-wins in the reference's insertion order = score order)
-    w_head = Window.partitionBy("id").orderBy(F.desc(score_col), F.asc("state_replaces"))
-    injected = (
-        injected.withColumn("_rn", F.row_number().over(w_head))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
+    first: dict = {}
+    for row in spark_sorted(injected, [(3, True), (2, False)]):
+        first.setdefault(row[0], row)
+    ranked = spark_sorted(
+        [
+            (*row, *(m[2:] if m is not None else (None, None)))
+            for row in kept + list(first.values())
+            for m in info.get(row[0]) or [None]
+        ],
+        [(3, True), (4, True), (5, True), (0, False)],
     )
-
-    out = kept.unionByName(injected)
-    w = Window.partitionBy(F.lit(1)).orderBy(
-        F.desc(score_col), F.desc("_imp"), F.desc("_ts"), F.asc("id")
-    )
-    ranked = (
-        out.join(F.broadcast(mem_info.select("id", "_imp", "_ts")), "id", "left")
-        .withColumn("position", F.row_number().over(w))
-    )
+    id_type = res.schema["id"].dataType
+    fields = [
+        res.schema["id"],
+        res.schema["match_type"],
+        StructField("state_replaces", id_type),
+        res.schema[score_col],
+    ]
     if keep_order_cols:
         # callers (recall_full) reuse these for downstream re-ranks instead
         # of re-hydrating from the corpus
-        return ranked.withColumnRenamed("_imp", "importance").withColumnRenamed(
-            "_ts", "timestamp"
-        )
-    return ranked.drop("_imp", "_ts")
+        fields += [
+            StructField("importance", state.schema["_imp"].dataType),
+            StructField("timestamp", state.schema["_ts"].dataType),
+        ]
+    out = [
+        (*row[:4], *(row[4:] if keep_order_cols else ()), pos)
+        for pos, row in enumerate(ranked, 1)
+    ]
+    return literal_frame(
+        spark, out, StructType([*fields, StructField("position", IntegerType())])
+    )

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 
@@ -52,4 +53,18 @@ def get_spark(app_name: str = "automem-spark", shuffle_partitions: int | None = 
         .config("spark.driver.extraJavaOptions", "-Duser.language=en -Duser.country=US")
         .config("spark.executor.extraJavaOptions", "-Duser.language=en -Duser.country=US")
     )
-    return builder.getOrCreate()
+    launches_jvm = SparkContext._jvm is None
+    spark = builder.getOrCreate()
+    if launches_jvm:
+        # The unpartitioned windows are deliberate and bounded: recall()'s
+        # global rank sees ≤ parts × (k' + limit + 10) pre-ranked rows, and
+        # recall_full's re-ranks see ≤ limit + 50 candidates. WindowExec
+        # warns on every one, so only that logger is raised to ERROR, once
+        # per JVM; tests/test_plan_scale.py's assert_no_corpus_window
+        # guards the unbounded case.
+        jvm = spark.sparkContext._jvm
+        jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+            "org.apache.spark.sql.execution.window.WindowExec",
+            jvm.org.apache.logging.log4j.Level.ERROR,
+        )
+    return spark

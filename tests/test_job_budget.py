@@ -1,5 +1,6 @@
-"""Job budgets for the graph walks, `recall` and `graph_neighbors`: the
-jobs launched while each builds, and for `recall` also while it runs.
+"""Job budgets for the graph walks, `recall`, `recall_full` and
+`graph_neighbors`: the jobs launched while each builds, and for the three
+serve requests also while they run.
 
 Building a DataFrame should not run Spark jobs; a job launched while the
 plan is built blocks the request before its action starts. Each check
@@ -18,7 +19,7 @@ from automem_spark.operators.graph import (
     related_memories_bfs,
     resolve_supersession,
 )
-from automem_spark.operators.recall import RecallRequest, recall
+from automem_spark.operators.recall import RecallRequest, recall, recall_full
 from automem_spark.operators.similarity import cosine_threshold_self_join
 from automem_spark.sources.graph_fixture import edges_view
 from automem_spark.sources.tables import load_table, memories_view
@@ -95,9 +96,36 @@ def test_recall_exec_job_budget(spark, recall_corpus):
 
 
 def test_graph_neighbors_build_job_budget(spark, sf_dir, graph):
-    """Building a 1-hop `graph_neighbors` runs 4 jobs on the sf0.001
-    fixture: the BFS frontier collect, the BFS checkpoint (2 jobs) and the
-    centre-vector collect. The similarity kernel adds none."""
+    """Building a 1-hop `graph_neighbors` runs 3 jobs on the sf0.001
+    fixture: the BFS frontier collect, the centre-vector collect and the
+    semantic top-(k+1) collect."""
     edges, mem = graph[0], graph[1]
     emb = load_table(spark, sf_dir, "embeddings")
     assert build_jobs(spark, lambda: graph_neighbors(5, edges, mem, emb)) <= 4
+
+
+def test_graph_neighbors_job_budget(spark, sf_dir, graph):
+    """A 1-hop `graph_neighbors` on the sf0.001 fixture: 3 jobs to build
+    and 5 to run (4 + 5 before its working sets went through the driver
+    as literals: a BFS checkpoint and the Python cosine kernel)."""
+    edges, mem = graph[0], graph[1]
+    emb = load_table(spark, sf_dir, "embeddings")
+    built = []
+    assert build_jobs(spark, lambda: built.append(graph_neighbors(5, edges, mem, emb))) <= 3
+    assert build_jobs(spark, built[0].collect) <= 5
+
+
+def test_recall_full_job_budget(spark, sf_dir, graph):
+    """A `recall_full` on the sf0.001 fixture: 10 jobs to build (the seed
+    and candidate collects, the relation expansion's edge and target reads,
+    the state filter's hop reads) and 3 to run (20 + 13 when the seeds, the
+    candidates and the state filter's corpus hydration were checkpointed and
+    the supersession walk covered all of `edges`)."""
+    edges, mem = graph[0], graph[1]
+    for req in (
+        RecallRequest(query="spark window merge", limit=5),
+        RecallRequest(query="spark window merge", limit=5, tags=["lang:en"]),
+    ):
+        built = []
+        assert build_jobs(spark, lambda: built.append(recall_full(mem, edges, req))) <= 10
+        assert build_jobs(spark, built[0].collect) <= 3

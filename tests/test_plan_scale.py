@@ -17,6 +17,12 @@ Every frame is built with AUTOMEM_SPARK_DISABLE_CHECKPOINT=1: operators
 materialize reused frames via localCheckpoint, which replaces the subtree
 with `Scan ExistingRDD` in the plan and would make these guards vacuous for
 exactly the code paths they exist to pin (ADVICE r3).
+
+The request paths that take bounded sets through the driver (`recall_full`,
+`current_state_filter`, `graph_neighbors`) return literal frames, so the
+plan of their output shows little. Their guards run on every physical plan
+the call executes instead: the `executed_plans` fixture records the plan
+of each `DataFrame.collect`.
 """
 
 from __future__ import annotations
@@ -38,6 +44,23 @@ from automem_spark.sources.tables import memories_view
 def _no_checkpoint(monkeypatch):
     """Keep full lineage visible to the plan guards (see module docstring)."""
     monkeypatch.setenv(DISABLE_ENV, "1")
+
+
+@pytest.fixture
+def executed_plans(spark, monkeypatch):
+    """The physical plan of every DataFrame collected while the test runs,
+    taken after the action (AQE's final and initial plans)."""
+    plans: list[str] = []
+    frame = type(spark.range(0))  # the session's concrete DataFrame class
+    collect = frame.collect
+
+    def recording(self):
+        rows = collect(self)
+        plans.append(_physical_plan(self))
+        return rows
+
+    monkeypatch.setattr(frame, "collect", recording)
+    return plans
 
 
 def _physical_plan(df: DataFrame) -> str:
@@ -67,10 +90,10 @@ def _broadcast_subtrees(plan: str) -> list[str]:
     return out
 
 
-def assert_no_corpus_broadcast(df: DataFrame) -> None:
-    plan = _physical_plan(df)
+def _bounded_broadcasts(plan: str) -> int:
+    """Check that no broadcast in `plan` carries a raw corpus scan; returns
+    the number of broadcasts."""
     subtrees = _broadcast_subtrees(plan)
-    assert subtrees, "expected at least one broadcast in the plan"
     for sub in subtrees:
         if "Scan parquet" in sub or "FileScan" in sub:
             # a corpus scan may sit under a broadcast only when something
@@ -79,17 +102,35 @@ def assert_no_corpus_broadcast(df: DataFrame) -> None:
                 "BroadcastExchange over a raw corpus parquet scan "
                 "(no LeftSemi/Limit bound):\n" + sub
             )
+    return len(subtrees)
 
 
-def test_recall_full_no_corpus_broadcast(spark, sf_dir):
+def assert_no_corpus_broadcast(df: DataFrame) -> None:
+    assert _bounded_broadcasts(_physical_plan(df)), (
+        "expected at least one broadcast in the plan"
+    )
+
+
+def _corpus_plans(plans: list[str]) -> list[str]:
+    """The recorded plans, after checking that some of them read a corpus
+    file (so the guards below are not vacuous)."""
+    assert any("FileScan" in p for p in plans), "no executed plan reads a corpus file"
+    return plans
+
+
+def test_recall_full_no_corpus_broadcast(spark, sf_dir, executed_plans):
     mem = memories_view(spark, sf_dir)
     edges = edges_view(spark, sf_dir)
-    req = RecallRequest(query="database performance tuning", limit=20)
-    out = recall_full(mem, edges, req, priority_tags=["lang:en"])
-    assert_no_corpus_broadcast(out)
+    # a query with keyword seeds on the fixture, so every stage executes
+    req = RecallRequest(query="spark window merge", limit=20)
+    recall_full(mem, edges, req, priority_tags=["lang:en"]).collect()
+    broadcasts = sum(map(_bounded_broadcasts, _corpus_plans(executed_plans)))
+    assert broadcasts, "expected at least one broadcast in the executed plans"
 
 
-def test_current_state_filter_no_corpus_broadcast(spark, sf_dir):
+def test_current_state_filter_no_corpus_broadcast(spark, sf_dir, executed_plans):
+    """The filter reads `memories` and `edges` only through literal-id
+    filters, so none of its executed plans broadcasts anything."""
     mem = memories_view(spark, sf_dir)
     edges = edges_view(spark, sf_dir)
     results = mem.limit(40).select(
@@ -97,8 +138,9 @@ def test_current_state_filter_no_corpus_broadcast(spark, sf_dir):
         F.lit("keyword").alias("match_type"),
         F.lit(0.5).alias("final_score"),
     )
-    out = current_state_filter(results, mem, edges, now="2026-06-01 00:00:00")
-    assert_no_corpus_broadcast(out)
+    current_state_filter(results, mem, edges, now="2026-06-01 00:00:00").collect()
+    plans = _corpus_plans(executed_plans)
+    assert sum(map(_bounded_broadcasts, plans)) == 0, "\n\n".join(plans)
 
 
 def _window_subtrees(plan: str) -> list[str]:
@@ -143,7 +185,10 @@ def assert_no_corpus_window(df: DataFrame) -> None:
     window is one reducer sorting the whole corpus per query at scale.
     Note a broadcast CROSS join (BroadcastNestedLoopJoin) does NOT bound:
     corpus x queries is still corpus-sized per query."""
-    plan = _physical_plan(df)
+    _bounded_windows(_physical_plan(df))
+
+
+def _bounded_windows(plan: str) -> None:
     for sub in _window_subtrees(plan):
         head = sub.splitlines()[0]
         if "_pid" in head:
@@ -178,12 +223,48 @@ def test_multi_recall_hybrid_no_corpus_window(spark, sf_dir):
     assert_no_corpus_broadcast(out)
 
 
-def test_recall_full_no_corpus_window(spark, sf_dir):
+def test_recall_full_no_corpus_window(spark, sf_dir, executed_plans):
     mem = memories_view(spark, sf_dir)
     edges = edges_view(spark, sf_dir)
-    req = RecallRequest(query="database performance tuning", limit=20)
-    out = recall_full(mem, edges, req, priority_tags=["lang:en"])
-    assert_no_corpus_window(out)
+    # a query with keyword seeds on the fixture, so every stage executes
+    req = RecallRequest(query="spark window merge", limit=20)
+    recall_full(mem, edges, req, priority_tags=["lang:en"]).collect()
+    for plan in _corpus_plans(executed_plans):
+        _bounded_windows(plan)
+
+
+# Operators that start a Python worker, and the scan of a Python-built RDD
+# (createDataFrame) or of a localCheckpoint.
+_PYTHON_OPERATORS = ("MapInPandas", "ArrowEvalPython", "BatchEvalPython", "ExistingRDD")
+
+
+def test_serve_requests_run_no_python_worker_or_checkpoint(
+    spark, sf_dir, recall_corpus, executed_plans, monkeypatch
+):
+    """membench serve's three request kinds (hybrid recall, full recall,
+    graph neighbours) execute no Python operator and no checkpoint."""
+    from automem_spark.operators.graph import graph_neighbors
+    from automem_spark.sources.tables import load_table
+
+    monkeypatch.delenv(DISABLE_ENV)
+    checkpoints = []
+    monkeypatch.setattr(
+        type(spark.range(0)),
+        "localCheckpoint",
+        lambda self, *a, **k: checkpoints.append(self),
+    )
+    corpus, qv = recall_corpus
+    mem = memories_view(spark, sf_dir)
+    edges = edges_view(spark, sf_dir)
+    req = RecallRequest(query="spark window merge", limit=5, tags=["lang:en"])
+    recall(corpus, req, query_vector=qv).collect()
+    recall_full(mem, edges, req).collect()
+    emb = load_table(spark, sf_dir, "embeddings")
+    graph_neighbors(5, edges, mem, emb).collect()
+    assert not checkpoints
+    for plan in _corpus_plans(executed_plans):
+        found = [op for op in _PYTHON_OPERATORS if op in plan]
+        assert not found, f"{found}:\n{plan}"
 
 
 RECALL_REQUESTS = (
