@@ -34,7 +34,7 @@ from pyspark.sql.types import DoubleType, IntegerType, LongType, StructField, St
 from automem_spark.functions.detmath import us_mean
 from automem_spark.operators.topk import top_k_per_group
 from automem_spark.plans.checkpoint import maybe_checkpoint
-from automem_spark.plans.literal import literal_frame, spark_key, spark_sorted
+from automem_spark.plans.literal import id_in, literal_frame, spark_key, spark_sorted
 
 # State-suppressing relations (recall.py:82), followed at most this far
 # (recall.py:452-593).
@@ -158,9 +158,8 @@ def expand_relations(
     seed_ids = {s for s, _ in s_rows if s is not None}
     if not seed_ids:
         return literal_frame(spark, [], schema)
-    ids = sorted(seed_ids)
     hits = (
-        edges.filter(F.col("src").isin(ids) | F.col("dst").isin(ids))
+        edges.filter(id_in("src", seed_ids) | id_in("dst", seed_ids))
         .select("src", "dst", "rel_type", edge_strength_expr().alias("strength"))
         .collect()
     )
@@ -174,9 +173,9 @@ def expand_relations(
                 hops.setdefault(a, []).append((b, rel_type, strength))
     targets: dict = {}
     if hops:
-        dst_ids = sorted({b for h in hops.values() for b, _, _ in h})
+        dst_ids = {b for h in hops.values() for b, _, _ in h}
         for t in (
-            memories.filter(F.col("id").isin(dst_ids))
+            memories.filter(id_in("id", dst_ids))
             .select("id", "importance", "archived", "type")
             .collect()
         ):
@@ -256,39 +255,22 @@ def _supersession_local_walk(nxt: DataFrame, max_hops: int) -> DataFrame:
 
 
 def resolve_supersession(
-    edges: DataFrame,
-    *,
-    max_hops: int = SUPERSESSION_MAX_HOPS,
-    node_state: DataFrame | None = None,
+    edges: DataFrame, *, max_hops: int = SUPERSESSION_MAX_HOPS
 ) -> DataFrame:
     """J4: walk INVALIDATED_BY/EVOLVED_INTO chains to their head, ≤max_hops,
-    cycle-safe via a visited-set check (recall.py:452-593).
+    cycle-safe via a visited-set check (recall.py:452-593). The newest edge
+    per source wins unconditionally (the raw chain resolution of the
+    standalone J4 query; the current-state filter's activity-gated walk is
+    `state.current_state_filter`).
 
-    When ``node_state`` (id, state_reason) is given, each hop considers only
-    edges whose TARGET is active (state_reason IS NULL), falling back to the
-    next-newest edge otherwise — mirroring _query_state_replacements
-    (recall.py:452-520): newest-first scan, first ACTIVE replacement wins;
-    none active -> no replacement, so the walk stops at the last active
-    node. Without it the walk is the raw chain resolution (newest edge wins
-    unconditionally) used by the standalone J4 query.
-
-    Returns (start, head, hops) for every node with a (qualifying) outgoing
+    Returns (start, head, hops) for every node with an outgoing
     supersession edge. The corpus-sized work (the newest-edge-per-source
-    window and the optional active-state semi-join) is distributed; the
-    bounded pointer chase over one row per superseded node runs in one task
-    (`_supersession_local_walk`). Building the plan launches no job.
+    window) is distributed; the bounded pointer chase over one row per
+    superseded node runs in one task (`_supersession_local_walk`). Building
+    the plan launches no job.
     """
     sup = edges.filter(F.col("rel_type").isin(*SUPERSESSION_TYPES))
-    if node_state is not None:
-        active_dst = node_state.filter(F.col("state_reason").isNull()).select(
-            F.col("id").alias("dst")
-        )
-        # active_dst is a corpus-sized id projection — a semi join with a
-        # merge hint keeps it off the broadcast path (local-mode AQE happily
-        # broadcasts the whole corpus id column). Both sides shuffle on dst
-        # instead.
-        sup = sup.join(active_dst.hint("merge"), "dst", "left_semi")
-    # newest qualifying edge per source (deterministic tiebreak on dst)
+    # newest edge per source (deterministic tiebreak on dst)
     nxt = top_k_per_group(
         sup.select("src", "dst", "updated_at_epoch"),
         ["src"],
@@ -313,8 +295,9 @@ def related_memories_bfs(
     The frontier is bounded by the walk, not the corpus, so it stays on the
     driver as a set of ids: each depth is one literal-id filter on `edges`
     (it pushes into the scan) and one collect, and the walk stops as soon
-    as the frontier is empty. The reached ids come back as a literal frame
-    and read their importance through a literal-id filter on `memories`.
+    as the frontier is empty. The reached ids read their importance through
+    a literal-id filter on `memories`, and only the top-`limit` rows come
+    back as a literal frame, however many ids the walk reached.
 
     Output: (id, depth, importance rounded)."""
     e = edges
@@ -325,9 +308,8 @@ def related_memories_bfs(
     for depth in range(1, max_depth + 1):
         if not frontier:
             break
-        ids = sorted(frontier)
         hits = (
-            e.filter(F.col("src").isin(ids) | F.col("dst").isin(ids))
+            e.filter(id_in("src", frontier) | id_in("dst", frontier))
             .select("src", "dst")
             .collect()
         )
@@ -339,20 +321,26 @@ def related_memories_bfs(
         }
         depth_of.update(dict.fromkeys(nxt, depth))
         frontier = nxt
-    reached = [(i, d) for i, d in depth_of.items() if d > 0]
-    out = literal_frame(
-        edges.sparkSession,
-        reached,
-        StructType([StructField("id", LongType()), StructField("depth", IntegerType())]),
-    )
-    mem = memories.filter(F.col("id").isin([i for i, _ in reached])).select(
-        "id", "importance", F.col("timestamp").cast("double").alias("_ts")
-    )
-    return (
-        out.join(mem, "id")
-        .orderBy(F.desc("importance"), F.desc("_ts"), F.asc("id"))
+    reached = {i: d for i, d in depth_of.items() if d > 0}
+    top = (
+        memories.filter(id_in("id", reached))
+        .orderBy(
+            F.desc("importance"), F.desc(F.col("timestamp").cast("double")), F.asc("id")
+        )
         .limit(limit)
-        .select("id", "depth", F.round("importance", 6).alias("importance"))
+        .select("id", F.round("importance", 6).alias("importance"))
+        .collect()
+    )
+    return literal_frame(
+        edges.sparkSession,
+        [(i, reached[i], importance) for i, importance in top],
+        StructType(
+            [
+                StructField("id", LongType()),
+                StructField("depth", IntegerType()),
+                StructField("importance", DoubleType()),
+            ]
+        ),
     )
 
 
@@ -553,7 +541,7 @@ def graph_neighbors(
     (`related_memories_bfs`), then the centre vector and its top-(k+1),
     scored by recall()'s SQL cosine (`cosine_to_query_sql`, sim DESC, id
     ASC) and returned as a literal frame. Building the plan runs one
-    collect per BFS depth plus two; no Python worker starts.
+    collect per BFS depth plus three; no Python worker starts.
 
     Output: (id, source 'graph'|'semantic', depth [-1 for semantic],
     sim [-1.0 for graph], importance). Sentinels instead of NULLs keep the
@@ -592,7 +580,7 @@ def graph_neighbors(
         StructType([StructField("id", LongType()), StructField("sim", DoubleType())]),
     )
     sem = sem.join(bfs.select("id"), "id", "left_anti").join(
-        memories.filter(F.col("id").isin([i for i, _ in hits])).select("id", "importance"),
+        memories.filter(id_in("id", [i for i, _ in hits])).select("id", "importance"),
         "id",
     )
     sem_part = sem.select(

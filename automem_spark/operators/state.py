@@ -21,7 +21,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
-from automem_spark.plans.literal import collect_rows, literal_frame, spark_sorted
+from automem_spark.plans.literal import collect_rows, id_in, literal_frame, spark_sorted
 
 
 def state_reason_expr(
@@ -101,7 +101,7 @@ def current_state_filter(
         ids = ids - read_ids
         if ids:
             read_ids.update(ids)
-            for m in collect_rows(state.filter(F.col("id").isin(sorted(ids)))):
+            for m in collect_rows(state.filter(id_in("id", ids))):
                 info.setdefault(m[0], []).append(m)
 
     cand = {r[0] for r in rows if r[0] is not None}
@@ -112,7 +112,7 @@ def current_state_filter(
         if not frontier:
             break
         hits = (
-            sup.filter(F.col("src").isin(sorted(frontier)))
+            sup.filter(id_in("src", frontier))
             .select("src", "dst", "updated_at_epoch")
             .collect()
         )

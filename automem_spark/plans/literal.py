@@ -1,6 +1,6 @@
 """Literal frames: a bounded driver-side row set back in Spark as SQL text.
 
-A request's small working sets (seed rows, expansion candidates, BFS ids,
+A request's small working sets (seed rows, expansion candidates, BFS rows,
 supersession hops) go to the driver once and come back into the plan as
 one `VALUES` table. Spark folds it into a LocalRelation: no RDD, no Python
 worker, and collecting it again launches no job. `literal_frame` replaces
@@ -21,7 +21,7 @@ from __future__ import annotations
 import math
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -40,8 +40,14 @@ from pyspark.sql.types import (
 
 
 def sql_str(s: str) -> str:
-    """Spark-SQL single-quoted string literal (backslash escaping)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    """Spark-SQL single-quoted string literal (backslash escaping). `$` is
+    written as the escape `\\u0024`: the parser substitutes `${...}` in
+    the raw SQL text before it reads the literal."""
+    return (
+        "'"
+        + s.replace("\\", "\\\\").replace("'", "\\'").replace("$", "\\u0024")
+        + "'"
+    )
 
 
 def double_sql(x: float) -> str:
@@ -93,6 +99,16 @@ def literal_frame(spark: SparkSession, rows: Sequence[Sequence], schema: StructT
         for row in values
     )
     return spark.sql(f"SELECT * FROM VALUES {body} AS t({names}){suffix}")
+
+
+def id_in(column: str, ids) -> Column:
+    """`column IN (ids)` for integer ids, parsed from one SQL text. It
+    builds in one JVM call however many ids there are; `Column.isin` makes
+    one call per id (3,000 ids: about 0.1 s against 1.6 s)."""
+    if not ids:
+        return F.lit(False)
+    body = ", ".join(f"{int(i)}L" for i in sorted(ids))
+    return F.expr(f"`{column}` IN ({body})")
 
 
 def collect_rows(df: DataFrame) -> list:

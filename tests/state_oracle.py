@@ -4,10 +4,9 @@ The engine's `automem_spark.operators.state.current_state_filter` takes
 the bounded result set to the driver, walks supersession hop by hop from
 those ids through literal-id filters, and annotates, suppresses, injects
 and ranks on the driver. This module keeps the earlier formulation: the
-activity-gated walk over the whole `edges` table
-(`graph.resolve_supersession` with a node state) and a broadcast-joined
-DataFrame tail, so tests/test_literal_paths.py can pin the engine's rows
-equal to it.
+activity-gated walk over the whole `edges` table (`gated_supersession`)
+and a broadcast-joined DataFrame tail, so tests/test_literal_paths.py can
+pin the engine's rows equal to it.
 
 It is a test oracle only: no engine module imports it.
 """
@@ -17,7 +16,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from automem_spark.operators.graph import resolve_supersession
 from automem_spark.operators.state import state_reason_expr
+
+
+def gated_supersession(edges: DataFrame, node_state: DataFrame) -> DataFrame:
+    """J4 with the activity gate of _query_state_replacements
+    (recall.py:452-520): each hop considers only edges whose TARGET is
+    active in `node_state` (id, state_reason IS NULL), falling back to the
+    next-newest edge otherwise; none active -> no replacement, so the walk
+    stops at the last active node. Returns (start, head, hops)."""
+    active_dst = node_state.filter(F.col("state_reason").isNull()).select(
+        F.col("id").alias("dst")
+    )
+    # active_dst is a corpus-sized id projection — a semi join with a merge
+    # hint keeps it off the broadcast path (local-mode AQE happily
+    # broadcasts the whole corpus id column). Both sides shuffle on dst.
+    return resolve_supersession(edges.join(active_dst.hint("merge"), "dst", "left_semi"))
 
 
 def current_state_filter_oracle(
@@ -48,8 +63,6 @@ def current_state_filter_oracle(
 
     Output: (id, match_type, state_replaces, final_score, position).
     """
-    from automem_spark.operators.graph import resolve_supersession
-
     now_col = F.lit(now).cast("timestamp")
     # Corpus-wide (id, state_reason) stays un-broadcast: it feeds the
     # supersession walk's per-hop activity gate, which must see every node
@@ -65,7 +78,7 @@ def current_state_filter_oracle(
 
     # per-hop activity gating means every returned head is active by
     # construction — no post-hoc head filter needed
-    heads = resolve_supersession(edges, node_state=state)
+    heads = gated_supersession(edges, state)
     heads_cand = (
         heads.select(F.col("start").alias("id"), F.col("head"))
         .join(F.broadcast(cand_ids), "id", "left_semi")

@@ -3,6 +3,7 @@
 from collections import Counter
 
 from pyspark.sql import functions as F
+from state_oracle import gated_supersession
 
 from automem_spark.operators.graph import (
     SUPERSESSION_TYPES,
@@ -98,8 +99,9 @@ def test_supersession_paths_identical(spark, sf_dir):
         tuple(r) for r in edges.select("src", "dst", "rel_type", "updated_at_epoch").collect()
     ]
     active = {r.id for r in state.filter(F.col("state_reason").isNull()).collect()}
-    for ns, act in ((None, None), (state, active)):
-        got = {(r.start, r.head, r.hops) for r in resolve_supersession(edges, node_state=ns).collect()}
+    walks = ((resolve_supersession(edges), None), (gated_supersession(edges, state), active))
+    for walk, act in walks:
+        got = {(r.start, r.head, r.hops) for r in walk.collect()}
         assert got == _reference_supersession(edge_rows, act)
         assert got  # non-degenerate fixture
 

@@ -12,6 +12,7 @@ import itertools
 
 import pytest
 from pyspark.sql import functions as F
+from state_oracle import gated_supersession
 
 from automem_spark.operators.graph import (
     connected_components,
@@ -60,7 +61,7 @@ def graph(spark, sf_dir):
 def test_graph_walk_build_job_budget(spark, graph):
     edges, mem, state, pairs, nodes = graph
     assert build_jobs(spark, lambda: resolve_supersession(edges)) == 0
-    assert build_jobs(spark, lambda: resolve_supersession(edges, node_state=state)) == 0
+    assert build_jobs(spark, lambda: gated_supersession(edges, state)) == 0
     assert build_jobs(spark, lambda: connected_components(pairs, nodes)) == 0
     assert build_jobs(
         spark, lambda: related_memories_bfs([0, 5, 10], edges, mem, max_depth=1)
@@ -96,23 +97,23 @@ def test_recall_exec_job_budget(spark, recall_corpus):
 
 
 def test_graph_neighbors_build_job_budget(spark, sf_dir, graph):
-    """Building a 1-hop `graph_neighbors` runs 3 jobs on the sf0.001
-    fixture: the BFS frontier collect, the centre-vector collect and the
-    semantic top-(k+1) collect."""
+    """Building a 1-hop `graph_neighbors` runs 4 jobs on the sf0.001
+    fixture: the BFS frontier collect, the BFS importance top-k collect,
+    the centre-vector collect and the semantic top-(k+1) collect."""
     edges, mem = graph[0], graph[1]
     emb = load_table(spark, sf_dir, "embeddings")
     assert build_jobs(spark, lambda: graph_neighbors(5, edges, mem, emb)) <= 4
 
 
 def test_graph_neighbors_job_budget(spark, sf_dir, graph):
-    """A 1-hop `graph_neighbors` on the sf0.001 fixture: 3 jobs to build
-    and 5 to run (4 + 5 before its working sets went through the driver
+    """A 1-hop `graph_neighbors` on the sf0.001 fixture: 4 jobs to build
+    and 3 to run (4 + 5 before its working sets went through the driver
     as literals: a BFS checkpoint and the Python cosine kernel)."""
     edges, mem = graph[0], graph[1]
     emb = load_table(spark, sf_dir, "embeddings")
     built = []
-    assert build_jobs(spark, lambda: built.append(graph_neighbors(5, edges, mem, emb))) <= 3
-    assert build_jobs(spark, built[0].collect) <= 5
+    assert build_jobs(spark, lambda: built.append(graph_neighbors(5, edges, mem, emb))) <= 4
+    assert build_jobs(spark, built[0].collect) <= 3
 
 
 def test_recall_full_job_budget(spark, sf_dir, graph):

@@ -1,7 +1,9 @@
 """The request paths that take bounded working sets through the driver.
 
 - `plans/literal.py`: a literal frame gives back exactly the rows and types
-  it was built from, for every type the request paths carry.
+  it was built from, for every type the request paths carry (strings with
+  `${...}` too, which the SQL parser would otherwise substitute), and
+  `id_in` keeps the rows `Column.isin` keeps.
 - `state.current_state_filter` (driver-side supersession walk and tail) is
   pinned `==` to its DataFrame twin `tests/state_oracle.py`.
 - `graph.expand_relations` (driver-side caps) is pinned `==` to its
@@ -26,7 +28,7 @@ from state_oracle import current_state_filter_oracle
 
 from automem_spark.operators.graph import expand_relations
 from automem_spark.operators.state import current_state_filter
-from automem_spark.plans.literal import collect_rows, literal_frame, spark_sorted
+from automem_spark.plans.literal import collect_rows, id_in, literal_frame, spark_sorted
 
 NOW = "2026-06-01 00:00:00"
 NAN = float("nan")
@@ -48,7 +50,10 @@ CARRIED = (
     "id bigint, n int, d double, f float, s string, b boolean, ts timestamp, "
     "tags array<string>"
 )
-STRINGS = ["it's", "back\\slash", "\\u0041", "two\nlines", "naïve 東京 ✓", "", "'\\'"]
+STRINGS = [
+    "it's", "back\\slash", "\\u0041", "two\nlines", "naïve 東京 ✓", "", "'\\'",
+    "${env:HOME}", "${spark.app.name}", "$${system:user.name}",
+]
 
 
 @pytest.fixture
@@ -67,9 +72,10 @@ def test_literal_frame_round_trips_every_carried_type(spark, new_york_tz):
             (i, i - 3, d, 0.1 * i, s, i % 2 == 0, datetime(2026, 3, 8, 1 + i, 30), tags)
             for i, (d, s, tags) in enumerate(
                 zip(
-                    [0.1, -0.0, NAN, math.inf, -math.inf, 1e-300, 2.5e20],
+                    [0.1, -0.0, NAN, math.inf, -math.inf, 1e-300, 2.5e20, 1.0, 2.0, 3.0],
                     STRINGS,
-                    [["a'b"], [], ["x\\y", "\\u0041"], ["ü"], None, ["q"], ["\n"]],
+                    [["a'b"], [], ["x\\y", "\\u0041"], ["ü"], None, ["q"], ["\n"],
+                     ["${env:HOME}"], ["${spark.app.name}", "$"], ["\\${x}"]],
                 )
             )
         ]
@@ -96,6 +102,13 @@ def test_literal_frame_empty_and_refusals(spark):
         literal_frame(spark, [(datetime(2026, 1, 1),)], ts_schema)
     with pytest.raises(TypeError, match="decimal"):
         literal_frame(spark, [(1,)], StructType([StructField("x", DecimalType(10, 2))]))
+
+
+def test_id_in_matches_isin(spark):
+    df = spark.createDataFrame([(i,) for i in (-5, 0, 1, 7, 2**40, None)], "id bigint")
+    for ids in ([], [7], {1, -5, 2**40, 99}, range(3000)):
+        want = df.filter(F.col("id").isin(list(ids))).collect()
+        assert df.filter(id_in("id", ids)).collect() == want
 
 
 def test_spark_sorted_matches_order_by(spark):
